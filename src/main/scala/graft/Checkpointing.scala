@@ -2,11 +2,14 @@ package graft
 
 import org.apache.spark.sql.Dataset
 
+import graft.operators.IndexCache
+
 /** The engine's single lineage-cut seam.
   *
   * Every iterative operator family (PageRank/TrustRank fixed points,
-  * connected-component propagation, index append/compact lifecycles)
-  * must cut lineage between rounds or the logical plan grows O(rounds)
+  * connected-component propagation, k-core peeling, PCA power
+  * iteration, Lloyd's k-means, index append/compact lifecycles) must
+  * cut lineage between rounds or the logical plan grows O(rounds)
   * deep. Through round 10 every cut was `localCheckpoint(true)`:
   * correct and fast, but executor-LOCAL — the checkpoint blocks live
   * only in executor storage, so on a real cluster one executor loss
@@ -24,9 +27,16 @@ import org.apache.spark.sql.Dataset
   * the old eager `localCheckpoint`. Both modes materialize eagerly and
   * truncate lineage to a `LogicalRDD` leaf, so downstream plans — and
   * therefore results — are bit-identical by construction
-  * (CheckpointingSpec pins the four iterative gate queries hash-equal
+  * (CheckpointingSpec pins the iterative gate queries hash-equal
   * across modes, and pins that reliable mode writes exactly one
   * checkpoint RDD directory per cut).
+  *
+  * Iterative loops go through [[fixpoint]], the one loop that cuts
+  * each round's state, frees the superseded state and counts rounds;
+  * an operator supplies only its step (FixpointSpec pins the cut and
+  * release contract). HITS alone keeps a hand-rolled loop: its output
+  * reads the last leaves of BOTH half-steps, and the loop returns one
+  * state.
   *
   * Storage hygiene: [[graft.operators.IndexCache.release]] frees
   * executor BLOCKS behind a cut in either mode; reliable-mode FILES
@@ -61,5 +71,33 @@ object Checkpointing {
       }
       ds.checkpoint(true)
     }
+  }
+
+  /** Iterates `step` from `init` until it returns `None` or has run
+    * `maxSteps` times; returns the last state and the number of steps
+    * that produced one. Each step's output is [[cut]] before the next
+    * step reads it, and the state it supersedes is released once that
+    * cut has materialized its successor. `init` belongs to the caller:
+    * it is never cut (cut it first if every step re-reads it) and never
+    * released, and a loop that stops at once returns it unchanged.
+    * Cuts a step makes of its own intermediates stay in the step. Each
+    * run writes one JSON line to stderr:
+    * `{"fixpoint":"<name>","rounds":<steps>,"ms":<wall ms>}`. */
+  def fixpoint[T](name: String, init: Dataset[T], maxSteps: Int = Int.MaxValue)
+      (step: Dataset[T] => Option[Dataset[T]]): (Dataset[T], Int) = {
+    val t0 = System.nanoTime()
+    @annotation.tailrec
+    def go(state: Dataset[T], rounds: Int): (Dataset[T], Int) =
+      (if (rounds < maxSteps) step(state) else None) match {
+        case None => (state, rounds)
+        case Some(next) =>
+          val leaf = cut(next)
+          if (state ne init) IndexCache.release(state.toDF())
+          go(leaf, rounds + 1)
+      }
+    val (out, rounds) = go(init, 0)
+    val ms = (System.nanoTime() - t0) / 1000000
+    System.err.println(s"""{"fixpoint":"$name","rounds":$rounds,"ms":$ms}""")
+    (out, rounds)
   }
 }

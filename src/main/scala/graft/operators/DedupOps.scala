@@ -1164,13 +1164,13 @@ object DedupOps {
     * one the neighbor-only loop reached: every downstream gate stays
     * hash-identical.
     *
-    * Each round's state is cut through [[graft.Checkpointing]]
-    * (eager; reliable when `spark.graft.checkpointDir` is set), so the
-    * logical plan stays O(1)-deep however many rounds a graph needs —
-    * plain `persist()` caches data but keeps stacking the plan, which
-    * at high-diameter graphs grows O(D) and eventually chokes the
-    * analyzer. A slow graph gets a progress warning every 25 rounds
-    * instead of round 3's hard abort. */
+    * The rounds run in [[graft.Checkpointing.fixpoint]], which cuts
+    * each round's state (eager; reliable when
+    * `spark.graft.checkpointDir` is set), so the logical plan stays
+    * O(1)-deep however many rounds a graph needs — plain `persist()`
+    * caches data but keeps stacking the plan, which at high-diameter
+    * graphs grows O(D) and eventually chokes the analyzer. There is
+    * no round cap; the loop's stderr line reports the round count. */
   private[graft] def propagateMinLabels(bk: DataFrame): DataFrame =
     propagateMinLabelsCounted(bk)._1
 
@@ -1200,7 +1200,7 @@ object DedupOps {
       l.as("a")
         .join(l.as("b"), col("a.comp") === col("b.doc_id"))
         .select(col("a.doc_id").as("doc_id"), col("b.comp").as("comp"))
-    var labels = bk.select(col("doc_id")).distinct()
+    val init = bk.select(col("doc_id")).distinct()
       .withColumn("comp", col("doc_id")).transform(graft.Checkpointing.cut)
     // convergence via the MONOTONE LABEL SUM (round 16): every
     // composed map is non-increasing per doc and the doc set is
@@ -1214,32 +1214,19 @@ object DedupOps {
       .agg(coalesce(sum(col("comp").cast("decimal(38,0)")),
         lit(java.math.BigDecimal.ZERO).cast("decimal(38,0)")).as("s"))
       .head().getDecimal(0)
-    var prevSum = labelSum(labels)
-    var changed = true
-    var checks = 0
-    while (changed) {
-      // eager cut: materializes `next` AND truncates its lineage to a
-      // LogicalRDD leaf before the next round builds on it
-      val next = jump(step(step(labels))).transform(graft.Checkpointing.cut)
-      val nextSum = labelSum(next)
-      changed = nextSum.compareTo(prevSum) != 0
-      prevSum = nextSum
-      // Dataset.unpersist() is a CacheManager no-op on checkpointed
-      // plans — free the superseded checkpoint's blocks directly,
-      // safe because `next` is already materialized and independent
-      IndexCache.release(labels)
-      labels = next
-      checks += 1
-      if (changed && checks % 25 == 0)
-        System.err.println(s"[graft] components: still propagating after " +
-          s"$checks rounds; continuing")
+    // Σcomp of the previous step's input: a step whose input (that
+    // step's output) sums the same stops at the fixpoint
+    var prevSum: java.math.BigDecimal = null
+    val (labels, rounds) = graft.Checkpointing.fixpoint("components", init) { l =>
+      val s = labelSum(l)
+      if (prevSum != null && s.compareTo(prevSum) == 0) None
+      else {
+        prevSum = s
+        Some(jump(step(step(l))))
+      }
     }
-    // round-count telemetry (round-15 verdict): convergence depth is
-    // the scale driver of every CC consumer — make it observable in
-    // any run's stderr, not only through the spec seam
-    System.err.println(s"[graft] components: converged after $checks " +
-      "checked rounds")
-    (labels, checks)
+    IndexCache.release(init)
+    (labels, rounds)
   }
 
   /** (doc_id, component_id) for every document; isolated docs are

@@ -1808,7 +1808,7 @@ object EventOps {
         when(isSeed, lit((PrScale * 15L / 100L) / w)).otherwise(lit(0L))
           .as("base"),
         isSeed.cast("long").as("is_seed"))
-      pagerankPersonalizedOf(nodes, edges, n, baseRel)
+      pagerankOf(nodes, edges, n, Some(baseRel))
         .select(col("node").as("user_id"), col("rank_scaled"),
           col("rank"), col("is_seed"))
         .orderBy("user_id")
@@ -1935,49 +1935,6 @@ object EventOps {
     }
   }
 
-  /** Personalized-teleport power iteration: identical to
-    * [[pagerankOf]] except the constant base term becomes the
-    * per-node `base` column of `baseRel` (node, base, is_seed).
-    * Dangling mass stays the uniform scalar — only the teleport is
-    * personalized. */
-  private[graft] def pagerankPersonalizedOf(nodes: DataFrame,
-      edges: DataFrame, n: Long, baseRel: DataFrame): DataFrame = {
-    require(n < PrEdgeScale,
-      s"pagerank dangling share 10^6 div n floors to 0 at n=$n >= " +
-        s"$PrEdgeScale nodes — raise PrEdgeScale before running at " +
-        "this graph scale (see Scaladoc quantization bound)")
-    val initRank = PrScale / n
-    val dShare = PrEdgeScale / n
-    val (shareRaw, danglingRaw) = pagerankShares(nodes, edges)
-    val allShare = shareRaw.transform(graft.Checkpointing.cut)
-    val danglingSrc = danglingRaw.transform(graft.Checkpointing.cut)
-    val baseCk = baseRel.transform(graft.Checkpointing.cut)
-    var ranks = nodes.select(col("node"), lit(initRank).as("rank"))
-    for (it <- 1 to PrIters) {
-      val dmass = danglingSrc
-        .join(ranks, danglingSrc("src") === ranks("node"))
-        .agg(coalesce(
-          sum(expr(s"(rank * $dShare) div $PrEdgeScale")),
-          lit(0L)).as("dmass"))
-      val next = allShare
-        .join(ranks, allShare("src") === ranks("node"))
-        .groupBy(col("dst"))
-        .agg(sum(expr(s"(rank * share) div $PrEdgeScale")).as("sumc"))
-        .crossJoin(broadcast(dmass))
-        .join(baseCk, col("dst") === baseCk("node"))
-        .select(col("node"),
-          expr(s"base + ($PrDampNum * (sumc + dmass)) div 100")
-            .as("rank"))
-      ranks = if (it % 2 == 0 || it == PrIters) next.transform(graft.Checkpointing.cut)
-        else next
-    }
-    ranks.join(baseCk.select(col("node"), col("is_seed")), "node")
-      .select(col("node"),
-        col("rank").as("rank_scaled"),
-        (col("rank").cast("double") / lit(PrScale.toDouble)).as("rank"),
-        col("is_seed"))
-  }
-
   /** The static PageRank relations: (share, danglingSrc). `share` is
     * real quantized edges + zero-share self-loops ONLY — zero dangling
     * rows, the contract PrDanglingScaleSpec pins; `danglingSrc` is the
@@ -1999,13 +1956,20 @@ object EventOps {
 
   /** The iteration core: `nodes` has one `node` column, `edges` is
     * (src, dst, w). Output columns (node, rank_scaled, rank),
-    * UNSORTED — callers rename and order. */
-  private[graft] def pagerankOf(
-      nodes: DataFrame, edges: DataFrame, n: Long): DataFrame = {
+    * UNSORTED — callers rename and order. With a `baseRel`
+    * (node, base, is_seed) the teleport is personalized (TrustRank):
+    * the constant base term becomes the node's `base` column and the
+    * output gains `is_seed`. Dangling mass stays the uniform scalar
+    * either way; without a `baseRel` the plan joins no base
+    * relation. */
+  private[graft] def pagerankOf(nodes: DataFrame, edges: DataFrame,
+      n: Long, baseRel: Option[DataFrame] = None): DataFrame = {
     require(n < PrEdgeScale,
       s"pagerank dangling share 10^6 div n floors to 0 at n=$n >= " +
         s"$PrEdgeScale nodes — raise PrEdgeScale before running at " +
         "this graph scale (see Scaladoc quantization bound)")
+    require(PrIters % 2 == 0, s"PrIters=$PrIters must be even: the " +
+      "fixpoint step runs two rounds")
     val initRank = PrScale / n
     val baseRank = (PrScale * 15L / 100L) / n
     // uniform share a dangling node would give every node — quantized
@@ -2014,8 +1978,9 @@ object EventOps {
     val (shareRaw, danglingRaw) = pagerankShares(nodes, edges)
     val allShare = shareRaw.transform(graft.Checkpointing.cut)
     val danglingSrc = danglingRaw.transform(graft.Checkpointing.cut)
-    var ranks = nodes.select(col("node"), lit(initRank).as("rank"))
-    for (it <- 1 to PrIters) {
+    val baseCk = baseRel.map(graft.Checkpointing.cut(_))
+    val damped = s"($PrDampNum * (sumc + dmass)) div 100"
+    def powerRound(ranks: DataFrame): DataFrame = {
       // dangling mass as ONE scalar: per-term floor (rank·s) div 10⁶
       // matches the edge formula, so adding dmass into every node's
       // contribution sum is bit-identical to the O(|dangling|·N)
@@ -2025,25 +1990,32 @@ object EventOps {
         .agg(coalesce(
           sum(expr(s"(rank * $dShare) div $PrEdgeScale")),
           lit(0L)).as("dmass"))
-      val next = allShare
+      val summed = allShare
         .join(ranks, allShare("src") === ranks("node"))
         .groupBy(col("dst"))
         .agg(sum(expr(s"(rank * share) div $PrEdgeScale")).as("sumc"))
         .crossJoin(broadcast(dmass))
-        .select(col("dst").as("node"),
-          expr(s"$baseRank + ($PrDampNum * (sumc + dmass)) div 100")
-            .as("rank"))
-      // lineage cut every OTHER round: each eager localCheckpoint is
-      // a full job, and at 8 rounds the checkpoint jobs dominated the
-      // query (measured 3.75 s on the 1.5k-node graph — overhead, not
-      // graph work). A depth-2 plan (two joins + two aggs) stays flat
-      // enough; arithmetic and result are bit-identical either way
-      ranks = if (it % 2 == 0 || it == PrIters) next.transform(graft.Checkpointing.cut)
-        else next
+      baseCk match {
+        case None => summed.select(col("dst").as("node"),
+          expr(s"$baseRank + $damped").as("rank"))
+        case Some(b) => summed.join(b, col("dst") === b("node"))
+          .select(col("node"), expr(s"base + $damped").as("rank"))
+      }
     }
-    ranks.select(col("node"),
+    // one fixpoint step = two rounds, so the lineage is cut every
+    // OTHER round: each eager cut is a full job, and at 8 rounds the
+    // checkpoint jobs dominated the query (measured 3.75 s on the
+    // 1.5k-node graph — overhead, not graph work). A depth-2 plan (two
+    // joins + two aggs) stays flat enough; arithmetic and result are
+    // bit-identical either way
+    val (ranks, _) = graft.Checkpointing.fixpoint(
+      baseCk.fold("pagerank")(_ => "trustrank"),
+      nodes.select(col("node"), lit(initRank).as("rank")), PrIters / 2)(
+      r => Some(powerRound(powerRound(r))))
+    val out = ranks.select(col("node"),
       col("rank").as("rank_scaled"),
       (col("rank").cast("double") / lit(PrScale.toDouble)).as("rank"))
+    baseCk.fold(out)(b => out.join(b.select(col("node"), col("is_seed")), "node"))
   }
 
   /** The user referral graph as DISTINCT UNDIRECTED edges `(u, v)`
@@ -2276,44 +2248,41 @@ object EventOps {
       .groupBy("node").agg(count(lit(1)).as("deg"))
     // (node, degree, deg): full-graph degree (static) and current
     // alive-subgraph degree (maintained)
-    var alive = degOf(full).select(col("node"), col("deg").as("degree"),
+    val init = degOf(full).select(col("node"), col("deg").as("degree"),
         col("deg")).transform(graft.Checkpointing.cut)
-    var done = alive.isEmpty
-    var rounds = 0
-    while (!done) {
-      val peel = alive.filter(col("deg") < KcoreK)
-        .select(col("node")).transform(graft.Checkpointing.cut)
-      if (peel.isEmpty) done = true
+    // peel sets are step-local cuts that the next state's plan reads;
+    // they are freed once the loop is done
+    val peels = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    val (core, _) = graft.Checkpointing.fixpoint("kcore", init) { alive =>
+      if (alive.isEmpty) None
       else {
-        // edges lost by each survivor: one endpoint peeled this
-        // round, the other surviving. Both joins probe the static
-        // edge leaf with the (small) peel set — map-side once AQE
-        // broadcasts it; only the per-survivor loss counts shuffle.
-        val lostU = full
-          .join(peel.select(col("node").as("v")), Seq("v"), "left_semi")
-          .select(col("u").as("node"))
-        val lostV = full
-          .join(peel.select(col("node").as("u")), Seq("u"), "left_semi")
-          .select(col("v").as("node"))
-        val lost = lostU.unionAll(lostV)
-          .groupBy("node").agg(count(lit(1)).as("lost"))
-        val next = alive
-          .join(peel.select(col("node")), Seq("node"), "left_anti")
-          .join(lost, Seq("node"), "left")
-          .select(col("node"), col("degree"),
-            (col("deg") - coalesce(col("lost"), lit(0L))).as("deg"))
-          .transform(graft.Checkpointing.cut)
-        IndexCache.release(alive)
-        alive = next
-        done = alive.isEmpty
+        val peel = alive.filter(col("deg") < KcoreK)
+          .select(col("node")).transform(graft.Checkpointing.cut)
+        peels += peel
+        Option.when(!peel.isEmpty) {
+          // edges lost by each survivor: one endpoint peeled this
+          // round, the other surviving. Both joins probe the static
+          // edge leaf with the (small) peel set — map-side once AQE
+          // broadcasts it; only the per-survivor loss counts shuffle.
+          val lostU = full
+            .join(peel.select(col("node").as("v")), Seq("v"), "left_semi")
+            .select(col("u").as("node"))
+          val lostV = full
+            .join(peel.select(col("node").as("u")), Seq("u"), "left_semi")
+            .select(col("v").as("node"))
+          val lost = lostU.unionAll(lostV)
+            .groupBy("node").agg(count(lit(1)).as("lost"))
+          alive
+            .join(peel.select(col("node")), Seq("node"), "left_anti")
+            .join(lost, Seq("node"), "left")
+            .select(col("node"), col("degree"),
+              (col("deg") - coalesce(col("lost"), lit(0L))).as("deg"))
+        }
       }
-      IndexCache.release(peel)
-      rounds += 1
     }
-    // round-count telemetry (round-15 verdict): peel depth is the
-    // scale driver — observable in any run's stderr
-    System.err.println(s"[graft] kcore: peeled in $rounds rounds")
-    alive.select(col("node"), col("degree"), col("deg").as("core_degree"))
+    peels.foreach(IndexCache.release)
+    if (core ne init) IndexCache.release(init)
+    core.select(col("node"), col("degree"), col("deg").as("core_degree"))
   }
 
   /** K-core membership (`ev_user_kcore`) — the cohesion CORE of the

@@ -1034,18 +1034,16 @@ object SimilarityOps {
     * checkpoint IS the materialization the cache holds). */
   private def trainedCentroids(s: SparkSession, d: String): DataFrame =
     centroidCache.getOrBuild(s, d, embMtime(d)) {
-      val e = emb(s, d).select(col("vec_id"), col("embedding"))
-      var cents = centroids(s, d)
-      for (i <- 1 to KmeansIters) {
-        val next = toArrays(meansLong(assignToNearest(e, cents)
-          .select(col("clabel"), col("embedding")))).transform(graft.Checkpointing.cut)
-        // free the previous round's checkpoint blocks (round 1's input
-        // is the lazy label-means plan — nothing to free there)
-        if (i > 1) IndexCache.release(cents)
-        cents = next
-      }
-      cents
+      lloyd(emb(s, d).select(col("vec_id"), col("embedding")), centroids(s, d))
     }
+
+  /** [[KmeansIters]] Lloyd's rounds over the (vec_id, embedding)
+    * vectors `e` from the (clabel, c) centroids `init`; each round's
+    * centroids are cut by the fixpoint loop. */
+  private def lloyd(e: DataFrame, init: DataFrame): DataFrame =
+    graft.Checkpointing.fixpoint("kmeans", init, KmeansIters)(cents =>
+      Some(toArrays(meansLong(assignToNearest(e, cents)
+        .select(col("clabel"), col("embedding"))))))._1
 
   val kmeansTrain: Q = (s, d) =>
     trainedCentroids(s, d)
@@ -1070,21 +1068,13 @@ object SimilarityOps {
     * corpus is never shuffled by vector. */
   val kmeansStability: Q = (s, d) => {
     val e = emb(s, d).select(col("vec_id"), col("embedding"))
-    def train(init: DataFrame): DataFrame = {
-      var cents = init.transform(graft.Checkpointing.cut)
-      for (_ <- 1 to KmeansIters)
-        cents = toArrays(meansLong(assignToNearest(e, cents)
-          .select(col("clabel"), col("embedding"))))
-          .transform(graft.Checkpointing.cut)
-      cents
-    }
     val initB = toArrays(meansLong(emb(s, d).select(
       (Hashing.charHash(col("vec_id").cast("string")) % 10L)
         .as("clabel"),
       col("embedding"))))
-    val aA = assignToNearest(e, train(centroids(s, d)))
+    val aA = assignToNearest(e, lloyd(e, centroids(s, d)))
       .select(col("vec_id"), col("clabel").as("a"))
-    val aB = assignToNearest(e, train(initB))
+    val aB = assignToNearest(e, lloyd(e, initB))
       .select(col("vec_id"), col("clabel").as("b"))
     val cont = aA.join(aB, "vec_id")
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("nij"))
@@ -1457,9 +1447,9 @@ object SimilarityOps {
       .select(col("vec_id"), col("dim"),
         (col("q_int8") - col("mu")).as("q_int8"))
       .transform(graft.Checkpointing.cut)
-    var v = lanes.select(col("dim")).distinct()
-      .select(col("dim"), lit(PcaVs).as("val"))
-    for (it <- 1 to PcaIters) {
+    require(PcaIters % 2 == 0, s"PcaIters=$PcaIters must be even: the " +
+      "fixpoint step runs two rounds")
+    def powerRound(v: DataFrame): DataFrame = {
       val dots = lanes.join(v, "dim")
         .groupBy(col("vec_id"))
         .agg(sum(col("q_int8") * col("val")).as("dot"))
@@ -1467,15 +1457,17 @@ object SimilarityOps {
         .groupBy(col("dim"))
         .agg(sum(col("q_int8") * col("dot")).as("raw"))
       val m = raw.agg(max(abs(col("raw"))).as("m"))
-      val next = raw.crossJoin(broadcast(m))
+      raw.crossJoin(broadcast(m))
         .select(col("dim"),
           when(col("m") > 0L,
             expr(s"raw div (m div $PcaVs + 1)"))
             .otherwise(lit(0L)).as("val"))
-      v = if (it % 2 == 0 || it == PcaIters)
-        graft.Checkpointing.cut(next)
-      else next
     }
+    // one fixpoint step = two rounds: the lineage is cut every other
+    // round
+    val (v, _) = graft.Checkpointing.fixpoint("pca",
+      lanes.select(col("dim")).distinct().select(col("dim"), lit(PcaVs).as("val")),
+      PcaIters / 2)(w => Some(powerRound(powerRound(w))))
     v.select(col("dim"), col("val").as("v_scaled"),
         (col("val").cast("double") / lit(PcaVs.toDouble)).as("loading"))
       .orderBy("dim")

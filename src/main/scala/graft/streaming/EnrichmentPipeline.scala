@@ -4,7 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.Checkpointing
 import graft.functions.Enrichment
+import graft.operators.IndexCache
 import graft.streaming.Reliability._
 
 /** The reference's scenario topology (scenario.dot: source → enricher
@@ -19,7 +21,14 @@ import graft.streaming.Reliability._
   *    [[Reliability.fallible]] when a failure-injecting service is
   *    plugged in (tests mirror Services.scala:100-121)
   *  - E6 DLQ → per-batch split, both sinks written in the same
-  *    `foreachBatch` (atomic with the offset commit)
+  *    `foreachBatch` (atomic with the offset commit). The batch is
+  *    evaluated once per attempt: one [[graft.Checkpointing.cut]]
+  *    runs the fallible service, and both sinks read the cut, so a
+  *    row gets exactly one service outcome and lands in exactly one
+  *    sink. A cut, not `persist`: Spark would recompute a lost
+  *    persisted block and call the service again, while a lost cut
+  *    fails the batch, which replays whole and overwrites both
+  *    `batchId=` directories
   *  - K3 ack → checkpoint commit after the batch's writes succeed;
   *    crash before commit ⇒ replay ⇒ at-least-once, exactly the
   *    README.md:13-17 contract
@@ -70,17 +79,21 @@ object EnrichmentPipeline {
       .option("checkpointLocation", checkpointPath)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (ok, dlq) = Reliability.split(batch)
-        retry(maxRetries) {
-          ok.drop(ErrorCol).write.mode("overwrite")
-            .parquet(s"$okPath/batchId=$batchId")
-        }
-        retry(maxRetries) {
-          dlq.select(col("id"), col("value"),
-              col(s"$ErrorCol.clazz").as("error_class"),
-              col(s"$ErrorCol.msg").as("error_msg")).write.mode("overwrite")
-            .parquet(s"$dlqPath/batchId=$batchId")
-        }
+        // one evaluation per batch attempt (E6 note above)
+        val evaluated = Checkpointing.cut(batch)
+        try {
+          val (ok, dlq) = Reliability.split(evaluated)
+          retry(maxRetries) {
+            ok.drop(ErrorCol).write.mode("overwrite")
+              .parquet(s"$okPath/batchId=$batchId")
+          }
+          retry(maxRetries) {
+            dlq.select(col("id"), col("value"),
+                col(s"$ErrorCol.clazz").as("error_class"),
+                col(s"$ErrorCol.msg").as("error_msg")).write.mode("overwrite")
+              .parquet(s"$dlqPath/batchId=$batchId")
+          }
+        } finally IndexCache.release(evaluated)
         // returning normally = offset commit = ack (K3); DLQ'd rows are
         // acked too (Either-variant semantics, SURVEY.md §3.3 note)
         ()

@@ -3,6 +3,8 @@ package graft.streaming
 import java.io.IOException
 import java.util.concurrent.TimeoutException
 
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -57,47 +59,32 @@ object Reliability {
   final case class StageError(clazz: String, msg: String, temporary: Boolean)
   final case class StageResult(value: String, error: StageError)
 
-  /** E8: lift a fallible scalar function into an error-as-value UDF
-    * producing `STRUCT<value, error STRUCT<clazz,msg,temporary>>`.
-    * Used only where logic is genuinely fallible/external — pure
-    * enrichment stays as native columns. */
-  def fallible(f: String => String): Column => Column = {
-    val u = udf { (s: String) =>
-      try StageResult(f(s), null)
-      catch {
-        case e: Throwable =>
-          StageResult(null,
-            StageError(e.getClass.getName, String.valueOf(e.getMessage),
-              isTemporary(e)))
-      }
-    }
+  /** E8 + E3/E4: lift a fallible scalar function into an error-as-value
+    * UDF producing `STRUCT<value, error STRUCT<clazz,msg,temporary>>`,
+    * one [[attempt]] per row. Used only where logic is genuinely
+    * fallible/external — pure enrichment stays as native columns. */
+  def fallible(f: String => String, attempts: Int = 1): Column => Column = {
+    require(attempts >= 1, s"attempts=$attempts must be at least 1")
+    val u = udf((s: String) => attempt(f, attempts)(s))
     (c: Column) => u(c)
   }
 
-  /** E3/E4 at row granularity: like [[fallible]] but temporary
-    * failures are retried in place up to `attempts` times (the
-    * reference's bounded-retry combinator applied per message);
-    * unrecoverable failures short-circuit to the error channel. */
-  def fallibleWithRetry(f: String => String, attempts: Int)
-      : Column => Column = {
-    val u = udf { (s: String) =>
-      var left = attempts
-      var out: StageResult = null
-      while (out == null && left > 0) {
-        left -= 1
-        try out = StageResult(f(s), null)
-        catch {
-          case e: Throwable if isTemporary(e) && left > 0 => // retry
-          case e: Throwable =>
-            out = StageResult(null,
-              StageError(e.getClass.getName, String.valueOf(e.getMessage),
-                isTemporary(e)))
-        }
-      }
-      out
+  /** The row function behind [[fallible]]: temporary failures are
+    * retried in place up to `attempts` calls in all (the reference's
+    * bounded-retry combinator applied per message); the last failure,
+    * or the first unrecoverable one, becomes the error value. Only
+    * `NonFatal` throwables become values: a VM error, an interrupt or
+    * a linkage error fails the task, and the batch replays whole. */
+  def attempt(f: String => String, attempts: Int)(s: String): StageResult =
+    Try(f(s)) match {
+      case Success(v) => StageResult(v, null)
+      case Failure(e) if isTemporary(e) && attempts > 1 =>
+        attempt(f, attempts - 1)(s)
+      case Failure(e) =>
+        StageResult(null,
+          StageError(e.getClass.getName, String.valueOf(e.getMessage),
+            isTemporary(e)))
     }
-    (c: Column) => u(c)
-  }
 
   /** Daemon pool for [[withTimeout]] — one per JVM (driver or
     * executor), never blocks JVM exit. BOUNDED at 256 threads: a
@@ -153,7 +140,7 @@ object Reliability {
     * one stage. */
   def fallibleWithTimeout(f: String => String, timeoutMs: Long,
       attempts: Int = 1): Column => Column =
-    fallibleWithRetry(s => withTimeout(timeoutMs)(f(s)), attempts)
+    fallible(s => withTimeout(timeoutMs)(f(s)), attempts)
 
   /** E6: split a DataFrame carrying an error column into (ok, dlq). */
   def split(df: DataFrame, errorCol: String = ErrorCol)

@@ -20,13 +20,18 @@ import graft.operators.{DedupOps, SimilarityOps}
   * checkpoint RDD directory per cut) that makes reliable mode
   * auditable. */
 class CheckpointingSpec extends SparkSpec {
+  import CheckpointingSpec._
 
-  /** The iterative family named by the round-10 verdict: PageRank,
-    * TrustRank, CC, and the delta-CC + index-merge path (the delta
-    * query exercises the merge caches too). */
+  /** The iterative family: PageRank, TrustRank, CC, the delta-CC +
+    * index-merge path (the delta query exercises the merge caches
+    * too), HITS, k-core, Lloyd's k-means and PCA power iteration —
+    * every loop that runs in [[Checkpointing.fixpoint]], plus HITS's
+    * hand-rolled one. */
   private val IterativeGates = Seq(
     "ev_user_pagerank", "ev_user_trustrank",
-    "dedup_components", "dedup_components_delta")
+    "dedup_components", "dedup_components_delta",
+    "ev_user_hits", "ev_user_kcore", "kmeans_stability",
+    "emb_principal_dir")
 
   /** The component/index caches memoize across runs — without a reset
     * the second mode would replay the FIRST mode's cached relation and
@@ -39,22 +44,6 @@ class CheckpointingSpec extends SparkSpec {
   private def rowsOf(name: String): Seq[String] = {
     resetCaches()
     SparkEntry.queries(name)(spark, Sf).collect().map(_.toString).toSeq
-  }
-
-  private def rddDirsUnder(dir: String): Seq[Path] = {
-    val root = Paths.get(dir)
-    if (!Files.exists(root)) Seq.empty
-    else Files.walk(root).iterator().asScala
-      .filter(p => Files.isDirectory(p) &&
-        p.getFileName.toString.startsWith("rdd-"))
-      .toSeq
-  }
-
-  private def deleteTree(dir: String): Unit = {
-    val root = Paths.get(dir)
-    if (Files.exists(root))
-      Files.walk(root).iterator().asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
   }
 
   test("reliable mode is hash-identical to local mode on every " +
@@ -110,5 +99,24 @@ class CheckpointingSpec extends SparkSpec {
     val nodes = cut.queryExecution.optimizedPlan.collect { case p => p }.size
     assert(nodes <= 3, "cut must truncate lineage in local mode too")
     graft.operators.IndexCache.release(cut)
+  }
+}
+
+object CheckpointingSpec {
+  /** Checkpoint RDD directories (`rdd-*`) under `dir`. */
+  def rddDirsUnder(dir: String): Seq[Path] = {
+    val root = Paths.get(dir)
+    if (!Files.exists(root)) Seq.empty
+    else Files.walk(root).iterator().asScala
+      .filter(p => Files.isDirectory(p) &&
+        p.getFileName.toString.startsWith("rdd-"))
+      .toSeq
+  }
+
+  def deleteTree(dir: String): Unit = {
+    val root = Paths.get(dir)
+    if (Files.exists(root))
+      Files.walk(root).iterator().asScala.toSeq.reverse
+        .foreach(p => Files.deleteIfExists(p))
   }
 }

@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   * The full-surface no-throw sweep is the regression net; the
   * targeted tests pin each fixed class's exact empty-input shape.
   * Oracle parity on this corpus is certified end-to-end by the gate
-  * (scripts/make_empty.py + Verify + check.py — round15_gate.sh).
+  * (scripts/make_empty.py + Verify + check.py — scripts/gate.sh).
   */
 class EmptyCorpusSpec extends SparkSpec {
 

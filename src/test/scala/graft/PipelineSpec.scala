@@ -71,6 +71,31 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.parquet(dlq).count() == 3) // 7, 17, 27
   }
 
+  test("random per-call faults: ok and DLQ partition the input, with " +
+      "one service call per message") {
+    val in = tmpDir("prop-in"); val ok = tmpDir("prop-ok")
+    val dlq = tmpDir("prop-dlq"); val cp = tmpDir("prop-cp")
+    val ids = 0L until 200L
+    ids.map(i => (i, s"Input Data: $i")).toDF("id", "value")
+      .repartition(4).write.mode("overwrite").parquet(in)
+    val q = EnrichmentPipeline.start(
+      spark.readStream.schema("id LONG, value STRING").parquet(in),
+      ok, dlq, cp, CallFaults.service("prop", seed = 17L))
+    q.awaitTermination()
+    val okIds = spark.read.parquet(ok).select("id").as[Long].collect().toSeq
+    val dlqIds = spark.read.parquet(dlq).select("id").as[Long].collect().toSeq
+    assert(okIds.nonEmpty && dlqIds.nonEmpty, "the fault model must bite")
+    val partitioned = (okIds ++ dlqIds).sorted == ids
+    assert(partitioned, s"ok ⊎ dlq must equal the input: ${ids.size} in, " +
+      s"${okIds.size} ok + ${dlqIds.size} dlq, " +
+      s"${ids.diff(okIds ++ dlqIds).size} lost")
+    assert(okIds.intersect(dlqIds).isEmpty, "a message reached both sinks")
+    val calls = CallFaults.calls("prop")
+    assert(calls.keySet == ids.toSet && calls.values.forall(_ == 1),
+      s"calls per message: ${calls.values.groupBy(identity).map {
+        case (k, v) => k -> v.size }}")
+  }
+
   test("S1 rate source feeds the pipeline: live micro-batches produce rows") {
     import org.apache.spark.sql.streaming.Trigger
     val src = EnrichmentPipeline.rateSource(spark, rowsPerSecond = 100)
@@ -102,7 +127,7 @@ class PipelineSpec extends SparkSpec {
     (0L until 5L).map(i => (i, s"Input Data: $i")).toDF("id", "value")
       .write.mode("overwrite").parquet(in)
     // flaky *service* with temporary failures that succeed on retry
-    // happens at row level via fallibleWithRetry — here we assert the
+    // happens at row level via fallible(f, attempts) — here we assert the
     // sink-level retry combinator drives a flaky write to success
     var failures = 2
     val flakyWrite: String => String = { s =>
@@ -117,5 +142,32 @@ class PipelineSpec extends SparkSpec {
     q.awaitTermination()
     assert(spark.read.parquet(ok).count() == 5)
     assert(spark.read.parquet(dlq).count() == 0)
+  }
+}
+
+/** A service whose outcome is a seeded function of (id, call index):
+  * 20% of calls fail, half of those temporarily — the reference's
+  * random failure model (Services.scala:100-121). Calls are counted
+  * per id in this JVM, which local mode shares with the executors. */
+object CallFaults {
+  private val counts = new java.util.concurrent.ConcurrentHashMap[
+    String, java.util.concurrent.ConcurrentHashMap[Long, Int]]()
+
+  private def of(ns: String) = counts.computeIfAbsent(ns,
+    _ => new java.util.concurrent.ConcurrentHashMap[Long, Int]())
+
+  def service(ns: String, seed: Long): String => String = { s =>
+    val id = s.split(": ").last.toLong
+    val call = of(ns).merge(id, 1, _ + _) - 1
+    val r = Math.floorMod(
+      scala.util.hashing.MurmurHash3.productHash((seed, id, call)), 100)
+    if (r < 10) throw new IOException(s"temporary $id/$call")
+    if (r < 20) throw new IllegalArgumentException(s"invalid $id/$call")
+    s"stored $id"
+  }
+
+  def calls(ns: String): Map[Long, Int] = {
+    import scala.jdk.CollectionConverters._
+    of(ns).asScala.toMap
   }
 }

@@ -129,12 +129,12 @@ class ReliabilitySpec extends SparkSpec {
     assert(rows(2)._3)
   }
 
-  test("E3 row-level bounded retry inside fallibleWithRetry") {
+  test("E3 row-level bounded retry inside fallible(f, attempts)") {
     // deterministic flaky service: fails twice per distinct input then
     // succeeds (mock-Dao pattern, AkkaPipelineActorsTest.scala:59-77)
-    val f = Reliability.fallibleWithRetry(
+    val f = Reliability.fallible(
       FlakyRegistry.failTwiceThenUpper("rspec1"), attempts = 3)
-    val g = Reliability.fallibleWithRetry(
+    val g = Reliability.fallible(
       FlakyRegistry.failTwiceThenUpper("rspec2"), attempts = 2)
     val ok = Seq("a").toDF("v").select(f(col("v")).as("r"))
       .select("r.value").as[String].head()
@@ -142,6 +142,29 @@ class ReliabilitySpec extends SparkSpec {
     val err = Seq("b").toDF("v").select(g(col("v")).as("r"))
       .select("r.error.temporary").as[Boolean].head()
     assert(err, "2 attempts exhaust and surface the temporary error")
+  }
+
+  test("E8 attempt: only NonFatal throwables become error values") {
+    // the row function is called directly: a fatal error inside a
+    // local-mode Spark task could take the test JVM down with it
+    val calls = new AtomicInteger(0)
+    val bad = Reliability.attempt({ _ =>
+      calls.incrementAndGet(); throw new IllegalStateException("x")
+    }, 3)("a")
+    assert(bad.value == null)
+    assert(bad.error.clazz == "java.lang.IllegalStateException")
+    assert(!bad.error.temporary)
+    assert(calls.get() == 1, "unrecoverable failures must not retry")
+    def raise(t: Throwable): String => String = _ => throw t
+    intercept[OutOfMemoryError] {
+      Reliability.attempt(raise(new OutOfMemoryError("vm")), 3)("a")
+    }
+    intercept[InterruptedException] {
+      Reliability.attempt(raise(new InterruptedException("stop")), 3)("a")
+    }
+    intercept[LinkageError] {
+      Reliability.attempt(raise(new LinkageError("link")), 3)("a")
+    }
   }
 
   test("J4 merge: first error wins, success iff all null") {
