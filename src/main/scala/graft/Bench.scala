@@ -180,18 +180,24 @@ object Bench {
   }
 
   /** Per-query shuffle attribution: stage-aggregated shuffle WRITE
-    * bytes and completed-stage count, accumulated by a listener and
-    * snapshotted around each timed query (with a listener-bus flush
-    * barrier on both sides — events post asynchronously). Makes plan
-    * drift arithmetic the way the canary made host drift arithmetic:
-    * a query whose wall time moved with a zero-line diff either moved
-    * its shuffle bytes too (plan change — investigate) or did not
-    * (ambient — ignore). `scripts/probe_report.py` flags >20%
-    * round-over-round movement. */
+    * bytes, completed-stage and started-job counts, accumulated by a
+    * listener and snapshotted around each timed query (with a
+    * listener-bus flush barrier on both sides — events post
+    * asynchronously). Makes plan drift arithmetic the way the canary
+    * made host drift arithmetic: a query whose wall time moved with a
+    * zero-line diff either moved its shuffle bytes too (plan change —
+    * investigate) or did not (ambient — ignore).
+    * `scripts/probe_report.py` flags >20% round-over-round movement. */
   private[graft] final class ShuffleListener
       extends org.apache.spark.scheduler.SparkListener {
     val bytes = new java.util.concurrent.atomic.AtomicLong
     val stages = new java.util.concurrent.atomic.AtomicLong
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    override def onJobStart(
+        e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+      jobs.incrementAndGet()
+      ()
+    }
     override def onStageCompleted(
         e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
       stages.incrementAndGet()
@@ -310,14 +316,16 @@ object Bench {
     // failed partial run's bytes as "the plan". IndexedSeq so the
     // per-index lookups below stay O(1).
     val idxNames = names.toIndexedSeq
-    val passes: IndexedSeq[IndexedSeq[(Double, Long, Long)]] =
+    val passes: IndexedSeq[IndexedSeq[(Double, Long, Long, Long)]] =
       (1 to reps).map { _ =>
         idxNames.map { n =>
           flush()
-          val (b0, s0) = (listener.bytes.get(), listener.stages.get())
+          val (b0, s0, j0) = (listener.bytes.get(),
+            listener.stages.get(), listener.jobs.get())
           val sec = run(n)
           flush()
-          (sec, listener.bytes.get() - b0, listener.stages.get() - s0)
+          (sec, listener.bytes.get() - b0, listener.stages.get() - s0,
+            listener.jobs.get() - j0)
         }
       }.toIndexedSeq
     val results = idxNames.zipWithIndex.map { case (n, i) =>
@@ -332,10 +340,10 @@ object Bench {
       java.nio.file.Paths.get("bench_shuffle.json"),
       idxNames.zipWithIndex.map { case (n, i) =>
         passes.find(_(i)._1 >= 0).map(_(i)) match {
-          case Some((_, b, st)) =>
-            s""""$n":{"shuffle_bytes":$b,"stages":$st}"""
+          case Some((_, b, st, jb)) =>
+            s""""$n":{"shuffle_bytes":$b,"stages":$st,"jobs":$jb}"""
           case None =>
-            s""""$n":{"shuffle_bytes":-1,"stages":-1,"all_reps_failed":true}"""
+            s""""$n":{"shuffle_bytes":-1,"stages":-1,"jobs":-1,"all_reps_failed":true}"""
         }
       }.mkString("""{"queries":{""", ",", s"""},"sf":"$sfDir"}""") + "\n")
     // per-pass raw times sidecar: the dispersion audit trail behind

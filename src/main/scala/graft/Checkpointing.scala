@@ -6,8 +6,8 @@ import graft.operators.IndexCache
 
 /** The engine's single lineage-cut seam.
   *
-  * Every iterative operator family (PageRank/TrustRank fixed points,
-  * connected-component propagation, k-core peeling, PCA power
+  * Every iterative operator family whose state is a relation
+  * (connected-component propagation, k-core peeling, PCA power
   * iteration, Lloyd's k-means, index append/compact lifecycles) must
   * cut lineage between rounds or the logical plan grows O(rounds)
   * deep. Through round 10 every cut was `localCheckpoint(true)`:
@@ -31,12 +31,16 @@ import graft.operators.IndexCache
   * across modes, and pins that reliable mode writes exactly one
   * checkpoint RDD directory per cut).
   *
-  * Iterative loops go through [[fixpoint]], the one loop that cuts
-  * each round's state, frees the superseded state and counts rounds;
-  * an operator supplies only its step (FixpointSpec pins the cut and
-  * release contract). HITS alone keeps a hand-rolled loop: its output
-  * reads the last leaves of BOTH half-steps, and the loop returns one
-  * state.
+  * Iterative loops whose state is a relation — k-core peeling,
+  * connected-component propagation, PCA power iteration and Lloyd's
+  * k-means — go through [[fixpoint]], the one loop that cuts each
+  * round's state, frees the superseded state and counts rounds; an
+  * operator supplies only its step (FixpointSpec pins the cut and
+  * release contract). PageRank, TrustRank and HITS iterate
+  * driver-held vectors of fewer than 10⁶ longs instead (one narrow job
+  * per round, see `EventOps.pagerankOf`): they cut only their static
+  * relations, never a round. Every iterative run reports itself
+  * through [[reportRounds]].
   *
   * Storage hygiene: [[graft.operators.IndexCache.release]] frees
   * executor BLOCKS behind a cut in either mode; reliable-mode FILES
@@ -81,8 +85,7 @@ object Checkpointing {
     * it is never cut (cut it first if every step re-reads it) and never
     * released, and a loop that stops at once returns it unchanged.
     * Cuts a step makes of its own intermediates stay in the step. Each
-    * run writes one JSON line to stderr:
-    * `{"fixpoint":"<name>","rounds":<steps>,"ms":<wall ms>}`. */
+    * run writes its [[reportRounds]] line, counting steps. */
   def fixpoint[T](name: String, init: Dataset[T], maxSteps: Int = Int.MaxValue)
       (step: Dataset[T] => Option[Dataset[T]]): (Dataset[T], Int) = {
     val t0 = System.nanoTime()
@@ -96,8 +99,15 @@ object Checkpointing {
           go(leaf, rounds + 1)
       }
     val (out, rounds) = go(init, 0)
+    reportRounds(name, rounds, t0)
+    (out, rounds)
+  }
+
+  /** Writes the one stderr line of an iterative run that started at
+    * `t0` (`System.nanoTime`):
+    * `{"fixpoint":"<name>","rounds":<rounds>,"ms":<wall ms>}`. */
+  def reportRounds(name: String, rounds: Int, t0: Long): Unit = {
     val ms = (System.nanoTime() - t0) / 1000000
     System.err.println(s"""{"fixpoint":"$name","rounds":$rounds,"ms":$ms}""")
-    (out, rounds)
   }
 }

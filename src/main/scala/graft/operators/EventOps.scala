@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.functions.Exact._
 import graft.functions.Hashing
@@ -1655,25 +1659,28 @@ object EventOps {
     * sum is bit-identical to summing the synthetic (u → every v)
     * fan-out rows a textbook formulation would materialize
     * (O(|dangling|·N) rows — 10¹³⁺ on a 30%-dangling domain graph;
-    * here the dangling cost is ONE |dangling|-row aggregate per
-    * iteration, independent of N on the receive side). Zero-share
-    * self-loops keep nodes with no in-edges in the relation (they
-    * receive exactly `base + damp·D`). The single double division
-    * (rank_scaled / 10¹²) happens at output.
+    * here the dangling cost is ONE |dangling|-term sum per
+    * iteration, independent of N on the receive side). A node with no
+    * in-edges receives exactly `base + damp·D`. The single double
+    * division (rank_scaled / 10¹²) happens at output.
     *
-    * Scale shape: the static share relation is built once (edges +
-    * per-source totals = two combinable aggs) and contains ONLY real
-    * edges plus N zero-share self-loops — no dangling rows (pinned by
-    * PrDanglingScaleSpec); each iteration is ONE keyed shuffle — join
-    * ranks (|nodes| rows, the small side at 100 TB once nodes are
-    * domains: broadcast- or co-partition-able) to the share relation
-    * on src, then a combinable SUM keyed on dst — plus a one-row
-    * broadcast of the dangling-mass scalar. Iteration state is
-    * `localCheckpoint`ed so lineage stays flat across the [[PrIters]]
-    * rounds — the same discipline as the CC propagation loop in
-    * [[DedupOps]]. The driver never sees rank rows; the only
-    * driver-side scalar is N = |nodes| (the CC loop's convergence-
-    * check convention).
+    * Scale shape: a static setup once per query, then one narrow job
+    * per round. The setup cuts the edges once (one window + one
+    * aggregate), builds from that cut the share relation (real edges
+    * plus N zero-share self-loops, no dangling rows — pinned by
+    * PrDanglingScaleSpec) and the dangling-source set, gives the
+    * nodes dense indices 0…N-1, and re-keys the share relation to
+    * index pairs, plus one row per dangling source into a virtual sink
+    * at share s, hash-partitioned on the destination and cut. Each of
+    * the [[PrIters]] rounds then broadcasts the rank vector, sums
+    * (rank·share) div 10⁶ per destination inside each partition, and
+    * gathers the N + 1 sums on the driver, which adds the sink's sum
+    * (D) to every node's and damps. The relational form ran a join + aggregate + cut per
+    * round, about a dozen jobs each of ≤ 20 ms task work: per-round
+    * scheduling, not graph work, bounded the query (Drizzle, SOSP'17).
+    * Edges stay distributed; only the rank vector crosses the driver,
+    * and the final (node, rank) frame is built from it. That state is
+    * N longs, N < 10⁶ by the guard below: at most 8 MB.
     *
     * Quantization bound: the dangling share s = 10⁶ div N floors to 0
     * once N > 10⁶ — at that point dangling mass would silently drop.
@@ -1681,14 +1688,13 @@ object EventOps {
     * domain-scale graph (10⁷⁺ nodes) raise PrEdgeScale (headroom:
     * rank·share ≤ PrScale·PrEdgeScale must stay < 2⁶³, so 10⁶ can
     * grow to ~9·10⁶ at the current PrScale, or PrScale drops a digit
-    * to buy another). The bound is asserted at runtime. */
+    * to buy another) and re-check the driver-held state. The bound is
+    * asserted at runtime. */
   val evTypePagerank: Q = (s, d) => {
     val base = ev(s, d)
       .select(col("user_id"), col("event_id"), col("event_type"),
         expr("unix_timestamp(ts)").as("ts_sec"))
-    val nodes = base.select(col("event_type").as("node")).distinct()
-      .transform(graft.Checkpointing.cut)
-    val n = nodes.count()
+    val (nodes, n) = nodesOf(base.select(col("event_type").as("node")))
     // empty input: the oracle's recursion over zero nodes yields an
     // empty relation; mirror it instead of dividing by zero below
     if (n == 0L)
@@ -1717,6 +1723,39 @@ object EventOps {
     * outlinks). Mirrored verbatim in the DuckDB oracle. */
   val PrEngagedPct = 7L
 
+  /** `events` as (user_id, event_id, event_type, ts_sec): the input of
+    * every user referral-graph query. */
+  private def userEvents(s: SparkSession, d: String): DataFrame =
+    ev(s, d).select(col("user_id"), col("event_id"), col("event_type"),
+      expr("unix_timestamp(ts)").as("ts_sec"))
+
+  /** The distinct values of `keys`' one `node` column as a cut
+    * relation, and its size (counted over the leaf's rows: one narrow
+    * job where `Dataset.count` adds an aggregate exchange). */
+  private def nodesOf(keys: DataFrame): (DataFrame, Long) = {
+    val nodes = keys.distinct().transform(graft.Checkpointing.cut)
+    (nodes, nodes.rdd.count())
+  }
+
+  /** "Who acted next in my event-type stream" (by ts, event_id): one
+    * (user_id, next_user) row per referral, from engaged users only. */
+  private def referrals(events: DataFrame): DataFrame = {
+    val win = Window.partitionBy(col("event_type"))
+      .orderBy(col("ts_sec"), col("event_id"))
+    events
+      .withColumn("next_user", lead(col("user_id"), 1).over(win))
+      .filter(col("next_user").isNotNull)
+      .filter(Hashing.charHash(col("user_id").cast("string")) % 10
+        < PrEngagedPct)
+  }
+
+  /** The weighted referral edges (src, dst, w = referral count) that
+    * [[evUserPagerank]], [[evUserTrustrank]] and [[evUserHits]] rank. */
+  private def referralEdges(events: DataFrame): DataFrame =
+    referrals(events)
+      .groupBy(col("user_id").as("src"), col("next_user").as("dst"))
+      .agg(count(lit(1)).as("w"))
+
   /** PageRank over the USER referral graph — the graph-scale sibling
     * of [[evTypePagerank]]: same integer fixed point, but the node
     * universe is every user (thousands at sf0.1, tens of thousands on
@@ -1728,34 +1767,24 @@ object EventOps {
     * BY CONSTRUCTION. This is the fixture that proves the scalar
     * dangling-mass formulation: the superseded fan-out design would
     * materialize |dangling|·N synthetic rows (≈6.8M at sf1) where
-    * this plan's dangling cost is a |dangling|-row aggregate per
+    * this plan's dangling cost is a |dangling|-term sum per
     * iteration; the committed scale probe runs this query at both
     * SFs. */
-  val evUserPagerank: Q = (s, d) => {
-    val base = ev(s, d)
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        expr("unix_timestamp(ts)").as("ts_sec"))
-    val nodes = base.select(col("user_id").as("node")).distinct()
-      .transform(graft.Checkpointing.cut)
-    val n = nodes.count()
+  val evUserPagerank: Q = userPagerank(PrIters)
+
+  /** [[evUserPagerank]] with `rounds` power rounds; 0 stops after the
+    * static setup. */
+  private[graft] def userPagerank(rounds: Int): Q = (s, d) => {
+    val events = userEvents(s, d)
+    val (nodes, n) = nodesOf(events.select(col("user_id").as("node")))
     if (n == 0L)
       nodes.select(col("node").as("user_id"),
         lit(0L).as("rank_scaled"), lit(0.0).as("rank"))
-    else {
-      val w = Window.partitionBy(col("event_type"))
-        .orderBy(col("ts_sec"), col("event_id"))
-      val edges = base
-        .withColumn("next_user", lead(col("user_id"), 1).over(w))
-        .filter(col("next_user").isNotNull)
-        .filter(Hashing.charHash(col("user_id").cast("string")) % 10
-          < PrEngagedPct)
-        .groupBy(col("user_id").as("src"), col("next_user").as("dst"))
-        .agg(count(lit(1)).as("w"))
-      pagerankOf(nodes, edges, n)
+    else
+      pagerankOf(nodes, referralEdges(events), n, rounds = rounds)
         .select(col("node").as("user_id"), col("rank_scaled"),
           col("rank"))
         .orderBy("user_id")
-    }
   }
 
   /** Trust-seed gate for [[evUserTrustrank]]: hash residue 3 (≈10% of
@@ -1775,40 +1804,24 @@ object EventOps {
     * redistributes uniformly; only the TELEPORT is personalized —
     * documented variant); per-node base = (15%·scale div W) for the
     * W seeds, 0 otherwise, so every arithmetic step remains
-    * bit-portable. Scale shape identical to [[evUserPagerank]] plus
-    * one broadcast-able (node, base) join per iteration. */
+    * bit-portable. Scale shape identical to [[evUserPagerank]]; the
+    * per-node base is collected once with the node keys. */
   val evUserTrustrank: Q = (s, d) => {
-    val base = ev(s, d)
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        expr("unix_timestamp(ts)").as("ts_sec"))
-    val nodes = base.select(col("user_id").as("node")).distinct()
-      .transform(graft.Checkpointing.cut)
-    val n = nodes.count()
-    val seeds = nodes.filter(
-      Hashing.charHash(col("node").cast("string")) % 10 === PrSeedResidue)
-      .transform(graft.Checkpointing.cut)
-    val w = seeds.count()
+    val events = userEvents(s, d)
+    val (nodes, n) = nodesOf(events.select(col("user_id").as("node")))
+    val isSeed = Hashing.charHash(col("node").cast("string")) % 10 ===
+      PrSeedResidue
+    val w = nodes.filter(isSeed).count()
     if (n == 0L || w == 0L)
       nodes.select(col("node").as("user_id"),
         lit(0L).as("rank_scaled"), lit(0.0).as("rank"),
         lit(0L).as("is_seed"))
     else {
-      val win = Window.partitionBy(col("event_type"))
-        .orderBy(col("ts_sec"), col("event_id"))
-      val edges = base
-        .withColumn("next_user", lead(col("user_id"), 1).over(win))
-        .filter(col("next_user").isNotNull)
-        .filter(Hashing.charHash(col("user_id").cast("string")) % 10
-          < PrEngagedPct)
-        .groupBy(col("user_id").as("src"), col("next_user").as("dst"))
-        .agg(count(lit(1)).as("w"))
-      val isSeed = Hashing.charHash(col("node").cast("string")) % 10 ===
-        PrSeedResidue
       val baseRel = nodes.select(col("node"),
         when(isSeed, lit((PrScale * 15L / 100L) / w)).otherwise(lit(0L))
           .as("base"),
         isSeed.cast("long").as("is_seed"))
-      pagerankOf(nodes, edges, n, Some(baseRel))
+      pagerankOf(nodes, referralEdges(events), n, Some(baseRel))
         .select(col("node").as("user_id"), col("rank_scaled"),
           col("rank"), col("is_seed"))
         .orderBy("user_id")
@@ -1829,110 +1842,74 @@ object EventOps {
     * separates REFERRERS (hubs — users whose referrals reach the
     * well-referred) from the REFERRED-TO (authorities), the pair a
     * curation pipeline uses to find scout accounts vs destination
-    * accounts. Variant: weighted adjacency (edge weight = referral
-    * count), L1 normalization each half-step — power iteration
-    * converges to the principal singular pair under any fixed
-    * positive rescaling, and L1 keeps every step ALL-INTEGER:
-    * a_t = (Aᵀh_{t-1})·S div Σ, h_t = (A a_t)·S div Σ, with div
-    * floors identical on both engines (mirrored as a DuckDB recursive
-    * CTE). Overflow bound (the [[HitsScale]] sizing): Σa_raw ≤
-    * S·maxOutW, and the normalize multiplies by S again, so the
-    * iteration needs maxOutW < 2⁶³/S² ≈ 9.2·10⁶ weighted out-degree —
-    * guarded at runtime like [[pagerankOf]]'s quantization bound.
-    * Scale shape: two hash joins + two combinable groupBys per
-    * iteration over the (src, dst, w) edge relation, each total a
-    * broadcast scalar; nodes with no in-(out-)edges never enter the
-    * iteration and emit authority (hub) 0 in the final left join. */
+    * accounts. Computed by [[hitsOf]]. */
   val evUserHits: Q = (s, d) => {
-    val base = ev(s, d)
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        expr("unix_timestamp(ts)").as("ts_sec"))
-    val nodes = base.select(col("user_id").as("node")).distinct()
-      .transform(graft.Checkpointing.cut)
-    val n = nodes.count()
-    val win = Window.partitionBy(col("event_type"))
-      .orderBy(col("ts_sec"), col("event_id"))
-    val edges =
-      if (n == 0L) null
-      else base
-        .withColumn("next_user", lead(col("user_id"), 1).over(win))
-        .filter(col("next_user").isNotNull)
-        .filter(Hashing.charHash(col("user_id").cast("string")) % 10
-          < PrEngagedPct)
-        .groupBy(col("user_id").as("src"), col("next_user").as("dst"))
-        .agg(count(lit(1)).as("w"))
-        .transform(graft.Checkpointing.cut)
-    if (n == 0L || edges.isEmpty)
-      nodes.select(col("node").as("user_id"),
-        lit(0L).as("auth_scaled"), lit(0L).as("hub_scaled"),
-        lit(0.0).as("authority"), lit(0.0).as("hub"))
-    else {
-      require(n < HitsScale,
-        s"HITS init mass 10^6 div n floors to 0 at n=$n — raise " +
-          "HitsScale before running at this graph scale")
-      val maxOutw = edges.groupBy("src").agg(sum(col("w")).as("tw"))
-        .agg(max(col("tw"))).head().getLong(0)
-      require(maxOutw < (Long.MaxValue / HitsScale) / HitsScale,
-        s"HITS normalize overflows at weighted out-degree $maxOutw " +
-          s">= 2^63/HitsScale^2 — lower HitsScale (see Scaladoc)")
-      // Round-16 job-shape restructure (guide §1.2 step 1 — the
-      // distributed shape before per-task work): each HALF-STEP's
-      // aggregate is lineage-cut immediately, and the L1 normalize
-      // lives as a flat projection over that leaf (crossJoin with the
-      // broadcast scalar computed FROM the leaf). The previous
-      // every-other-round cadence left the normalize's scalar subtree
-      // re-deriving the whole join+agg (the broadcast side cannot
-      // reuse the main side's exchange), so each cut re-executed a
-      // two-iteration DOUBLED lineage: the timed query ran 146 stages
-      // at sf0.1. With per-half-step cuts the plan never exceeds one
-      // join + one agg + one broadcast-of-a-scalar — 2 shuffle jobs
-      // per iteration, the minimum the two half-steps define
-      // (A/B numbers in OPTIMIZATION_r16.md; arithmetic and every
-      // emitted value bit-identical — the cut changes lineage, not
-      // values). Superseded leaves are released as soon as the next
-      // half-step materializes (IndexCache.release is safe on
-      // checkpointed plans; Dataset.unpersist is a CacheManager no-op
-      // for them).
-      var hub = nodes.select(col("node"), lit(HitsScale / n).as("h"))
-      var auth: DataFrame = null
-      var prevAraw: DataFrame = null
-      var prevHraw: DataFrame = null
-      for (it <- 1 to HitsIters) {
-        val araw = edges.join(hub, edges("src") === hub("node"))
-          .groupBy(col("dst")).agg(sum(col("h") * col("w")).as("araw"))
-          .transform(graft.Checkpointing.cut)
-        // hub_{t-1}'s leaf was consumed by the cut above; the final
-        // output only ever reads the LAST hub/auth leaves
-        if (prevHraw != null) IndexCache.release(prevHraw)
-        val sa = araw.agg(sum(col("araw")).as("sa"))
-        auth = araw.crossJoin(broadcast(sa))
-          .select(col("dst").as("node"),
-            expr(s"(araw * $HitsScale) div sa").as("a"))
-        val hraw = edges.join(auth, edges("dst") === auth("node"))
-          .groupBy(col("src")).agg(sum(col("a") * col("w")).as("hraw"))
-          .transform(graft.Checkpointing.cut)
-        if (prevAraw != null) IndexCache.release(prevAraw)
-        val sh = hraw.agg(sum(col("hraw")).as("sh"))
-        hub = hraw.crossJoin(broadcast(sh))
-          .select(col("src").as("node"),
-            expr(s"(hraw * $HitsScale) div sh").as("h"))
-        prevAraw = araw
-        prevHraw = hraw
-      }
-      nodes
-        .join(auth.select(col("node").as("an"), col("a")),
-          col("node") === col("an"), "left")
-        .join(hub.select(col("node").as("hn"), col("h")),
-          col("node") === col("hn"), "left")
-        .select(col("node").as("user_id"),
-          coalesce(col("a"), lit(0L)).as("auth_scaled"),
-          coalesce(col("h"), lit(0L)).as("hub_scaled"),
-          (coalesce(col("a"), lit(0L)).cast("double") /
-            lit(HitsScale.toDouble)).as("authority"),
-          (coalesce(col("h"), lit(0L)).cast("double") /
-            lit(HitsScale.toDouble)).as("hub"))
-        .orderBy("user_id")
+    val events = userEvents(s, d)
+    val (nodes, n) = nodesOf(events.select(col("user_id").as("node")))
+    val scaled =
+      if (n == 0L)
+        nodes.select(col("node"), lit(0L).as("auth_scaled"),
+          lit(0L).as("hub_scaled"))
+      else hitsOf(nodes, referralEdges(events), n)
+    scaled
+      .select(col("node").as("user_id"), col("auth_scaled"),
+        col("hub_scaled"),
+        (col("auth_scaled").cast("double") /
+          lit(HitsScale.toDouble)).as("authority"),
+        (col("hub_scaled").cast("double") /
+          lit(HitsScale.toDouble)).as("hub"))
+      .orderBy("user_id")
+  }
+
+  /** The HITS core: `nodes` has one `node` column (n rows, n > 0),
+    * `edges` is (src, dst, w) over those nodes. Output columns (node,
+    * auth_scaled, hub_scaled), UNSORTED.
+    *
+    * Variant: weighted adjacency, L1 normalization each half-step —
+    * power iteration converges to the principal singular pair under
+    * any fixed positive rescaling, and L1 keeps every step
+    * ALL-INTEGER: from h_0 = S div n, a_t = (Aᵀh_{t-1})·S div Σ and
+    * h_t = (A a_t)·S div Σ, with div floors identical on both engines
+    * (mirrored as a DuckDB recursive CTE). A zero sum (no edges)
+    * leaves the vector at 0. Overflow bound (the [[HitsScale]]
+    * sizing): Σa_raw ≤ S·maxOutW, and the normalize multiplies by S
+    * again, so the iteration needs maxOutW < 2⁶³/S² ≈ 9.2·10⁶
+    * weighted out-degree — guarded at runtime.
+    *
+    * Scale shape: the [[pagerankOf]] rounds. The edges are cut once
+    * and re-keyed to dense index pairs twice, partitioned by dst for
+    * the authority sums and by src for the hub sums; each half-step is
+    * one broadcast-vector job, and the normalize is a driver-side sum
+    * and floor over the gathered vector. Hub and authority vectors
+    * (2n longs, n < S) are the only state on the driver. */
+  private[graft] def hitsOf(nodes: DataFrame, edges: DataFrame, n: Long)
+      : DataFrame = {
+    require(n < HitsScale,
+      s"HITS init mass 10^6 div n floors to 0 at n=$n — raise " +
+        "HitsScale before running at this graph scale")
+    val s = nodes.sparkSession
+    val table = nodes.collect()
+    val (m, node) = (table.length, nodes.schema("node"))
+    val index = denseFrame(s, table, node, "i" -> Array.tabulate(m)(_.toLong))
+    val edgesCk = graft.Checkpointing.cut(edges)
+    val byDst = roundRelation(reindexed(edgesCk, index, "dst", "src", "w"))
+    val bySrc = roundRelation(reindexed(edgesCk, index, "src", "dst", "w"))
+    // weighted out-degree = A·1
+    val maxOutw = vectorRound(bySrc, Array.fill(m)(1L), m)(_ * _).max
+    require(maxOutw < (Long.MaxValue / HitsScale) / HitsScale,
+      s"HITS normalize overflows at weighted out-degree $maxOutw " +
+        s">= 2^63/HitsScale^2 — lower HitsScale (see Scaladoc)")
+    def l1(x: Array[Long]): Array[Long] = {
+      val total = x.sum
+      if (total == 0L) x else x.map(v => (v * HitsScale) / total)
     }
+    val (auth, hub) = driverRounds("hits",
+      (new Array[Long](m), Array.fill(m)(HitsScale / n)), HitsIters) {
+      case (_, h) =>
+        val a = l1(vectorRound(byDst, h, m)(_ * _))
+        (a, l1(vectorRound(bySrc, a, m)(_ * _)))
+    }
+    denseFrame(s, table, node, "auth_scaled" -> auth, "hub_scaled" -> hub)
   }
 
   /** The static PageRank relations: (share, danglingSrc). `share` is
@@ -1940,7 +1917,7 @@ object EventOps {
     * rows, the contract PrDanglingScaleSpec pins; `danglingSrc` is the
     * |dangling|-row source set whose rank mass folds to one scalar per
     * iteration. Exposed (package-private) so the spec can audit the
-    * relation the iteration actually joins. */
+    * relation the iteration actually reads. */
   private[graft] def pagerankShares(
       nodes: DataFrame, edges: DataFrame): (DataFrame, DataFrame) = {
     val outw = edges.groupBy("src").agg(sum(col("w")).as("tw"))
@@ -1949,96 +1926,152 @@ object EventOps {
         expr(s"(w * $PrEdgeScale) div tw").as("share"))
     val selfZero = nodes.select(col("node").as("src"),
       col("node").as("dst"), lit(0L).as("share"))
+    // a left join on the same `outw` as `real`, not an anti join on its
+    // keys: a plan that reads both then shuffles the edges' out-weights
+    // once
     val danglingSrc = nodes.select(col("node").as("src"))
-      .join(outw.select(col("src")), Seq("src"), "left_anti")
+      .join(outw, Seq("src"), "left").filter(col("tw").isNull)
+      .select(col("src"))
     (real.unionByName(selfZero), danglingSrc)
   }
 
   /** The iteration core: `nodes` has one `node` column, `edges` is
-    * (src, dst, w). Output columns (node, rank_scaled, rank),
-    * UNSORTED — callers rename and order. With a `baseRel`
-    * (node, base, is_seed) the teleport is personalized (TrustRank):
-    * the constant base term becomes the node's `base` column and the
-    * output gains `is_seed`. Dangling mass stays the uniform scalar
-    * either way; without a `baseRel` the plan joins no base
-    * relation. */
+    * (src, dst, w) over those nodes. Output columns (node, rank_scaled,
+    * rank), UNSORTED — callers rename and order. With a `baseRel`
+    * (node, base, is_seed), one row per node, the teleport is
+    * personalized (TrustRank): the node's `base` replaces the uniform
+    * base term and the output gains `is_seed`. Dangling mass stays the
+    * uniform scalar either way. `rounds` power rounds run; 0 stops
+    * after the static setup.
+    *
+    * The rank vector is held on the driver (round shape in
+    * [[evTypePagerank]]); each step is the integer floor and sum of
+    * the relational form, so the ranks are bit-identical to it
+    * (RankReferenceSpec recomputes them in plain `Long` arithmetic).
+    * A null node joins no edge in the relational form and gets no
+    * rank, so it is left out here too. */
   private[graft] def pagerankOf(nodes: DataFrame, edges: DataFrame,
-      n: Long, baseRel: Option[DataFrame] = None): DataFrame = {
+      n: Long, baseRel: Option[DataFrame] = None,
+      rounds: Int = PrIters): DataFrame = {
     require(n < PrEdgeScale,
       s"pagerank dangling share 10^6 div n floors to 0 at n=$n >= " +
         s"$PrEdgeScale nodes — raise PrEdgeScale before running at " +
         "this graph scale (see Scaladoc quantization bound)")
-    require(PrIters % 2 == 0, s"PrIters=$PrIters must be even: the " +
-      "fixpoint step runs two rounds")
+    val s = nodes.sparkSession
     val initRank = PrScale / n
     val baseRank = (PrScale * 15L / 100L) / n
     // uniform share a dangling node would give every node — quantized
     // ONCE, exactly as a materialized fan-out row's share would be
     val dShare = PrEdgeScale / n
-    val (shareRaw, danglingRaw) = pagerankShares(nodes, edges)
-    val allShare = shareRaw.transform(graft.Checkpointing.cut)
-    val danglingSrc = danglingRaw.transform(graft.Checkpointing.cut)
-    val baseCk = baseRel.map(graft.Checkpointing.cut(_))
-    val damped = s"($PrDampNum * (sumc + dmass)) div 100"
-    def powerRound(ranks: DataFrame): DataFrame = {
-      // dangling mass as ONE scalar: per-term floor (rank·s) div 10⁶
-      // matches the edge formula, so adding dmass into every node's
-      // contribution sum is bit-identical to the O(|dangling|·N)
-      // synthetic-edge fan-out it replaces
-      val dmass = danglingSrc
-        .join(ranks, danglingSrc("src") === ranks("node"))
-        .agg(coalesce(
-          sum(expr(s"(rank * $dShare) div $PrEdgeScale")),
-          lit(0L)).as("dmass"))
-      val summed = allShare
-        .join(ranks, allShare("src") === ranks("node"))
-        .groupBy(col("dst"))
-        .agg(sum(expr(s"(rank * share) div $PrEdgeScale")).as("sumc"))
-        .crossJoin(broadcast(dmass))
-      baseCk match {
-        case None => summed.select(col("dst").as("node"),
-          expr(s"$baseRank + $damped").as("rank"))
-        case Some(b) => summed.join(b, col("dst") === b("node"))
-          .select(col("node"), expr(s"base + $damped").as("rank"))
-      }
+    val table = baseRel.getOrElse(nodes).filter(col("node").isNotNull)
+      .collect()
+    val (m, node) = (table.length, nodes.schema("node"))
+    val index = denseFrame(s, table, node, "i" -> Array.tabulate(m)(_.toLong))
+    val (share, danglingSrc) =
+      pagerankShares(nodes, graft.Checkpointing.cut(edges))
+    // dangling mass as ONE scalar: each dangling source is one row into
+    // a virtual sink, index m, at the uniform share, so the sink's sum
+    // is Σ (rank·s) div 10⁶ — the edge formula's per-term floor — and
+    // adding it into every node's contribution sum is bit-identical to
+    // the O(|dangling|·N) synthetic-edge fan-out it replaces
+    val toSink = danglingSrc.join(indexOf(index, "src"), "src")
+      .select(lit(m.toLong).as("k"), col("src_i").as("f"),
+        lit(dShare).as("x"))
+    val byDst = roundRelation(
+      reindexed(share, index, "dst", "src", "share").unionByName(toSink))
+    val base = baseRel.fold(Array.fill(m)(baseRank))(
+      _ => table.map(_.getAs[Long]("base")))
+    val ranks = driverRounds(baseRel.fold("pagerank")(_ => "trustrank"),
+      Array.fill(m)(initRank), rounds) { r =>
+      val sums = vectorRound(byDst, r, m + 1)(
+        (rank, sh) => (rank * sh) / PrEdgeScale)
+      Array.tabulate(m)(
+        v => base(v) + (PrDampNum * (sums(v) + sums(m))) / 100L)
     }
-    // one fixpoint step = two rounds, so the lineage is cut every
-    // OTHER round: each eager cut is a full job, and at 8 rounds the
-    // checkpoint jobs dominated the query (measured 3.75 s on the
-    // 1.5k-node graph — overhead, not graph work). A depth-2 plan (two
-    // joins + two aggs) stays flat enough; arithmetic and result are
-    // bit-identical either way
-    val (ranks, _) = graft.Checkpointing.fixpoint(
-      baseCk.fold("pagerank")(_ => "trustrank"),
-      nodes.select(col("node"), lit(initRank).as("rank")), PrIters / 2)(
-      r => Some(powerRound(powerRound(r))))
-    val out = ranks.select(col("node"),
-      col("rank").as("rank_scaled"),
-      (col("rank").cast("double") / lit(PrScale.toDouble)).as("rank"))
-    baseCk.fold(out)(b => out.join(b.select(col("node"), col("is_seed")), "node"))
+    denseFrame(s, table, node, Seq("rank_scaled" -> ranks) ++
+        baseRel.map(_ => "is_seed" -> table.map(_.getAs[Long]("is_seed"))): _*)
+      .withColumn("rank",
+        col("rank_scaled").cast("double") / lit(PrScale.toDouble))
+  }
+
+  /** A driver-built frame over the collected node rows `table`: their
+    * `node` (typed `node`) and one non-null BIGINT column per named
+    * vector, row i holding element i. */
+  private def denseFrame(s: SparkSession, table: Array[Row],
+      node: StructField, cols: (String, Array[Long])*): DataFrame =
+    s.createDataFrame(
+      table.indices.map(i =>
+        Row.fromSeq(table(i).getAs[Any]("node") +: cols.map(_._2(i)))).asJava,
+      StructType(node +: cols.map(c => StructField(c._1, LongType, false))))
+
+  /** The (node, i) `index` relation with its columns renamed to
+    * (`c`, `c`_i), for joining on node column `c`. */
+  private def indexOf(index: DataFrame, c: String): DataFrame =
+    index.select(col("node").as(c), col("i").as(s"${c}_i"))
+
+  /** `rel` as (k, f, x) rows: the `key` and `from` node columns
+    * replaced by their `index` positions, `x` kept. */
+  private def reindexed(rel: DataFrame, index: DataFrame, key: String,
+      from: String, x: String): DataFrame =
+    rel.join(indexOf(index, key), key).join(indexOf(index, from), from)
+      .select(col(s"${key}_i").as("k"), col(s"${from}_i").as("f"),
+        col(x).as("x"))
+
+  /** The static side of [[vectorRound]]: (k, f, x) rows
+    * hash-partitioned on k and cut — so each key is summed in one
+    * partition, and reliable mode covers the relation every round
+    * reads. */
+  private def roundRelation(rel: DataFrame): RDD[(Long, Long, Long)] = {
+    val s = rel.sparkSession
+    import s.implicits._
+    rel.repartition(col("k")).transform(graft.Checkpointing.cut)
+      .as[(Long, Long, Long)].rdd
+  }
+
+  /** One round over a driver-held vector: `vec` is broadcast, each
+    * partition of `rel` sums `term(vec(f), x)` per key k, and the
+    * driver gathers the sums into a dense vector of `keys` entries (0
+    * for a key with no row). One job and no shuffle: `rel` is a
+    * [[roundRelation]] leaf. */
+  private def vectorRound(rel: RDD[(Long, Long, Long)], vec: Array[Long],
+      keys: Int)(term: (Long, Long) => Long): Array[Long] = {
+    val bc = rel.sparkContext.broadcast(vec)
+    try {
+      val out = new Array[Long](keys)
+      rel.mapPartitions { rows =>
+        val v = bc.value
+        val acc = scala.collection.mutable.LongMap.empty[Long]
+        rows.foreach { case (k, f, x) =>
+          acc(k) = acc.getOrElse(k, 0L) + term(v(f.toInt), x)
+        }
+        acc.iterator
+      }.collect().foreach { case (k, sum) => out(k.toInt) += sum }
+      out
+    } finally bc.destroy()
+  }
+
+  /** `rounds` steps of a driver-held iteration from `init`, reported
+    * by the stderr line [[graft.Checkpointing.fixpoint]] writes. */
+  private def driverRounds[T](name: String, init: T, rounds: Int)(
+      step: T => T): T = {
+    val t0 = System.nanoTime()
+    val out = (1 to rounds).foldLeft(init)((state, _) => step(state))
+    graft.Checkpointing.reportRounds(name, rounds, t0)
+    out
   }
 
   /** The user referral graph as DISTINCT UNDIRECTED edges `(u, v)`
     * with `u < v` — the same "who acted next in my event-type stream"
     * adjacency [[evUserPagerank]]/[[evUserHits]] rank over
-    * (lead window + engaged-source gate), symmetrized and
-    * self-loop-free. Shared by [[evUserTriangles]] and its spec. */
+    * ([[referrals]]), symmetrized and self-loop-free. Shared by
+    * [[evUserTriangles]] and its spec. */
   private[graft] def referralUndirected(s: SparkSession, d: String)
-      : DataFrame = {
-    val win = Window.partitionBy(col("event_type"))
-      .orderBy(col("ts_sec"), col("event_id"))
-    ev(s, d)
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        expr("unix_timestamp(ts)").as("ts_sec"))
-      .withColumn("next_user", lead(col("user_id"), 1).over(win))
-      .filter(col("next_user").isNotNull)
-      .filter(Hashing.charHash(col("user_id").cast("string")) % 10
-        < PrEngagedPct)
+      : DataFrame =
+    referrals(userEvents(s, d))
       .filter(col("user_id") =!= col("next_user"))
       .select(least(col("user_id"), col("next_user")).as("u"),
         greatest(col("user_id"), col("next_user")).as("v"))
       .distinct()
-  }
 
   /** Degree-ordered exact triangle counting core: takes distinct
     * undirected edges (`u` < `v`) and returns per-node degree,

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-import graft.operators.{DedupOps, SimilarityOps}
+import graft.operators.{DedupOps, EventOps, SimilarityOps}
 
 /** Round-11 durable-checkpoint seam ([[Checkpointing]]).
   *
@@ -25,8 +25,8 @@ class CheckpointingSpec extends SparkSpec {
   /** The iterative family: PageRank, TrustRank, CC, the delta-CC +
     * index-merge path (the delta query exercises the merge caches
     * too), HITS, k-core, Lloyd's k-means and PCA power iteration —
-    * every loop that runs in [[Checkpointing.fixpoint]], plus HITS's
-    * hand-rolled one. */
+    * every loop that runs in [[Checkpointing.fixpoint]], plus the
+    * driver-held rank vectors of PageRank, TrustRank and HITS. */
   private val IterativeGates = Seq(
     "ev_user_pagerank", "ev_user_trustrank",
     "dedup_components", "dedup_components_delta",
@@ -66,6 +66,26 @@ class CheckpointingSpec extends SparkSpec {
       resetCaches()
       deleteTree(dir)
     }
+  }
+
+  test("reliable mode: ev_user_pagerank cuts nothing per round — as " +
+      "many rdd-* dirs as a run that stops after its static setup") {
+    def dirsOf(rounds: Int): Int = {
+      val dir = tmpDir("graft-ckpt-rounds")
+      spark.conf.set(Checkpointing.DirKey, dir)
+      try {
+        assert(EventOps.userPagerank(rounds)(spark, Sf).collect().nonEmpty)
+        rddDirsUnder(dir).size
+      } finally {
+        spark.conf.unset(Checkpointing.DirKey)
+        deleteTree(dir)
+      }
+    }
+    val static = dirsOf(0)
+    assert(static > 0, "the static setup must cut in reliable mode")
+    assert(dirsOf(EventOps.PrIters) == static,
+      s"${EventOps.PrIters} rounds wrote checkpoints beyond the " +
+        s"$static of the static setup")
   }
 
   test("one cut in reliable mode writes exactly one checkpoint RDD " +
