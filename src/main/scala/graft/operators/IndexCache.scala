@@ -27,12 +27,14 @@ private[graft] object IndexCache {
   /** Unpersist the checkpoint-backed blocks behind `df` (the RDDs
     * inside `LogicalRDD` leaves). These are invisible to the
     * CacheManager, so `Dataset.unpersist()` can never free them —
-    * without this they stay pinned until JVM GC. */
+    * without this they stay pinned until JVM GC. Freed through
+    * [[org.apache.spark.GraftUnpersist]], which skips
+    * `RDD.unpersist`'s per-leaf lineage-truncation WARN. */
   private def freeCheckpoints(df: DataFrame): Unit = {
     scala.util.Try {
       df.queryExecution.optimizedPlan.foreach {
         case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.unpersist(blocking = false)
+          org.apache.spark.GraftUnpersist(l.rdd)
         case _ => ()
       }
     }

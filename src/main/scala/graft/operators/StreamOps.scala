@@ -2,9 +2,10 @@ package graft.operators
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.Exact._
 import graft.sources.Tables
@@ -14,7 +15,10 @@ import graft.sources.Tables
   * memory sink, `Trigger.AvailableNow`) over the events parquet, then
   * returns the materialized result for the driver's DuckDB compare —
   * proving the streaming path computes exactly what the equivalent
-  * batch SQL computes.
+  * batch SQL computes. Queries whose per-batch step is a batch engine
+  * (`foreachBatch`: the ingest gates, the sketch monitors, the
+  * ledgers) run through the one replay harness, [[replay]]; the rest
+  * drain into a memory sink ([[runToTable]]).
   *
   * Two aggregation modes are exercised:
   *  - complete mode where the batch oracle must see every group
@@ -76,7 +80,7 @@ object StreamOps {
     * `pathGlobFilter` keeps writer-metadata files (`_SUCCESS`, probe
     * sentinels) out of the listing. */
   private def tableStream(s: SparkSession, d: String, table: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
+      schema: StructType): DataFrame =
     s.readStream.schema(schema)
       .option("pathGlobFilter", "*.parquet")
       .option("maxFilesPerTrigger", MaxFilesPerTrigger.toString)
@@ -161,30 +165,77 @@ object StreamOps {
     f.delete(); ()
   }
 
-  /** Collect a foreachBatch run's temp-dir parquet output, shared by
-    * every foreachBatch-engine query. Reads with the EXPLICIT schema —
-    * an all-filtered run writes no part files, and schema inference on
-    * the empty dir would throw instead of yielding the correct empty
-    * result — then materializes (eager localCheckpoint cuts lineage
-    * back to the files) and deletes the dir so no Verify/test/bench
-    * run leaks it. Listing uses `File.listFiles`: the previous inline
-    * copies used `Files.list`, whose backing directory handle was
-    * never closed — one leaked fd per streaming query. */
-  private def collectBatchOutput(s: SparkSession, outDir: String,
-      schema: org.apache.spark.sql.types.StructType, orderCol: String)
-      : DataFrame = {
-    val parts = Option(new java.io.File(outDir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-    val hasParts = parts.exists(_.getName.endsWith(".parquet"))
-    val out =
-      if (!hasParts) s.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-      else s.read.schema(schema).parquet(outDir)
-        .orderBy(orderCol)
-        .transform(graft.Checkpointing.cut)
-    deleteRecursively(new java.io.File(outDir))
-    out
+  /** The finite-replay harness. Every `foreachBatch` query in this
+    * file runs through it: the dir-output gates ([[gateReplay]],
+    * [[streamVecDedup]]), the driver-fold monitors and the ledger
+    * queries ([[ledgerReplay]]). It owns four decisions.
+    *  1. Driving: `Trigger.AvailableNow` + `foreachBatch` +
+    *     [[awaitDrained]] happen here and nowhere else.
+    *  2. Temp-dir lifetime: each replay gets one fresh temp dir `root`.
+    *     Its output, ledger, state and compaction dirs are children of
+    *     `root`, and `root` is deleted in a `finally`, whether the
+    *     replay succeeds or throws. `perBatch(root)` is built before
+    *     the query starts; `readout(root)` runs after the drain and must
+    *     materialize (cut) what it returns before the dirs go.
+    *  3. Reading a dir back: [[readDir]] is the one reader.
+    *  4. Output schema: a gate reads its dir back with the schema of
+    *     the frame it writes ([[writtenSchema]]), so the read cannot
+    *     drift from the `select` that wrote the files. */
+  private[graft] def replay(stream: DataFrame)(
+      perBatch: String => (DataFrame, Long) => Unit)(
+      readout: String => DataFrame): DataFrame = {
+    val root = java.nio.file.Files.createTempDirectory("graft-replay")
+      .toString
+    try {
+      awaitDrained(stream.writeStream.trigger(Trigger.AvailableNow())
+        .foreachBatch(perBatch(root)).start())
+      readout(root)
+    } finally deleteRecursively(new java.io.File(root))
   }
+
+  /** Read a replay dir with the EXPLICIT schema, falling back to the
+    * correct empty relation when no batch ever appended a part file:
+    * schema inference on such a dir throws (`UNABLE_TO_INFER_SCHEMA`),
+    * and a readout must degrade to empty so that [[awaitDrained]] is
+    * what reports a real failure. */
+  private def readDir(s: SparkSession, dir: String,
+      schema: StructType): DataFrame = {
+    val parts = Option(new java.io.File(dir).listFiles())
+      .getOrElse(Array.empty[java.io.File])
+    if (!parts.exists(_.getName.endsWith(".parquet")))
+      s.createDataFrame(new java.util.ArrayList[Row](), schema)
+    else s.read.schema(schema).parquet(dir)
+  }
+
+  /** Schema of the frame `step` builds from one micro-batch of
+    * `stream`, taken from its analyzed plan over an empty batch of the
+    * stream's schema (analysis only: no job runs). */
+  private def writtenSchema(stream: DataFrame)(
+      step: DataFrame => DataFrame): StructType =
+    step(stream.sparkSession.createDataFrame(
+      new java.util.ArrayList[Row](), stream.schema)).schema
+
+  /** A stateless dir-output gate: `step` maps each micro-batch to the
+    * rows it appends to `root/out`, which are read back ordered by
+    * `orderCol` and cut. */
+  private def gateReplay(stream: DataFrame, orderCol: String)(
+      step: DataFrame => DataFrame): DataFrame = {
+    val schema = writtenSchema(stream)(step)
+    replay(stream)(root => (batch, _) =>
+      step(batch).write.mode("append").parquet(s"$root/out")) { root =>
+      readDir(stream.sparkSession, s"$root/out", schema)
+        .orderBy(orderCol).transform(graft.Checkpointing.cut)
+    }
+  }
+
+  /** A ledger query over the events stream: `batch` appends each
+    * micro-batch's partials to `root/state`; `readout` reads that dir
+    * and its result is cut. */
+  private def ledgerReplay(s: SparkSession, d: String)(
+      batch: (DataFrame, String) => Unit)(
+      readout: String => DataFrame): DataFrame =
+    replay(eventsStream(s, d))(root => (b, _) => batch(b, s"$root/state"))(
+      root => readout(s"$root/state").transform(graft.Checkpointing.cut))
 
   private def runToTable(s: SparkSession, df: DataFrame, mode: String)
       : DataFrame = {
@@ -602,46 +653,30 @@ object StreamOps {
       .select(col("user_id"), expr("unix_timestamp(ts)").as("t"),
         lit(0L).as("kind"), lit(-1L).as("event_id"))
       .transform(graft.Checkpointing.cut) // publish the static side once
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-stream-asof").toString
     val ordered = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id"))
       .orderBy(col("t"), col("kind"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
-    val q = eventsStream(s, d)
+    gateReplay(eventsStream(s, d)
       .filter(col("event_type") === "click")
       .select(col("event_id"), col("user_id"),
-        unix_timestamp(col("ts")).as("t"))
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val clicks = batch.select(col("user_id"), col("t"),
-          lit(1L).as("kind"), col("event_id"))
-        val touched = views.join(
-          clicks.select(col("user_id")).distinct(),
-          Seq("user_id"), "left_semi")
-        touched.unionByName(clicks)
-          .withColumn("view_t",
-            last(when(col("kind") === 0L, col("t")), ignoreNulls = true)
-              .over(ordered))
-          .filter(col("kind") === 1L)
-          .select(col("event_id"), col("user_id"),
-            col("t").as("click_ts_sec"),
-            coalesce(col("view_t"), lit(-1L)).as("view_ts_sec"),
-            coalesce(col("t") - col("view_t"), lit(-1L)).as("gap_sec"))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    awaitDrained(q)
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val schema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("user_id", LongType),
-      StructField("click_ts_sec", LongType),
-      StructField("view_ts_sec", LongType),
-      StructField("gap_sec", LongType)))
-    collectBatchOutput(s, outDir, schema, "event_id")
+        unix_timestamp(col("ts")).as("t")), "event_id") { batch =>
+      val clicks = batch.select(col("user_id"), col("t"),
+        lit(1L).as("kind"), col("event_id"))
+      val touched = views.join(
+        clicks.select(col("user_id")).distinct(),
+        Seq("user_id"), "left_semi")
+      touched.unionByName(clicks)
+        .withColumn("view_t",
+          last(when(col("kind") === 0L, col("t")), ignoreNulls = true)
+            .over(ordered))
+        .filter(col("kind") === 1L)
+        .select(col("event_id"), col("user_id"),
+          col("t").as("click_ts_sec"),
+          coalesce(col("view_t"), lit(-1L)).as("view_ts_sec"),
+          coalesce(col("t") - col("view_t"), lit(-1L)).as("gap_sec"))
+    }
   }
 
   /** readStream over the documents parquet ([[tableStream]], file- or
@@ -901,28 +936,26 @@ object StreamOps {
     def isNew(id: Column) =
       graft.functions.Hashing.charHash(id.cast("string")) % 10 === 7
     val corpus = SimilarityOps.upsertCorpus(s, d, isNew)
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-vec-dedup").toString
-    val ledgerDir = java.nio.file.Files
-      .createTempDirectory("graft-vec-ledger").toString
-    val q = embStream(s, d)
-      .filter(isNew(col("vec_id")))
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        vecDedupBatch(batch, corpus, ledgerDir, outDir)
-      }
-      .start()
-    awaitDrained(q)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("vec_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("bucket", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("cand_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("cos", org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("flag", org.apache.spark.sql.types.StringType)))
-    val out = collectBatchOutput(s, outDir, schema, "vec_id")
-      .orderBy("vec_id", "cand_id")
-    deleteRecursively(new java.io.File(ledgerDir))
-    out
+    val stream = embStream(s, d).filter(isNew(col("vec_id")))
+    val schema = writtenSchema(stream)(vecProbe(_, corpus))
+    replay(stream)(root => (batch, _) =>
+      vecDedupBatch(batch, corpus, s"$root/ledger", s"$root/out")) { root =>
+      readDir(s, s"$root/out", schema)
+        .orderBy("vec_id").transform(graft.Checkpointing.cut)
+    }.orderBy("vec_id", "cand_id")
+  }
+
+  /** The corpus probe of a set of `(vec_id, embedding)` rows: every
+    * same-bucket corpus hit with its exact cosine and near-dup flag —
+    * the rows [[vecDedupBatch]] writes. */
+  private def vecProbe(vecs: DataFrame, corpus: DataFrame): DataFrame = {
+    val cos = SimilarityOps.cosPre(
+      col("qe"), col("ce"), col("qn"), col("cn"))
+    SimilarityOps.probeRows(vecs.select(col("vec_id"), col("embedding")))
+      .join(corpus, Seq("bucket"))
+      .select(col("vec_id"), col("bucket"), col("cand_id"),
+        cos.as("cos"),
+        when(cos >= 0.35, "near_dup").otherwise("ok").as("flag"))
   }
 
   /** One micro-batch of the vector ingest collapse (the testable
@@ -931,10 +964,11 @@ object StreamOps {
     * fingerprints carry byte-identical embeddings — md5 of the packed
     * floats — so any member's embedding IS the group's embedding),
     * first-arrival admission across batches via the ledger anti-join,
-    * corpus probe on the survivors. The fresh set is materialized
-    * (lineage cut) BEFORE the ledger append — both downstream actions
-    * re-execute their plan, and a lazy `fresh` would re-read the
-    * just-appended ledger in its own anti-join and drop everything. */
+    * corpus probe on the survivors ([[vecProbe]]). The fresh set is
+    * materialized (lineage cut) BEFORE the ledger append — both
+    * downstream actions re-execute their plan, and a lazy `fresh`
+    * would re-read the just-appended ledger in its own anti-join and
+    * drop everything. */
   private[graft] def vecDedupBatch(batch: DataFrame, corpus: DataFrame,
       ledgerDir: String, outDir: String): Unit = {
     val s = batch.sparkSession
@@ -955,14 +989,7 @@ object StreamOps {
       })
     fresh.select(col("vec_fp"), timestamp_seconds(col("vec_id")).as("ts"))
       .write.mode("append").parquet(ledgerDir)
-    val cos = SimilarityOps.cosPre(
-      col("qe"), col("ce"), col("qn"), col("cn"))
-    SimilarityOps.probeRows(fresh.select(col("vec_id"), col("embedding")))
-      .join(corpus, Seq("bucket"))
-      .select(col("vec_id"), col("bucket"), col("cand_id"),
-        cos.as("cos"),
-        when(cos >= 0.35, "near_dup").otherwise("ok").as("flag"))
-      .write.mode("append").parquet(outDir)
+    vecProbe(fresh, corpus).write.mode("append").parquet(outDir)
     IndexCache.release(fresh)
   }
 
@@ -1032,43 +1059,12 @@ object StreamOps {
       .select(col("chunk_md5"), lit(-1L).as("owner"))
       // pre-cut: one df-cap rollup, not one per micro-batch
       .transform(graft.Checkpointing.cut)
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-cdc-strip").toString
-    val q = docsStream(s, d)
+    gateReplay(docsStream(s, d)
       .filter(isNew(col("doc_id")))
-      .select(col("doc_id"), col("text"))
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        DedupOps.cdcStripAgainst(batch, corpusOwned)
-          .write.mode("append").parquet(outDir)
-      }
-      .start()
-    awaitDrained(q)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_chunks", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_kept", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("clean_text", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("clean_len", org.apache.spark.sql.types.LongType)))
-    collectBatchOutput(s, outDir, schema, "doc_id")
+      .select(col("doc_id"), col("text")), "doc_id")(
+      DedupOps.cdcStripAgainst(_, corpusOwned))
   }
 
-  /** Unigram-frequency quality gate ON INGEST — the streaming mirror
-    * of `doc_unigram_score`'s filtering role: each incoming (is_new)
-    * document is scored against the CORPUS token-frequency relation
-    * (the static side — in production, yesterday's published count
-    * table) and routed admitted / quarantined by its OOV fraction:
-    * more than 25% never-seen tokens marks OCR soup, encoding junk,
-    * or an unknown language the batch tiers would waste work on (E6
-    * classify-and-route at the gate, like the other ingest gates).
-    * All accounting integer: n_oov·4 > n_tokens is the threshold, no
-    * division.
-    *
-    * Execution shape: `foreachBatch` + the batch scoring engine — the
-    * per-doc rollup groups only WITHIN the micro-batch each doc
-    * arrives in (docs arrive whole), so zero streaming state store,
-    * no watermark; cross-batch memory is strictly the static count
-    * relation, re-planned per micro-batch like every other gate. */
   /** STRATIFIED streaming weighted reservoir — the per-language form
     * of `stream_sample_weighted`, mirroring
     * [[TextOps.docSampleWeightedQuota]] exactly: within each
@@ -1089,39 +1085,35 @@ object StreamOps {
       r => (r._1, r._2))
     val merged = scala.collection.mutable.Map
       .empty[String, scala.collection.mutable.SortedSet[(Double, Long, String, Long)]]
-    val q = docsStream(s, d)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("lang"))
-          .orderBy(col("priority"), col("doc_id"))
-        val rows = TextOps.weightedPriority(batch)
-          .withColumn("rk", row_number().over(w))
-          .filter(col("rk") <= k)
-          .collect()
-          .map(r => (r.getAs[Double]("priority"), r.getAs[Long]("doc_id"),
-            r.getAs[String]("lang"), r.getAs[Long]("weight")))
-        merged.synchronized {
-          rows.foreach { r =>
-            val set = merged.getOrElseUpdate(r._3,
-              scala.collection.mutable.SortedSet.empty(ord))
-            set.add(r)
-            while (set.size > k) set.remove(set.last)
-          }
+    replay(docsStream(s, d)
+      .select(col("doc_id"), col("lang"), col("n_chars")))(_ => (batch, _) => {
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("lang"))
+        .orderBy(col("priority"), col("doc_id"))
+      val rows = TextOps.weightedPriority(batch)
+        .withColumn("rk", row_number().over(w))
+        .filter(col("rk") <= k)
+        .collect()
+        .map(r => (r.getAs[Double]("priority"), r.getAs[Long]("doc_id"),
+          r.getAs[String]("lang"), r.getAs[Long]("weight")))
+      merged.synchronized {
+        rows.foreach { r =>
+          val set = merged.getOrElseUpdate(r._3,
+            scala.collection.mutable.SortedSet.empty(ord))
+          set.add(r)
+          while (set.size > k) set.remove(set.last)
         }
-        ()
       }
-      .start()
-    awaitDrained(q)
-    import s.implicits._
-    merged.toSeq.flatMap { case (_, set) =>
-      set.toSeq.zipWithIndex.map { case ((p, id, lg, wt), i) =>
-        (id, lg, wt, p, (i + 1).toLong)
+    }) { _ =>
+      import s.implicits._
+      merged.toSeq.flatMap { case (_, set) =>
+        set.toSeq.zipWithIndex.map { case ((p, id, lg, wt), i) =>
+          (id, lg, wt, p, (i + 1).toLong)
+        }
       }
+        .toDF("doc_id", "lang", "weight", "priority", "rk")
+        .orderBy("lang", "rk")
     }
-      .toDF("doc_id", "lang", "weight", "priority", "rk")
-      .orderBy("lang", "rk")
   }
 
   /** TEMPLATE gate ON INGEST — the heavy-hitter tier's streaming
@@ -1147,45 +1139,43 @@ object StreamOps {
     val heavy = SketchOps.heavyGramsOf(
         Tables.documents(s, d).filter(!isNew(col("doc_id"))))
       .transform(graft.Checkpointing.cut)
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-template-gate").toString
-    val q = docsStream(s, d)
+    gateReplay(docsStream(s, d)
       .filter(isNew(col("doc_id")))
-      .select(col("doc_id"), col("text"))
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val dg = batch
-          .withColumn("toks", graft.functions.Hashing.tokens(col("text")))
-          .filter(size(col("toks")) >= 3)
-          .select(col("doc_id"),
-            explode(graft.functions.Hashing.shingles(col("toks")))
-              .as("g"))
-        dg.join(broadcast(heavy.withColumn("hit", lit(1L))),
-            Seq("g"), "left")
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_grams"),
-            sum(coalesce(col("hit"), lit(0L))).as("n_heavy"))
-          .select(col("doc_id"), col("n_grams"), col("n_heavy"),
-            when(col("n_heavy") * 2L > col("n_grams"),
-              "quarantined_template").otherwise("admitted")
-              .as("decision"))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    awaitDrained(q)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_grams",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_heavy",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("decision",
-        org.apache.spark.sql.types.StringType)))
-    collectBatchOutput(s, outDir, schema, "doc_id")
+      .select(col("doc_id"), col("text")), "doc_id") { batch =>
+      val dg = batch
+        .withColumn("toks", graft.functions.Hashing.tokens(col("text")))
+        .filter(size(col("toks")) >= 3)
+        .select(col("doc_id"),
+          explode(graft.functions.Hashing.shingles(col("toks")))
+            .as("g"))
+      dg.join(broadcast(heavy.withColumn("hit", lit(1L))),
+          Seq("g"), "left")
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_grams"),
+          sum(coalesce(col("hit"), lit(0L))).as("n_heavy"))
+        .select(col("doc_id"), col("n_grams"), col("n_heavy"),
+          when(col("n_heavy") * 2L > col("n_grams"),
+            "quarantined_template").otherwise("admitted")
+            .as("decision"))
+    }
   }
 
+  /** Unigram-frequency quality gate ON INGEST — the streaming mirror
+    * of `doc_unigram_score`'s filtering role: each incoming (is_new)
+    * document is scored against the CORPUS token-frequency relation
+    * (the static side — in production, yesterday's published count
+    * table) and routed admitted / quarantined by its OOV fraction:
+    * more than 25% never-seen tokens marks OCR soup, encoding junk,
+    * or an unknown language the batch tiers would waste work on (E6
+    * classify-and-route at the gate, like the other ingest gates).
+    * All accounting integer: n_oov·4 > n_tokens is the threshold, no
+    * division.
+    *
+    * Execution shape: `foreachBatch` + the batch scoring engine — the
+    * per-doc rollup groups only WITHIN the micro-batch each doc
+    * arrives in (docs arrive whole), so zero streaming state store,
+    * no watermark; cross-batch memory is strictly the static count
+    * relation, re-planned per micro-batch like every other gate. */
   val streamUnigramGate: Q = (s0, d) => {
     val s = replaySession(s0)
     def isNew(id: Column) =
@@ -1200,37 +1190,22 @@ object StreamOps {
         .as("token"))
       .groupBy("token").agg(count(lit(1)).as("tf"))
       .transform(graft.Checkpointing.cut)
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-unigram-gate").toString
-    val q = docsStream(s, d)
+    gateReplay(docsStream(s, d)
       .filter(isNew(col("doc_id")))
-      .select(col("doc_id"), col("text"))
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val dt = batch.select(col("doc_id"),
-          explode(graft.functions.Hashing.tokens(col("text")))
-            .as("token"))
-        dt.join(corpusTf, Seq("token"), "left")
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_tokens"),
-            sum(when(col("tf").isNull, 1L).otherwise(0L)).as("n_oov"),
-            min(col("tf")).as("mkt"))
-          .select(col("doc_id"), col("n_tokens"), col("n_oov"),
-            coalesce(col("mkt"), lit(0L)).as("min_known_tf"),
-            when(col("n_oov") * 4 > col("n_tokens"), "quarantined_oov")
-              .otherwise("admitted").as("decision"))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    awaitDrained(q)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_tokens", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_oov", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("min_known_tf", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("decision", org.apache.spark.sql.types.StringType)))
-    collectBatchOutput(s, outDir, schema, "doc_id")
+      .select(col("doc_id"), col("text")), "doc_id") { batch =>
+      val dt = batch.select(col("doc_id"),
+        explode(graft.functions.Hashing.tokens(col("text")))
+          .as("token"))
+      dt.join(corpusTf, Seq("token"), "left")
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_tokens"),
+          sum(when(col("tf").isNull, 1L).otherwise(0L)).as("n_oov"),
+          min(col("tf")).as("mkt"))
+        .select(col("doc_id"), col("n_tokens"), col("n_oov"),
+          coalesce(col("mkt"), lit(0L)).as("min_known_tf"),
+          when(col("n_oov") * 4 > col("n_tokens"), "quarantined_oov")
+            .otherwise("admitted").as("decision"))
+    }
   }
 
   /** Streaming mirror of [[TextOps.docTargetAffinity]]'s FILTERING
@@ -1257,31 +1232,16 @@ object StreamOps {
       Tables.documents(s, d).filter(!isNew(col("doc_id"))), col("lang")))
       // pre-cut: one model fit, not one per micro-batch
       .transform(graft.Checkpointing.cut)
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-affinity-gate").toString
-    val q = docsStream(s, d)
+    gateReplay(docsStream(s, d)
       .filter(isNew(col("doc_id")))
-      .select(col("doc_id"), col("text"))
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        TextOps.affinityCounters(
-            TextOps.affinityFeats(batch, col("doc_id")), model, "left",
-            Seq("doc_id"))
-          .select(col("doc_id"), col("n_feat"), col("n_pos"), col("n_neg"),
-            when(col("n_neg") > col("n_pos"), "quarantined_offtarget")
-              .otherwise("admitted").as("decision"))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    awaitDrained(q)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_feat", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_pos", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_neg", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("decision", org.apache.spark.sql.types.StringType)))
-    collectBatchOutput(s, outDir, schema, "doc_id")
+      .select(col("doc_id"), col("text")), "doc_id") { batch =>
+      TextOps.affinityCounters(
+          TextOps.affinityFeats(batch, col("doc_id")), model, "left",
+          Seq("doc_id"))
+        .select(col("doc_id"), col("n_feat"), col("n_pos"), col("n_neg"),
+          when(col("n_neg") > col("n_pos"), "quarantined_offtarget")
+            .otherwise("admitted").as("decision"))
+    }
   }
 
   /** Streaming mergeable histogram — the stream-side PROOF of
@@ -1322,38 +1282,22 @@ object StreamOps {
   val streamBloomGate: Q = (s0, d) => {
     val s = replaySession(s0)
     val bloom = SketchOps.bloomPositions(s, d)
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-bloom-gate").toString
-    val q = docsStream(s, d)
+    gateReplay(docsStream(s, d)
       .filter(SketchOps.isNew(col("doc_id")))
-      .select(col("doc_id"), col("text"))
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch
-          .select(col("doc_id"),
-            explode(SketchOps.posArray(
-              graft.functions.Hashing.charHash(col("text")),
-              SketchOps.BloomBits, SketchOps.BloomK)).as("pos"))
-          .join(broadcast(bloom), Seq("pos"), "left")
-          .groupBy("doc_id")
-          .agg(sum(coalesce(col("hit"), lit(0L))).as("n_pos_hit"))
-          .select(col("doc_id"), col("n_pos_hit"),
-            when(col("n_pos_hit") === SketchOps.BloomK,
-              "route_exact_tier")
-              .otherwise("admitted_new").as("decision"))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    awaitDrained(q)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_pos_hit",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("decision",
-        org.apache.spark.sql.types.StringType)))
-    collectBatchOutput(s, outDir, schema, "doc_id")
+      .select(col("doc_id"), col("text")), "doc_id") { batch =>
+      batch
+        .select(col("doc_id"),
+          explode(SketchOps.posArray(
+            graft.functions.Hashing.charHash(col("text")),
+            SketchOps.BloomBits, SketchOps.BloomK)).as("pos"))
+        .join(broadcast(bloom), Seq("pos"), "left")
+        .groupBy("doc_id")
+        .agg(sum(coalesce(col("hit"), lit(0L))).as("n_pos_hit"))
+        .select(col("doc_id"), col("n_pos_hit"),
+          when(col("n_pos_hit") === SketchOps.BloomK,
+            "route_exact_tier")
+            .otherwise("admitted_new").as("decision"))
+    }
   }
 
   /** Streaming Count-Min monitor — the ADDITIVE sibling of
@@ -1379,30 +1323,25 @@ object StreamOps {
     // so the fold tracks applied batch ids — the production pattern
     // for any additive sink.
     val applied = scala.collection.mutable.Set.empty[Long]
-    val q = docsStream(s, d)
-      .select(col("text"))
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cells = SketchOps.cmsMatrix(batch).collect()
-        merged.synchronized {
-          if (applied.add(batchId)) {
-            cells.foreach { r =>
-              val row = r.getAs[Int]("row")
-              val bucket = r.getAs[Long]("bucket").toInt
-              merged(row * width + bucket) += r.getAs[Long]("cnt")
-            }
+    replay(docsStream(s, d).select(col("text")))(_ => (batch, batchId) => {
+      val cells = SketchOps.cmsMatrix(batch).collect()
+      merged.synchronized {
+        if (applied.add(batchId)) {
+          cells.foreach { r =>
+            val row = r.getAs[Int]("row")
+            val bucket = r.getAs[Long]("bucket").toInt
+            merged(row * width + bucket) += r.getAs[Long]("cnt")
           }
         }
-        ()
       }
-      .start()
-    awaitDrained(q)
-    import s.implicits._
-    merged.toIndexedSeq.zipWithIndex
-      .collect { case (cnt, i) if cnt > 0L =>
-        (i / width, (i % width).toLong, cnt) }
-      .toDF("row", "bucket", "cnt")
-      .orderBy("row", "bucket")
+    }) { _ =>
+      import s.implicits._
+      merged.toIndexedSeq.zipWithIndex
+        .collect { case (cnt, i) if cnt > 0L =>
+          (i / width, (i % width).toLong, cnt) }
+        .toDF("row", "bucket", "cnt")
+        .orderBy("row", "bucket")
+    }
   }
 
   /** Streaming HLL distinct-token monitor — the sketch tier's ingest
@@ -1425,27 +1364,22 @@ object StreamOps {
   val streamHllMonitor: Q = (s0, d) => {
     val s = replaySession(s0)
     val merged = new Array[Long](SketchOps.HllRegisters.toInt)
-    val q = docsStream(s, d)
-      .select(col("text"))
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val regs = SketchOps.hllRegs(batch).collect()
-        merged.synchronized {
-          regs.foreach { r =>
-            val reg = r.getAs[Long]("reg").toInt
-            val rho = r.getAs[Long]("rho")
-            if (rho > merged(reg)) merged(reg) = rho
-          }
+    replay(docsStream(s, d).select(col("text")))(_ => (batch, _) => {
+      val regs = SketchOps.hllRegs(batch).collect()
+      merged.synchronized {
+        regs.foreach { r =>
+          val reg = r.getAs[Long]("reg").toInt
+          val rho = r.getAs[Long]("rho")
+          if (rho > merged(reg)) merged(reg) = rho
         }
-        ()
       }
-      .start()
-    awaitDrained(q)
-    import s.implicits._
-    val regDf = merged.toIndexedSeq.zipWithIndex
-      .collect { case (rho, reg) if rho > 0L => (reg.toLong, rho) }
-      .toDF("reg", "rho")
-    SketchOps.hllSummary(s, regDf)
+    }) { _ =>
+      import s.implicits._
+      val regDf = merged.toIndexedSeq.zipWithIndex
+        .collect { case (rho, reg) if rho > 0L => (reg.toLong, rho) }
+        .toDF("reg", "rho")
+      SketchOps.hllSummary(s, regDf)
+    }
   }
 
   /** Streaming KMV monitor — the k-minimum-values sibling of
@@ -1466,23 +1400,18 @@ object StreamOps {
   val streamKmvMonitor: Q = (s0, d) => {
     val s = replaySession(s0)
     val merged = scala.collection.mutable.SortedSet.empty[Long]
-    val q = docsStream(s, d)
-      .select(col("text"))
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val mins = SketchOps.kmvSample(SketchOps.shingleHashes(batch))
-          .collect().map(_.getLong(0))
-        merged.synchronized {
-          mins.foreach(merged.add)
-          while (merged.size > SketchOps.KmvK)
-            merged.remove(merged.last)
-        }
-        ()
+    replay(docsStream(s, d).select(col("text")))(_ => (batch, _) => {
+      val mins = SketchOps.kmvSample(SketchOps.shingleHashes(batch))
+        .collect().map(_.getLong(0))
+      merged.synchronized {
+        mins.foreach(merged.add)
+        while (merged.size > SketchOps.KmvK)
+          merged.remove(merged.last)
       }
-      .start()
-    awaitDrained(q)
-    import s.implicits._
-    SketchOps.kmvSummary(merged.toSeq.toDF("h"))
+    }) { _ =>
+      import s.implicits._
+      SketchOps.kmvSummary(merged.toSeq.toDF("h"))
+    }
   }
 
   /** Streaming weighted reservoir — priority sampling's ingest form,
@@ -1510,49 +1439,27 @@ object StreamOps {
       r => (r._1, r._2))
     val merged =
       scala.collection.mutable.SortedSet.empty[(Double, Long, String, Long)](ord)
-    val q = docsStream(s, d)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val rows = TextOps.weightedPriority(batch)
-          .orderBy(col("priority"), col("doc_id")).limit(k)
-          .collect()
-          .map(r => (r.getAs[Double]("priority"), r.getAs[Long]("doc_id"),
-            r.getAs[String]("lang"), r.getAs[Long]("weight")))
-        merged.synchronized {
-          rows.foreach(merged.add)
-          while (merged.size > k) merged.remove(merged.last)
-        }
-        ()
+    replay(docsStream(s, d)
+      .select(col("doc_id"), col("lang"), col("n_chars")))(_ => (batch, _) => {
+      val rows = TextOps.weightedPriority(batch)
+        .orderBy(col("priority"), col("doc_id")).limit(k)
+        .collect()
+        .map(r => (r.getAs[Double]("priority"), r.getAs[Long]("doc_id"),
+          r.getAs[String]("lang"), r.getAs[Long]("weight")))
+      merged.synchronized {
+        rows.foreach(merged.add)
+        while (merged.size > k) merged.remove(merged.last)
       }
-      .start()
-    awaitDrained(q)
-    import s.implicits._
-    merged.toSeq.map { case (p, id, lang, w) => (id, lang, w, p) }
-      .toDF("doc_id", "lang", "weight", "priority")
-      .orderBy("priority", "doc_id")
+    }) { _ =>
+      import s.implicits._
+      merged.toSeq.map { case (p, id, lang, w) => (id, lang, w, p) }
+        .toDF("doc_id", "lang", "weight", "priority")
+        .orderBy("priority", "doc_id")
+    }
   }
 
   /** Group size of the streamed top-k ledger. */
   val StreamTopkK = 3L
-
-  /** Read a parquet ledger with its EXPLICIT schema, falling back to
-    * the correct empty relation when no batch ever appended a part
-    * file — the [[collectBatchOutput]] discipline applied to the
-    * state-dir readouts. Round 11's topk readout inferred instead and
-    * crashed (`UNABLE_TO_INFER_SCHEMA`) the moment the source bug
-    * delivered an empty stream; a readout must degrade to empty, not
-    * throw, so the harness assertion ([[awaitDrained]]) is what
-    * reports the real failure. */
-  private[graft] def readLedger(s: SparkSession, dir: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val parts = Option(new java.io.File(dir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-    if (!parts.exists(_.getName.endsWith(".parquet")))
-      s.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    else s.read.schema(schema).parquet(dir)
-  }
 
   /** State schema of [[topkValueBatch]]'s ledger: `sum(DECIMAL(12,2))`
     * widens to DECIMAL(22,2). */
@@ -1592,24 +1499,12 @@ object StreamOps {
     * statement that batch boundaries cannot leak into the result. */
   val streamTopkValue: Q = (s0, d) => {
     val s = replaySession(s0)
-    val stateDir = java.nio.file.Files
-      .createTempDirectory("graft-topk-state").toString
-    val q = eventsStream(s, d)
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        topkValueBatch(batch, stateDir)
-      }
-      .start()
-    awaitDrained(q)
-    val out = topkValueReadout(s, stateDir)
-      .transform(graft.Checkpointing.cut)
-    deleteRecursively(new java.io.File(stateDir))
-    out
+    ledgerReplay(s, d)(topkValueBatch)(topkValueReadout(s, _))
   }
 
   /** Ledger compaction for [[streamTopkValue]]: merge the per-batch
     * decimal partials, rank per type. Explicit-schema readout
-    * ([[readLedger]]) — an untouched state dir compacts to the
+    * ([[readDir]]) — an untouched state dir compacts to the
     * correct EMPTY ranking. Split out so the spec can drive manual
     * micro-batches (and the empty case) through the same readout. */
   private[graft] def topkValueReadout(s: SparkSession, stateDir: String)
@@ -1617,7 +1512,7 @@ object StreamOps {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("event_type"))
       .orderBy(col("tv").desc, col("user_id"))
-    readLedger(s, stateDir, TopkStateSchema)
+    readDir(s, stateDir, TopkStateSchema)
       .groupBy(col("event_type"), col("user_id"))
       .agg(sum(col("tv")).as("tv"))
       .withColumn("rank", row_number().over(w).cast("long"))
@@ -1637,17 +1532,23 @@ object StreamOps {
     * back to the ledger's canonical DECIMAL(22,2) — exact (decimal
     * addition never leaves (22,2) at any corpus this side of 10^20
     * cents), so a compacted ledger is indistinguishable to the
-    * readout by construction. Returns the compacted dir. */
+    * readout by construction. Returns the compacted dir
+    * ([[writeCompacted]]). */
   private[graft] def compactTopkLedger(s: SparkSession, stateDir: String)
-      : String = {
-    val compactDir = java.nio.file.Files
-      .createTempDirectory("graft-topk-compact").toString
-    readLedger(s, stateDir, TopkStateSchema)
+      : String =
+    writeCompacted(stateDir, readDir(s, stateDir, TopkStateSchema)
       .groupBy(col("event_type"), col("user_id"))
       .agg(sum(col("tv")).cast(
-        org.apache.spark.sql.types.DecimalType(22, 2)).as("tv"))
-      .write.mode("overwrite").parquet(compactDir)
-    compactDir
+        org.apache.spark.sql.types.DecimalType(22, 2)).as("tv")))
+
+  /** Write a compacted ledger to `<stateDir>-compact` — beside the
+    * state dir, so inside the replay's root when [[replay]] runs it —
+    * and return that dir. */
+  private def writeCompacted(stateDir: String, merged: DataFrame)
+      : String = {
+    val dir = s"$stateDir-compact"
+    merged.write.mode("overwrite").parquet(dir)
+    dir
   }
 
   /** Ledger-compaction lifecycle (`stream_topk_compact`): run the
@@ -1662,21 +1563,8 @@ object StreamOps {
     * ([[topkValueReadout]]). */
   val streamTopkCompact: Q = (s0, d) => {
     val s = replaySession(s0)
-    val stateDir = java.nio.file.Files
-      .createTempDirectory("graft-topk-state2").toString
-    val q = eventsStream(s, d)
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        topkValueBatch(batch, stateDir)
-      }
-      .start()
-    awaitDrained(q)
-    val compactDir = compactTopkLedger(s, stateDir)
-    val out = topkValueReadout(s, compactDir)
-      .transform(graft.Checkpointing.cut)
-    deleteRecursively(new java.io.File(stateDir))
-    deleteRecursively(new java.io.File(compactDir))
-    out
+    ledgerReplay(s, d)(topkValueBatch)(
+      st => topkValueReadout(s, compactTopkLedger(s, st)))
   }
 
   /** One micro-batch of the streaming decayed-value ledger: the
@@ -1717,7 +1605,7 @@ object StreamOps {
     * cents. */
   private[graft] def decayedValueReadout(s: SparkSession,
       stateDir: String): DataFrame = {
-    val led = readLedger(s, stateDir, DecayStateSchema)
+    val led = readDir(s, stateDir, DecayStateSchema)
       .groupBy(col("user_id"), col("day"))
       .agg(sum(col("cents")).as("cents"), sum(col("n")).as("n"))
     val maxd = led.agg(max(col("day")).as("maxd"))
@@ -1744,17 +1632,12 @@ object StreamOps {
     * Day partials are decay-agnostic (the shift applies at readout
     * against the ledger max day), so compaction commutes with any
     * future ingest and the readout is bit-identical by integer-sum
-    * associativity. Returns the compacted dir. */
+    * associativity. Returns the compacted dir ([[writeCompacted]]). */
   private[graft] def compactDecayLedger(s: SparkSession, stateDir: String)
-      : String = {
-    val compactDir = java.nio.file.Files
-      .createTempDirectory("graft-decay-compact").toString
-    readLedger(s, stateDir, DecayStateSchema)
+      : String =
+    writeCompacted(stateDir, readDir(s, stateDir, DecayStateSchema)
       .groupBy(col("user_id"), col("day"))
-      .agg(sum(col("cents")).as("cents"), sum(col("n")).as("n"))
-      .write.mode("overwrite").parquet(compactDir)
-    compactDir
-  }
+      .agg(sum(col("cents")).as("cents"), sum(col("n")).as("n")))
 
   /** Ledger-compaction lifecycle for the decayed-value state
     * (`stream_decayed_compact`): ingest → [[compactDecayLedger]] →
@@ -1766,21 +1649,8 @@ object StreamOps {
     * O(batches × users-touched-per-batch)). */
   val streamDecayedCompact: Q = (s0, d) => {
     val s = replaySession(s0)
-    val stateDir = java.nio.file.Files
-      .createTempDirectory("graft-decay-state2").toString
-    val q = eventsStream(s, d)
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        decayedValueBatch(batch, stateDir)
-      }
-      .start()
-    awaitDrained(q)
-    val compactDir = compactDecayLedger(s, stateDir)
-    val out = decayedValueReadout(s, compactDir)
-      .transform(graft.Checkpointing.cut)
-    deleteRecursively(new java.io.File(stateDir))
-    deleteRecursively(new java.io.File(compactDir))
-    out
+    ledgerReplay(s, d)(decayedValueBatch)(
+      st => decayedValueReadout(s, compactDecayLedger(s, st)))
   }
 
   /** Streaming decayed user value (`stream_decayed_value`) — the
@@ -1798,19 +1668,7 @@ object StreamOps {
     * state is O(users × days) however long the stream runs. */
   val streamDecayedValue: Q = (s0, d) => {
     val s = replaySession(s0)
-    val stateDir = java.nio.file.Files
-      .createTempDirectory("graft-decay-state").toString
-    val q = eventsStream(s, d)
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        decayedValueBatch(batch, stateDir)
-      }
-      .start()
-    awaitDrained(q)
-    val out = decayedValueReadout(s, stateDir)
-      .transform(graft.Checkpointing.cut)
-    deleteRecursively(new java.io.File(stateDir))
-    out
+    ledgerReplay(s, d)(decayedValueBatch)(decayedValueReadout(s, _))
   }
 
   val defs: Map[String, Q] = Map(

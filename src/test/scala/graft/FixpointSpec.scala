@@ -57,6 +57,43 @@ class FixpointSpec extends SparkSpec {
     graft.operators.IndexCache.release(out)
   }
 
+  test("releasing superseded local-checkpoint state logs no " +
+      "lineage-truncation WARN") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import scala.jdk.CollectionConverters._
+    assert(spark.conf.get(Checkpointing.DirKey, "").isEmpty,
+      "the run must cut with localCheckpoint")
+    assert(LogManager.getLogger("org.apache.spark.rdd.MapPartitionsRDD")
+      .isEnabled(Level.WARN), "WARN must reach the capture")
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("fixpoint-warn-capture", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) {
+          warns.add(e.getMessage.getFormattedMessage); ()
+        }
+    }
+    capture.start()
+    val root = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      .getRootLogger
+    root.addAppender(capture)
+    val (out, rounds) = try {
+      Checkpointing.fixpoint("spec-quiet", spark.range(0, 10).toDF("x"), 4)(
+        d => Some(d.selectExpr("x + 1 as x")))
+    } finally {
+      root.removeAppender(capture)
+      capture.stop()
+    }
+    assert(rounds == 4 && xs(out) == (4L to 13L))
+    val truncation =
+      warns.asScala.filter(_.contains("was locally checkpointed"))
+    assert(truncation.isEmpty, s"release logged: $truncation")
+    graft.operators.IndexCache.release(out)
+  }
+
   test("a zero-round convergence returns init, uncut") {
     val dir = tmpDir("graft-fixpoint-zero")
     spark.conf.set(Checkpointing.DirKey, dir)

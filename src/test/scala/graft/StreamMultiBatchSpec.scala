@@ -1,6 +1,11 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.GraftListenerFlush
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
 
 import graft.operators.StreamOps
 
@@ -15,7 +20,9 @@ import graft.operators.StreamOps
   *  - a table written as a DIRECTORY of part files streams the same
   *    rows as the single-file form, across MULTIPLE micro-batches
   *    (part count > maxFilesPerTrigger), with the cross-batch ledger
-  *    anti-join actually exercised (`stream_vec_dedup`);
+  *    anti-join actually exercised (`stream_vec_dedup`), and the
+  *    parquet-append gates (`stream_asof`, `stream_unigram_gate`)
+  *    appending every batch's rows rather than keeping the last;
   *  - a replay that drains zero source rows FAILS LOUDLY instead of
   *    returning an empty "success".
   */
@@ -65,8 +72,42 @@ class StreamMultiBatchSpec extends SparkSpec {
     assert(multi.toSeq == single.toSeq)
   }
 
+  /** Runs `body` and also returns the number of micro-batches that
+    * read rows from a file source under `dir`, counted from the
+    * streaming progress events. */
+  private def countingBatches[T](dir: String)(body: => T): (T, Int) = {
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case p: QueryProgressEvent if p.progress.sources.exists(src =>
+            src.description.contains(dir) && src.numInputRows > 0) =>
+          n.incrementAndGet(); ()
+        case _ => ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    val out = try body finally {
+      GraftListenerFlush.flush(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(l)
+    }
+    (out, n.get)
+  }
+
+  for ((name, table, query) <- Seq(
+      ("stream_asof", "events", StreamOps.streamAsof),
+      ("stream_unigram_gate", "documents", StreamOps.streamUnigramGate)))
+    test(s"a directory-shaped $table table appends every micro-batch: " +
+        s"$name over >= 3 batches equals the single-file run") {
+      val single = query(spark, Sf).collect()
+      val (multi, batches) =
+        countingBatches(multiDir)(query(spark, multiDir).collect())
+      assert(batches >= 3, s"expected >= 3 micro-batches, saw $batches")
+      assert(single.nonEmpty)
+      assert(multi.toSeq == single.toSeq)
+    }
+
   test("a directory-shaped documents table streams every row through " +
-      "a foreachBatch gate (pii)") {
+      "a memory-sink gate (pii)") {
     val single = StreamOps.streamPiiGate(spark, Sf).collect()
     val multi = StreamOps.streamPiiGate(spark, multiDir).collect()
     assert(single.nonEmpty)
