@@ -1,16 +1,23 @@
 package graft
 
-import org.apache.spark.sql.Dataset
+import scala.jdk.CollectionConverters._
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.IndexCache
 
 /** The engine's single lineage-cut seam.
   *
   * Every iterative operator family whose state is a relation
-  * (connected-component propagation, k-core peeling, PCA power
-  * iteration, Lloyd's k-means, index append/compact lifecycles) must
-  * cut lineage between rounds or the logical plan grows O(rounds)
-  * deep. Through round 10 every cut was `localCheckpoint(true)`:
+  * (connected-component propagation, k-core peeling, Lloyd's
+  * k-means, index append/compact lifecycles) must cut lineage between
+  * rounds or the logical plan grows O(rounds) deep. Through round 10
+  * every cut was `localCheckpoint(true)`:
   * correct and fast, but executor-LOCAL — the checkpoint blocks live
   * only in executor storage, so on a real cluster one executor loss
   * mid-iteration makes the truncated lineage unrecoverable and fails
@@ -31,16 +38,24 @@ import graft.operators.IndexCache
   * across modes, and pins that reliable mode writes exactly one
   * checkpoint RDD directory per cut).
   *
-  * Iterative loops whose state is a relation — k-core peeling,
-  * connected-component propagation, PCA power iteration and Lloyd's
-  * k-means — go through [[fixpoint]], the one loop that cuts each
-  * round's state, frees the superseded state and counts rounds; an
-  * operator supplies only its step (FixpointSpec pins the cut and
-  * release contract). PageRank, TrustRank and HITS iterate
-  * driver-held vectors of fewer than 10⁶ longs instead (one narrow job
-  * per round, see `EventOps.pagerankOf`): they cut only their static
-  * relations, never a round. Every iterative run reports itself
-  * through [[reportRounds]].
+  * This object is also the engine's one iteration seam, in two forms:
+  *  - Loops whose state is a relation — k-core peeling,
+  *    connected-component propagation and Lloyd's k-means — go through
+  *    [[fixpoint]], the one loop that cuts each round's state, frees
+  *    the superseded state and counts rounds; an operator supplies
+  *    only its step (FixpointSpec pins the cut and release contract).
+  *  - Loops whose state is small enough to hold on the driver —
+  *    PageRank, TrustRank and HITS (vectors of fewer than 10⁶ longs),
+  *    PCA power iteration (one d-vector) and the MMR greedy picks (a
+  *    fixed-size shortlist) — run [[driverRounds]]. A distributed
+  *    round is one [[vectorRound]]: one broadcast and one narrow job
+  *    over a [[roundRelation]] that was cut once, so these loops cut
+  *    only their static relations, never a round. Their results come
+  *    back as a [[sortedFrame]], already in presentation order.
+  *
+  * The per-round cost of a relational round is coordination, not work
+  * (Drizzle, SOSP'17): about a dozen jobs of ≤ 20 ms task work each.
+  * Every iterative run reports itself through [[reportRounds]].
   *
   * Storage hygiene: [[graft.operators.IndexCache.release]] frees
   * executor BLOCKS behind a cut in either mode; reliable-mode FILES
@@ -102,6 +117,64 @@ object Checkpointing {
     reportRounds(name, rounds, t0)
     (out, rounds)
   }
+
+  /** `rounds` steps of a driver-held iteration from `init`, reported
+    * by the stderr line [[fixpoint]] writes. */
+  def driverRounds[T](name: String, init: T, rounds: Int)(step: T => T): T = {
+    val t0 = System.nanoTime()
+    val out = (1 to rounds).foldLeft(init)((state, _) => step(state))
+    reportRounds(name, rounds, t0)
+    out
+  }
+
+  /** The static side of [[vectorRound]]: `rel` [[cut]] once and read
+    * by ordinal as `R` rows — reliable mode then covers the relation
+    * every round reads. A fold that needs all rows of a key in one
+    * partition gets `rel` partitioned on that key. */
+  def roundRelation[R <: Product : TypeTag](rel: DataFrame): RDD[R] =
+    cut(rel).as[R](Encoders.product[R]).rdd
+
+  /** One round over a driver-held vector: `vec` is broadcast, `fold`
+    * turns each partition of `rel` into (key, partial) pairs, and the
+    * driver adds the partials into a dense vector of `keys` entries (0
+    * for a key with no pair), failing on overflow like ANSI `sum`. One
+    * job and no shuffle: `rel` is a [[roundRelation]] leaf. */
+  def vectorRound[R](rel: RDD[R], vec: Array[Long], keys: Int)(
+      fold: (Array[Long], Iterator[R]) => Iterator[(Int, Long)])
+      : Array[Long] = {
+    val bc = rel.sparkContext.broadcast(vec)
+    try {
+      val out = new Array[Long](keys)
+      rel.mapPartitions(rows => fold(bc.value, rows)).collect()
+        .foreach { case (k, part) => out(k) = Math.addExact(out(k), part) }
+      out
+    } finally bc.destroy()
+  }
+
+  /** A driver-built frame of `rows` under `schema`, in presentation
+    * order: sorted on the driver by Spark's ascending order of the
+    * first `keys` columns (`RowOrdering`: nulls first, strings by
+    * UTF-8 bytes, doubles by `SQLOrderingUtil`), the order `orderBy`
+    * on them gives, so no Sort is planned over the frame. */
+  def sortedFrame(s: SparkSession, schema: StructType, keys: Int,
+      rows: Seq[Row]): DataFrame = {
+    val internal = CatalystTypeConverters.createToCatalystConverter(schema)
+    val order = RowOrdering.createNaturalAscendingOrdering(
+      schema.take(keys).map(_.dataType).toSeq)
+    val sorted = rows.map(r => internal(r).asInstanceOf[InternalRow] -> r)
+      .sortWith((a, b) => order.compare(a._1, b._1) < 0).map(_._2)
+    s.createDataFrame(sorted.asJava, schema)
+  }
+
+  /** A [[sortedFrame]] keyed by the `key` column of the collected rows
+    * `table`: row i holds that value of `table(i)` and element i of
+    * each named vector, as a non-null BIGINT column. */
+  def denseFrame(s: SparkSession, table: Array[Row], key: StructField,
+      cols: (String, Array[Long])*): DataFrame =
+    sortedFrame(s,
+      StructType(key +: cols.map(c => StructField(c._1, LongType, false))),
+      1, table.indices.map(i =>
+        Row.fromSeq(table(i).getAs[Any](key.name) +: cols.map(_._2(i)))))
 
   /** Writes the one stderr line of an iterative run that started at
     * `t0` (`System.nanoTime`):

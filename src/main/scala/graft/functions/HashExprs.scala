@@ -770,20 +770,8 @@ case class FloatDot(left: Expression, right: Expression)
       (left, HashExprs.isFloatArray, "ARRAY<FLOAT>"),
       (right, HashExprs.isFloatArray, "ARRAY<FLOAT>"))
 
-  protected override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (y.numElements() != n) return null
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      s += x.getFloat(i).toDouble * y.getFloat(i).toDouble
-      i += 1
-    }
-    s
-  }
+  protected override def nullSafeEval(a: Any, b: Any): Any =
+    FloatDot.fold(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -806,6 +794,25 @@ case class FloatDot(left: Expression, right: Expression)
   protected override def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object FloatDot {
+  /** The fold behind [[FloatDot]], for the interpreted path and for
+    * driver code over collected arrays: Σ x_i·y_i in element order, in
+    * double; null when the lengths differ or any paired element is
+    * null. */
+  def fold(x: ArrayData, y: ArrayData): java.lang.Double = {
+    val n = x.numElements()
+    if (y.numElements() != n) return null
+    var s = 0.0
+    var i = 0
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      s += x.getFloat(i).toDouble * y.getFloat(i).toDouble
+      i += 1
+    }
+    s
+  }
 }
 
 /** `sqDist(array<float>, array<double>) -> double`: sequential-order

@@ -1,13 +1,12 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.Checkpointing.{denseFrame, driverRounds, roundRelation,
+  vectorRound}
 import graft.functions.Exact._
 import graft.functions.Hashing
 import graft.sources.Tables
@@ -1675,12 +1674,15 @@ object EventOps {
     * the [[PrIters]] rounds then broadcasts the rank vector, sums
     * (rank·share) div 10⁶ per destination inside each partition, and
     * gathers the N + 1 sums on the driver, which adds the sink's sum
-    * (D) to every node's and damps. The relational form ran a join + aggregate + cut per
-    * round, about a dozen jobs each of ≤ 20 ms task work: per-round
-    * scheduling, not graph work, bounded the query (Drizzle, SOSP'17).
-    * Edges stay distributed; only the rank vector crosses the driver,
-    * and the final (node, rank) frame is built from it. That state is
-    * N longs, N < 10⁶ by the guard below: at most 8 MB.
+    * (D) to every node's and damps. These are the
+    * [[graft.Checkpointing]] driver rounds: a relational round (join +
+    * aggregate + cut) ran about a dozen jobs each of ≤ 20 ms task work,
+    * so per-round scheduling, not graph work, bounded the query
+    * (Drizzle, SOSP'17). Edges stay distributed; only the rank vector
+    * crosses the driver, and the final (node, rank) frame is built from
+    * it, sorted on the driver ([[graft.Checkpointing.sortedFrame]]), so
+    * the query plans no Sort. That state is N longs, N < 10⁶ by the
+    * guard below: at most 8 MB.
     *
     * Quantization bound: the dangling share s = 10⁶ div N floors to 0
     * once N > 10⁶ — at that point dangling mass would silently drop.
@@ -1711,7 +1713,6 @@ object EventOps {
       pagerankOf(nodes, edges, n)
         .select(col("node").as("event_type"), col("rank_scaled"),
           col("rank"))
-        .orderBy("event_type")
     }
   }
 
@@ -1784,7 +1785,6 @@ object EventOps {
       pagerankOf(nodes, referralEdges(events), n, rounds = rounds)
         .select(col("node").as("user_id"), col("rank_scaled"),
           col("rank"))
-        .orderBy("user_id")
   }
 
   /** Trust-seed gate for [[evUserTrustrank]]: hash residue 3 (≈10% of
@@ -1811,7 +1811,8 @@ object EventOps {
     val (nodes, n) = nodesOf(events.select(col("user_id").as("node")))
     val isSeed = Hashing.charHash(col("node").cast("string")) % 10 ===
       PrSeedResidue
-    val w = nodes.filter(isSeed).count()
+    // counted over the leaf's rows, as in `nodesOf`: one narrow job
+    val w = nodes.filter(isSeed).rdd.count()
     if (n == 0L || w == 0L)
       nodes.select(col("node").as("user_id"),
         lit(0L).as("rank_scaled"), lit(0.0).as("rank"),
@@ -1824,7 +1825,6 @@ object EventOps {
       pagerankOf(nodes, referralEdges(events), n, Some(baseRel))
         .select(col("node").as("user_id"), col("rank_scaled"),
           col("rank"), col("is_seed"))
-        .orderBy("user_id")
     }
   }
 
@@ -1858,12 +1858,11 @@ object EventOps {
           lit(HitsScale.toDouble)).as("authority"),
         (col("hub_scaled").cast("double") /
           lit(HitsScale.toDouble)).as("hub"))
-      .orderBy("user_id")
   }
 
   /** The HITS core: `nodes` has one `node` column (n rows, n > 0),
     * `edges` is (src, dst, w) over those nodes. Output columns (node,
-    * auth_scaled, hub_scaled), UNSORTED.
+    * auth_scaled, hub_scaled), sorted by node.
     *
     * Variant: weighted adjacency, L1 normalization each half-step —
     * power iteration converges to the principal singular pair under
@@ -1879,9 +1878,11 @@ object EventOps {
     * Scale shape: the [[pagerankOf]] rounds. The edges are cut once
     * and re-keyed to dense index pairs twice, partitioned by dst for
     * the authority sums and by src for the hub sums; each half-step is
-    * one broadcast-vector job, and the normalize is a driver-side sum
-    * and floor over the gathered vector. Hub and authority vectors
-    * (2n longs, n < S) are the only state on the driver. */
+    * one [[graft.Checkpointing.vectorRound]] job, and the normalize is
+    * a driver-side sum and floor over the gathered vector. Hub and
+    * authority vectors (2n longs, n < S) are the only state on the
+    * driver, and the result frame is built from them already sorted by
+    * node. */
   private[graft] def hitsOf(nodes: DataFrame, edges: DataFrame, n: Long)
       : DataFrame = {
     require(n < HitsScale,
@@ -1892,10 +1893,11 @@ object EventOps {
     val (m, node) = (table.length, nodes.schema("node"))
     val index = denseFrame(s, table, node, "i" -> Array.tabulate(m)(_.toLong))
     val edgesCk = graft.Checkpointing.cut(edges)
-    val byDst = roundRelation(reindexed(edgesCk, index, "dst", "src", "w"))
-    val bySrc = roundRelation(reindexed(edgesCk, index, "src", "dst", "w"))
+    val byDst = byKey(reindexed(edgesCk, index, "dst", "src", "w"))
+    val bySrc = byKey(reindexed(edgesCk, index, "src", "dst", "w"))
     // weighted out-degree = A·1
-    val maxOutw = vectorRound(bySrc, Array.fill(m)(1L), m)(_ * _).max
+    val maxOutw =
+      vectorRound(bySrc, Array.fill(m)(1L), m)(keyedSum(_ * _)).max
     require(maxOutw < (Long.MaxValue / HitsScale) / HitsScale,
       s"HITS normalize overflows at weighted out-degree $maxOutw " +
         s">= 2^63/HitsScale^2 — lower HitsScale (see Scaladoc)")
@@ -1906,8 +1908,8 @@ object EventOps {
     val (auth, hub) = driverRounds("hits",
       (new Array[Long](m), Array.fill(m)(HitsScale / n)), HitsIters) {
       case (_, h) =>
-        val a = l1(vectorRound(byDst, h, m)(_ * _))
-        (a, l1(vectorRound(bySrc, a, m)(_ * _)))
+        val a = l1(vectorRound(byDst, h, m)(keyedSum(_ * _)))
+        (a, l1(vectorRound(bySrc, a, m)(keyedSum(_ * _))))
     }
     denseFrame(s, table, node, "auth_scaled" -> auth, "hub_scaled" -> hub)
   }
@@ -1937,7 +1939,7 @@ object EventOps {
 
   /** The iteration core: `nodes` has one `node` column, `edges` is
     * (src, dst, w) over those nodes. Output columns (node, rank_scaled,
-    * rank), UNSORTED — callers rename and order. With a `baseRel`
+    * rank), sorted by node — callers rename. With a `baseRel`
     * (node, base, is_seed), one row per node, the teleport is
     * personalized (TrustRank): the node's `base` replaces the uniform
     * base term and the output gains `is_seed`. Dangling mass stays the
@@ -1977,14 +1979,14 @@ object EventOps {
     val toSink = danglingSrc.join(indexOf(index, "src"), "src")
       .select(lit(m.toLong).as("k"), col("src_i").as("f"),
         lit(dShare).as("x"))
-    val byDst = roundRelation(
+    val byDst = byKey(
       reindexed(share, index, "dst", "src", "share").unionByName(toSink))
     val base = baseRel.fold(Array.fill(m)(baseRank))(
       _ => table.map(_.getAs[Long]("base")))
     val ranks = driverRounds(baseRel.fold("pagerank")(_ => "trustrank"),
       Array.fill(m)(initRank), rounds) { r =>
       val sums = vectorRound(byDst, r, m + 1)(
-        (rank, sh) => (rank * sh) / PrEdgeScale)
+        keyedSum((rank, sh) => (rank * sh) / PrEdgeScale))
       Array.tabulate(m)(
         v => base(v) + (PrDampNum * (sums(v) + sums(m))) / 100L)
     }
@@ -1993,16 +1995,6 @@ object EventOps {
       .withColumn("rank",
         col("rank_scaled").cast("double") / lit(PrScale.toDouble))
   }
-
-  /** A driver-built frame over the collected node rows `table`: their
-    * `node` (typed `node`) and one non-null BIGINT column per named
-    * vector, row i holding element i. */
-  private def denseFrame(s: SparkSession, table: Array[Row],
-      node: StructField, cols: (String, Array[Long])*): DataFrame =
-    s.createDataFrame(
-      table.indices.map(i =>
-        Row.fromSeq(table(i).getAs[Any]("node") +: cols.map(_._2(i)))).asJava,
-      StructType(node +: cols.map(c => StructField(c._1, LongType, false))))
 
   /** The (node, i) `index` relation with its columns renamed to
     * (`c`, `c`_i), for joining on node column `c`. */
@@ -2017,47 +2009,20 @@ object EventOps {
       .select(col(s"${key}_i").as("k"), col(s"${from}_i").as("f"),
         col(x).as("x"))
 
-  /** The static side of [[vectorRound]]: (k, f, x) rows
-    * hash-partitioned on k and cut — so each key is summed in one
-    * partition, and reliable mode covers the relation every round
-    * reads. */
-  private def roundRelation(rel: DataFrame): RDD[(Long, Long, Long)] = {
-    val s = rel.sparkSession
-    import s.implicits._
-    rel.repartition(col("k")).transform(graft.Checkpointing.cut)
-      .as[(Long, Long, Long)].rdd
-  }
+  /** A (k, f, x) relation as a [[roundRelation]] hash-partitioned on
+    * k, so each key is summed in one partition. */
+  private def byKey(rel: DataFrame): RDD[(Long, Long, Long)] =
+    roundRelation[(Long, Long, Long)](rel.repartition(col("k")))
 
-  /** One round over a driver-held vector: `vec` is broadcast, each
-    * partition of `rel` sums `term(vec(f), x)` per key k, and the
-    * driver gathers the sums into a dense vector of `keys` entries (0
-    * for a key with no row). One job and no shuffle: `rel` is a
-    * [[roundRelation]] leaf. */
-  private def vectorRound(rel: RDD[(Long, Long, Long)], vec: Array[Long],
-      keys: Int)(term: (Long, Long) => Long): Array[Long] = {
-    val bc = rel.sparkContext.broadcast(vec)
-    try {
-      val out = new Array[Long](keys)
-      rel.mapPartitions { rows =>
-        val v = bc.value
-        val acc = scala.collection.mutable.LongMap.empty[Long]
-        rows.foreach { case (k, f, x) =>
-          acc(k) = acc.getOrElse(k, 0L) + term(v(f.toInt), x)
-        }
-        acc.iterator
-      }.collect().foreach { case (k, sum) => out(k.toInt) += sum }
-      out
-    } finally bc.destroy()
-  }
-
-  /** `rounds` steps of a driver-held iteration from `init`, reported
-    * by the stderr line [[graft.Checkpointing.fixpoint]] writes. */
-  private def driverRounds[T](name: String, init: T, rounds: Int)(
-      step: T => T): T = {
-    val t0 = System.nanoTime()
-    val out = (1 to rounds).foldLeft(init)((state, _) => step(state))
-    graft.Checkpointing.reportRounds(name, rounds, t0)
-    out
+  /** The rank queries' [[vectorRound]] fold: per key k of a partition
+    * of (k, f, x) rows, the sum of `term(vec(f), x)`. */
+  private def keyedSum(term: (Long, Long) => Long)(vec: Array[Long],
+      rows: Iterator[(Long, Long, Long)]): Iterator[(Int, Long)] = {
+    val acc = scala.collection.mutable.LongMap.empty[Long]
+    rows.foreach { case (k, f, x) =>
+      acc(k) = acc.getOrElse(k, 0L) + term(vec(f.toInt), x)
+    }
+    acc.iterator.map { case (k, sum) => (k.toInt, sum) }
   }
 
   /** The user referral graph as DISTINCT UNDIRECTED edges `(u, v)`

@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftColumn, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumn, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField,
+  StructType}
 
 import graft.functions.{ArraySqDist, FloatDot, Hashing, LshBucket}
 import graft.sources.Tables
@@ -207,15 +210,21 @@ object SimilarityOps {
     * `0.5·rel − 0.5·max_sim_to_already_selected` — the retrieval-time
     * complement of semantic dedup (a near-dup cluster flooding the
     * top-k yields one representative, not k copies). The greedy loop
-    * is inherently sequential in k, so it runs as [[MmrK]] unrolled
-    * plan steps over the CHECKPOINTED shortlist relation (queries ×
-    * [[MmrShort]] rows — the only all-pairs sims ever computed are
-    * shortlist × selected, ≤ 20×5 per query); the corpus-scale work
+    * is inherently sequential in k, and its state is fixed by
+    * constants: at most [[NQueries]] × [[MmrShort]] = 160 shortlist
+    * rows. So the shortlist is collected, and the [[MmrK]] picks run
+    * on the driver as [[graft.Checkpointing.driverRounds]] (the only
+    * all-pairs sims ever computed are shortlist × selected, ≤ 20×5
+    * per query, through FloatDot's own fold); the corpus-scale work
     * stays in the shortlist search, which is exactly [[knnBrute]] /
-    * an IVF tier at 100 TB. Argmax per step is a max(struct(score,
-    * −cand_id)) — ties break to the smaller cand_id, mirrored by the
-    * oracle's ORDER BY. Step 1 has no selected set: maxsim = 0,
-    * score = 0.5·rel (documented convention, mirrored). */
+    * an IVF tier at 100 TB. Argmax per step is Spark's
+    * max(struct(score, −cand_id)) — ties break to the smaller cand_id,
+    * mirrored by the oracle's ORDER BY — and maxsim is Spark's
+    * max(sim): both in `SQLOrderingUtil.compareDoubles` order (NaN
+    * largest, −0.0 = 0.0), nulls lowest. Step 1 has no selected set:
+    * maxsim = 0, score = 0.5·rel (documented convention, mirrored).
+    * `vec_id` is the corpus key, so a query's shortlist names each
+    * candidate once. */
   val annMmrDiversify: Q = (s, d) => {
     val e = bucketed(s, d)
     val q = e.filter(col("vec_id") < NQueries)
@@ -232,42 +241,73 @@ object SimilarityOps {
       .join(c, "cand_id")
       .select(col("query_id"), col("cand_id"), col("cos").as("rel"),
         col("ce"), col("cn"))
-      .transform(graft.Checkpointing.cut)
-    // deterministic argmax of `score` with smaller-cand_id tiebreak
-    def pick(scored: DataFrame, step: Int): DataFrame = {
-      val best = scored.groupBy("query_id")
-        .agg(max(struct(col("score"), (lit(0L) - col("cand_id"))
-          .as("nid"))).as("b"))
-        .select(col("query_id"), (lit(0L) - col("b.nid")).as("cand_id"))
-      scored.join(best, Seq("query_id", "cand_id"))
-        .select(col("query_id"), lit(step.toLong).as("step"),
-          col("cand_id"), col("rel"), col("maxsim"), col("score"),
-          col("ce"), col("cn"))
+      .collect().map(r => MmrCand(r.getLong(0), r.getLong(1), doubleAt(r, 2),
+        r.getSeq[Any](3), doubleAt(r, 4)))
+      .groupBy(_.query).values.toSeq
+    val picks = graft.Checkpointing.driverRounds("mmr", Seq.empty[MmrPick],
+      MmrK) { sel =>
+      sel ++ short.flatMap { cands =>
+        val mine = sel.filter(_.c.query == cands.head.query)
+        cands.filterNot(c => mine.exists(_.c eq c)).map { c =>
+          if (mine.isEmpty) MmrPick(c, 1L, Some(0.0), c.rel.map(0.5 * _))
+          else {
+            // Spark's max keeps the first of equal values
+            val maxsim = mine.map(p => mmrCos(c, p.c))
+              .reduce((m, x) => if (SqlDouble.gt(x, m)) x else m)
+            MmrPick(c, mine.size + 1L, maxsim,
+              for (r <- c.rel; ms <- maxsim) yield 0.5 * r - 0.5 * ms)
+          }
+        }.maxOption(MmrOrder)
+      }
     }
-    var sel = pick(short
-      .withColumn("maxsim", lit(0.0))
-      .withColumn("score", lit(0.5) * col("rel")), 1)
-    for (step <- 2 to MmrK) {
-      val selE = sel.select(col("query_id"), col("ce").as("se"),
-        col("cn").as("sn"))
-      val remaining = short.join(sel.select("query_id", "cand_id"),
-        Seq("query_id", "cand_id"), "left_anti")
-      val scored = remaining.join(selE, Seq("query_id"))
-        .select(col("query_id"), col("cand_id"), col("rel"), col("ce"),
-          col("cn"),
-          cosPre(col("ce"), col("se"), col("cn"), col("sn")).as("sim"))
-        .groupBy("query_id", "cand_id")
-        .agg(first(col("rel")).as("rel"), first(col("ce")).as("ce"),
-          first(col("cn")).as("cn"), max(col("sim")).as("maxsim"))
-        .withColumn("score",
-          lit(0.5) * col("rel") - lit(0.5) * col("maxsim"))
-      sel = graft.Checkpointing.cut(
-        sel.unionByName(pick(scored, step)))
-    }
-    sel.select(col("query_id"), col("step"), col("cand_id"),
-        col("rel"), col("maxsim"), col("score"))
-      .orderBy("query_id", "step")
+    graft.Checkpointing.sortedFrame(s, MmrSchema, 2, picks.map(p =>
+      Row(p.c.query, p.step, p.c.cand, boxed(p.c.rel), boxed(p.maxsim),
+        boxed(p.score))))
   }
+
+  /** A shortlist row of [[annMmrDiversify]] and a pick made from it. */
+  private final case class MmrCand(query: Long, cand: Long,
+      rel: Option[Double], e: Seq[Any], n: Option[Double])
+  private final case class MmrPick(c: MmrCand, step: Long,
+      maxsim: Option[Double], score: Option[Double])
+
+  /** [[annMmrDiversify]]'s frame, with the relational form's
+    * nullability. */
+  private val MmrSchema = StructType(Seq(
+    StructField("query_id", LongType, true),
+    StructField("step", LongType, false),
+    StructField("cand_id", LongType, true),
+    StructField("rel", DoubleType, true),
+    StructField("maxsim", DoubleType, true),
+    StructField("score", DoubleType, true)))
+
+  /** [[cosPre]] of two shortlist rows on the driver, null where
+    * Spark's `/` gives null: a null norm (so a non-null norm has a
+    * non-null embedding), a null dot, or a zero norm product. A zero
+    * norm reaches the shortlist only without ANSI division: with it,
+    * the shortlist search has already failed on that row's `rel`. */
+  private def mmrCos(a: MmrCand, b: MmrCand): Option[Double] =
+    for {
+      x <- a.n; y <- b.n if x * y != 0.0
+      dot <- Option(FloatDot.fold(new GenericArrayData(a.e),
+        new GenericArrayData(b.e)))
+    } yield dot / (x * y)
+
+  /** Spark's ascending order of nullable doubles: null lowest, then
+    * `SQLOrderingUtil.compareDoubles` (NaN largest, −0.0 = 0.0). */
+  private val SqlDouble: Ordering[Option[Double]] =
+    Ordering.Option(SQLOrderingUtil.compareDoubles(_, _))
+
+  /** Spark's order of struct(score, −cand_id), whose max is a pick. */
+  private val MmrOrder: Ordering[MmrPick] =
+    Ordering.by((p: MmrPick) => (p.score, -p.c.cand))(
+      Ordering.Tuple2(SqlDouble, Ordering.Long))
+
+  private def doubleAt(r: Row, i: Int): Option[Double] =
+    if (r.isNullAt(i)) None else Some(r.getDouble(i))
+
+  private def boxed(d: Option[Double]): java.lang.Double =
+    d.map(Double.box).orNull
 
   /** Bucket histogram: occupancy of each LSH bucket. */
   val annLshBuckets: Q = (s, d) =>
@@ -1436,41 +1476,68 @@ object SimilarityOps {
     * per-dim |raw| ≤ n·256·(64·256·[[PcaVs]]) needs n < 2·10⁶
     * vectors at this scale — the 100 TB form drops [[PcaVs]] a digit
     * per 100× rows (documented, like the sibling quantized bounds).
-    * Plan shape per round: two hash joins + two combinable groupBys
-    * over the (vec_id, dim, y) lanes, one broadcast scalar, one
-    * broadcast [[Dims]]-row vector — vectors never shuffle whole. */
-  val embPrincipalDir: Q = (s, d) => {
+    * Round shape: the per-dim means are collected once, and the
+    * centered lanes are cut once as one row per vector (its dims and
+    * their y). Each round is then one
+    * [[graft.Checkpointing.vectorRound]] job: the d-vector v is
+    * broadcast, each partition takes per vector dot = Σ y·v and per
+    * dim Σ y·dot, and the driver sums the per-dim partials and
+    * rescales. The sums use `Math.multiplyExact`/`addExact`, so an
+    * overflow fails the query as ANSI arithmetic did in the relational
+    * form. Vectors never shuffle after the cut, and the loadings come
+    * back already sorted by dim. */
+  val embPrincipalDir: Q = principalDir(PcaIters)
+
+  /** [[embPrincipalDir]] with `rounds` power rounds; 0 stops after the
+    * static setup. */
+  private[graft] def principalDir(rounds: Int): Q = (s, d) => {
     val raw0 = quantizedLong(s, d)
+    // dims are posexplode positions, so the dim set is 0 until D; a
+    // null vec_id lane joins no dot, so it adds to no round
     val mu = raw0.groupBy(col("dim"))
       .agg(expr("sum(q_int8) div count(1)").as("mu"))
-    val lanes = raw0.join(broadcast(mu), "dim")
-      .select(col("vec_id"), col("dim"),
-        (col("q_int8") - col("mu")).as("q_int8"))
-      .transform(graft.Checkpointing.cut)
-    require(PcaIters % 2 == 0, s"PcaIters=$PcaIters must be even: the " +
-      "fixpoint step runs two rounds")
-    def powerRound(v: DataFrame): DataFrame = {
-      val dots = lanes.join(v, "dim")
-        .groupBy(col("vec_id"))
-        .agg(sum(col("q_int8") * col("val")).as("dot"))
-      val raw = lanes.join(dots, "vec_id")
-        .groupBy(col("dim"))
-        .agg(sum(col("q_int8") * col("dot")).as("raw"))
-      val m = raw.agg(max(abs(col("raw"))).as("m"))
-      raw.crossJoin(broadcast(m))
-        .select(col("dim"),
-          when(col("m") > 0L,
-            expr(s"raw div (m div $PcaVs + 1)"))
-            .otherwise(lit(0L)).as("val"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
+      .map(_._2)
+    val dims = mu.length
+    val y = col("q_int8") -
+      element_at(typedLit(mu), col("dim").cast("int") + 1)
+    val lanes =
+      graft.Checkpointing.roundRelation[(Array[Long], Array[Long])](
+        raw0.filter(col("vec_id").isNotNull).groupBy(col("vec_id"))
+          .agg(collect_list(struct(col("dim"), y.as("y"))).as("l"))
+          .select(col("l.dim"), col("l.y")))
+    val v = graft.Checkpointing.driverRounds("pca", Array.fill(dims)(PcaVs),
+      rounds) { v =>
+      val raw = graft.Checkpointing.vectorRound(lanes, v, dims)(powerFold)
+      val m = raw.foldLeft(0L)((a, r) => math.max(a, Math.absExact(r)))
+      raw.map(r => if (m > 0L) r / (m / PcaVs + 1) else 0L)
     }
-    // one fixpoint step = two rounds: the lineage is cut every other
-    // round
-    val (v, _) = graft.Checkpointing.fixpoint("pca",
-      lanes.select(col("dim")).distinct().select(col("dim"), lit(PcaVs).as("val")),
-      PcaIters / 2)(w => Some(powerRound(powerRound(w))))
-    v.select(col("dim"), col("val").as("v_scaled"),
-        (col("val").cast("double") / lit(PcaVs.toDouble)).as("loading"))
-      .orderBy("dim")
+    graft.Checkpointing.sortedFrame(s, PcaSchema, 1,
+        v.indices.map(k => Row(k.toLong, v(k))))
+      .withColumn("loading",
+        col("v_scaled").cast("double") / lit(PcaVs.toDouble))
+  }
+
+  /** [[embPrincipalDir]]'s frame; `v_scaled` stays nullable, as the
+    * relational form's `div` left it. */
+  private val PcaSchema = StructType(Seq(StructField("dim", LongType, false),
+    StructField("v_scaled", LongType, true)))
+
+  /** One power round's per-partition fold over (dims, ys) vectors:
+    * dot = Σ y·v(dim) per vector, then Σ y·dot per dim, exact. */
+  private def powerFold(v: Array[Long],
+      vecs: Iterator[(Array[Long], Array[Long])]): Iterator[(Int, Long)] = {
+    val acc = new Array[Long](v.length)
+    vecs.foreach { case (dims, ys) =>
+      var dot = 0L
+      for (i <- dims.indices)
+        dot = Math.addExact(dot, Math.multiplyExact(ys(i), v(dims(i).toInt)))
+      for (i <- dims.indices) {
+        val k = dims(i).toInt
+        acc(k) = Math.addExact(acc(k), Math.multiplyExact(ys(i), dot))
+      }
+    }
+    acc.indices.iterator.map(k => (k, acc(k)))
   }
 
   /** Product-quantization layout: [[PqSubspaces]] subspaces of

@@ -86,88 +86,8 @@ object Reliability {
             isTemporary(e)))
     }
 
-  /** Daemon pool for [[withTimeout]] — one per JVM (driver or
-    * executor), never blocks JVM exit. BOUNDED at 256 threads: a
-    * non-interruptible hung call strands its thread for the duration
-    * of the hang, and an unbounded pool would let a sustained outage
-    * strand one thread per row. When saturated, submission fails fast
-    * and is surfaced as a (temporary) timeout, so the retry/DLQ policy
-    * applies instead of the executor drowning in threads. */
-  private lazy val timeoutPool: java.util.concurrent.ExecutorService = {
-    import java.util.concurrent._
-    new ThreadPoolExecutor(0, 256, 30L, TimeUnit.SECONDS,
-      new SynchronousQueue[Runnable](),
-      (r: Runnable) => {
-        val t = new Thread(r, "graft-timeout")
-        t.setDaemon(true)
-        t
-      })
-  }
-
-  /** E9: per-attempt timeout. Runs `f` on a daemon thread and throws
-    * [[TimeoutException]] — classified temporary by [[isTemporary]],
-    * so the retry/DLQ policy applies — once `timeoutMs` elapses; the
-    * hung attempt is interrupted and abandoned instead of hanging the
-    * task forever. Mirrors the reference's per-request
-    * `requestTimeout` (AkkaPipelineActors.scala:68); the overall
-    * budget (AkkaEnrichmentPipeline.scala:172) is the same wrapper
-    * around a whole retry loop, e.g.
-    * `withTimeout(60000)(retry(3)(withTimeout(5000)(call)))`. */
-  def withTimeout[T](timeoutMs: Long)(f: => T): T = {
-    val fut =
-      try timeoutPool.submit(new java.util.concurrent.Callable[T] {
-        def call(): T = f
-      })
-      catch {
-        case _: java.util.concurrent.RejectedExecutionException =>
-          // pool saturated by stranded hung calls — same contract as a
-          // timed-out attempt: temporary, retryable, stream survives
-          throw new TimeoutException("timeout pool saturated (256 in flight)")
-      }
-    try fut.get(timeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS)
-    catch {
-      case _: java.util.concurrent.TimeoutException =>
-        fut.cancel(true)
-        throw new TimeoutException(s"attempt exceeded ${timeoutMs} ms")
-      case e: java.util.concurrent.ExecutionException =>
-        throw e.getCause
-    }
-  }
-
-  /** E9+E8+E4 composed: a fallible external call with a per-attempt
-    * timeout, bounded retry on temporary failures (timeouts included),
-    * error-as-value result. The full reference reliability stack for
-    * one stage. */
-  def fallibleWithTimeout(f: String => String, timeoutMs: Long,
-      attempts: Int = 1): Column => Column =
-    fallible(s => withTimeout(timeoutMs)(f(s)), attempts)
-
   /** E6: split a DataFrame carrying an error column into (ok, dlq). */
   def split(df: DataFrame, errorCol: String = ErrorCol)
       : (DataFrame, DataFrame) =
     (df.filter(col(errorCol).isNull), df.filter(col(errorCol).isNotNull))
-
-  /** One-pass delivery accounting: tag the pre-split frame with an
-    * `Observation` so the ok/dead-lettered/total counts come back as a
-    * side effect of the SAME action that writes the batch — the
-    * reference's per-message ack/nack ledger
-    * (AkkaPipelineActors.scala:144-168) re-expressed without a second
-    * scan (at 100 TB, counting with `.count()` after the write doubles
-    * the read). Usage: split the returned frame, run the sink action,
-    * then read `obs.get` ("n_ok", "n_dlq", "n_total"). */
-  def observedSplit(df: DataFrame, errorCol: String = ErrorCol)
-      : (DataFrame, DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation()
-    val tagged = df.observe(obs,
-      count(when(col(errorCol).isNull, 1)).as("n_ok"),
-      count(when(col(errorCol).isNotNull, 1)).as("n_dlq"),
-      count(lit(1)).as("n_total"))
-    val (ok, dlq) = split(tagged, errorCol)
-    (ok, dlq, obs)
-  }
-
-  /** Merge per-stage error columns, first error wins — the reference's
-    * `merge(res1, res2)` (ErrorHandlingRxEnrichmentPipeline.scala:31-36,
-    * J4) as a single `coalesce`. */
-  def mergeErrors(errs: Column*): Column = coalesce(errs: _*)
 }

@@ -25,8 +25,9 @@ class CheckpointingSpec extends SparkSpec {
   /** The iterative family: PageRank, TrustRank, CC, the delta-CC +
     * index-merge path (the delta query exercises the merge caches
     * too), HITS, k-core, Lloyd's k-means and PCA power iteration —
-    * every loop that runs in [[Checkpointing.fixpoint]], plus the
-    * driver-held rank vectors of PageRank, TrustRank and HITS. */
+    * every loop that runs in [[Checkpointing.fixpoint]] (CC, k-core,
+    * k-means), plus the driver rounds of PageRank, TrustRank, HITS and
+    * PCA, which cut only their static relations. */
   private val IterativeGates = Seq(
     "ev_user_pagerank", "ev_user_trustrank",
     "dedup_components", "dedup_components_delta",
@@ -85,6 +86,26 @@ class CheckpointingSpec extends SparkSpec {
     assert(static > 0, "the static setup must cut in reliable mode")
     assert(dirsOf(EventOps.PrIters) == static,
       s"${EventOps.PrIters} rounds wrote checkpoints beyond the " +
+        s"$static of the static setup")
+  }
+
+  test("reliable mode: emb_principal_dir cuts nothing per round") {
+    def dirsOf(rounds: Int): Int = {
+      val dir = tmpDir("graft-ckpt-pca")
+      spark.conf.set(Checkpointing.DirKey, dir)
+      try {
+        assert(SimilarityOps.principalDir(rounds)(spark, Sf).collect()
+          .nonEmpty)
+        rddDirsUnder(dir).size
+      } finally {
+        spark.conf.unset(Checkpointing.DirKey)
+        deleteTree(dir)
+      }
+    }
+    val static = dirsOf(0)
+    assert(static > 0, "the static setup must cut in reliable mode")
+    assert(dirsOf(SimilarityOps.PcaIters) == static,
+      s"${SimilarityOps.PcaIters} rounds wrote checkpoints beyond the " +
         s"$static of the static setup")
   }
 

@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
 import graft.streaming.Reliability
 
 /** The reference's reliability semantics (SURVEY.md §2.6), mirroring
-  * its four actor tests (AkkaPipelineActorsTest.scala) plus the
-  * Either-merge law (ErrorHandlingRxEnrichmentPipeline.scala:31-36). */
+  * its four actor tests (AkkaPipelineActorsTest.scala). */
 class ReliabilitySpec extends SparkSpec {
   import spark.implicits._
 
@@ -50,64 +49,6 @@ class ReliabilitySpec extends SparkSpec {
       }
     }
     assert(calls.get() == 3)
-  }
-
-  test("E9 withTimeout: hanging call classified temporary after N ms") {
-    val t0 = System.nanoTime()
-    val e = intercept[TimeoutException] {
-      Reliability.withTimeout(200) { Thread.sleep(60000); "never" }
-    }
-    val elapsedMs = (System.nanoTime() - t0) / 1e6
-    assert(Reliability.isTemporary(e), "timeout must be retryable")
-    assert(elapsedMs < 5000, s"returned in ${elapsedMs}ms, not hung")
-  }
-
-  test("E9 withTimeout: fast calls pass through, errors unwrapped") {
-    assert(Reliability.withTimeout(5000)("ok") == "ok")
-    intercept[IllegalArgumentException] {
-      Reliability.withTimeout[String](5000) {
-        throw new IllegalArgumentException("bad")
-      }
-    }
-  }
-
-  test("E9 stack: hung service rows land in DLQ, stream survives") {
-    // per-attempt timeout + 2 attempts + error-as-value: the hanging
-    // row exhausts its retries and carries a temporary TimeoutException
-    // error; healthy rows are unaffected (the batch completes)
-    val lifted = Reliability.fallibleWithTimeout(
-      { case "hang" => Thread.sleep(60000); "never"; case s => s.toUpperCase },
-      timeoutMs = 150, attempts = 2)
-    val df = Seq("a", "hang", "b").toDF("value")
-      .select(col("value"), lifted(col("value")).as("res"))
-      .select(col("value"), col("res.value").as("out"),
-        col("res.error").as(Reliability.ErrorCol))
-    val (ok, dlq) = Reliability.split(df)
-    assert(ok.select("out").as[String].collect().sorted.toSeq == Seq("A", "B"))
-    val err = dlq.select(col("value"),
-      col(s"${Reliability.ErrorCol}.clazz"),
-      col(s"${Reliability.ErrorCol}.temporary")).collect()
-    assert(err.length == 1)
-    assert(err(0).getString(0) == "hang")
-    assert(err(0).getString(1) == classOf[TimeoutException].getName)
-    assert(err(0).getBoolean(2), "timeout must be classified temporary")
-  }
-
-  test("observedSplit: ok/DLQ ledger rides the sink action in one pass") {
-    val df = Seq("a", "b", "c", "d").toDF("v")
-      .withColumn("err",
-        when(col("v").isin("b", "d"), concat(lit("fail-"), col("v"))))
-    val (ok, _, obs) = Reliability.observedSplit(df, "err")
-    // ONE sink action; the observe node sits above the split, so the
-    // full ledger comes back without any extra scan
-    ok.write.format("noop").mode("overwrite").save()
-    val m = obs.get
-    assert(m("n_ok") === 2L && m("n_dlq") === 2L && m("n_total") === 4L,
-      s"ledger: $m")
-    // and the branches themselves route correctly (fresh, unobserved)
-    val (ok2, dlq2) = Reliability.split(df, "err")
-    assert(ok2.select("v").as[String].collect().toSet === Set("a", "c"))
-    assert(dlq2.select("v").as[String].collect().toSet === Set("b", "d"))
   }
 
   test("E8 fallible: value XOR error, classification preserved") {
@@ -165,19 +106,6 @@ class ReliabilitySpec extends SparkSpec {
     intercept[LinkageError] {
       Reliability.attempt(raise(new LinkageError("link")), 3)("a")
     }
-  }
-
-  test("J4 merge: first error wins, success iff all null") {
-    val df = Seq(
-      (null.asInstanceOf[String], null.asInstanceOf[String], "e3"),
-      (null.asInstanceOf[String], null.asInstanceOf[String],
-        null.asInstanceOf[String]),
-      ("e1", "e2", null.asInstanceOf[String]))
-      .toDF("a", "b", "c")
-    val got = df.select(
-      Reliability.mergeErrors(col("a"), col("b"), col("c"))).as[String]
-      .collect().toSeq
-    assert(got == Seq("e3", null, "e1"))
   }
 
   test("E6 split: ok and dlq partition the input") {
