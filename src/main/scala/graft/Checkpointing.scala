@@ -7,6 +7,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.RowOrdering
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.IndexCache
@@ -57,9 +58,15 @@ import graft.operators.IndexCache
   * (Drizzle, SOSP'17): about a dozen jobs of ≤ 20 ms task work each.
   * Every iterative run reports itself through [[reportRounds]].
   *
-  * Storage hygiene: [[graft.operators.IndexCache.release]] frees
-  * executor BLOCKS behind a cut in either mode; reliable-mode FILES
-  * under the checkpoint dir are owned by the cluster operator (set
+  * Storage hygiene: [[release]] is the one way a cut's executor
+  * BLOCKS are freed, in either mode. A leaf may be read by a cached
+  * index entry as well as by the frame being released (a merged index
+  * unions the corpus index's cut with its own delta cut), so
+  * [[release]] frees only the leaves no live
+  * [[graft.operators.IndexCache]] entry reads; the cache frees its
+  * evicted entries, racing-build losers and invalidations through the
+  * same call. Reliable-mode FILES under the checkpoint dir are owned
+  * by the cluster operator (set
   * `spark.cleaner.referenceTracking.cleanCheckpoints=true` to have
   * Spark GC them with the RDD, or sweep the directory per job — the
   * standard operational contract for `sc.setCheckpointDir`).
@@ -92,6 +99,26 @@ object Checkpointing {
     }
   }
 
+  /** The RDDs behind `df`'s checkpoint leaves: the `LogicalRDD`s a
+    * [[cut]] leaves in its plan. */
+  def leaves(df: DataFrame): Seq[RDD[_]] =
+    df.queryExecution.analyzed.collectLeaves().collect {
+      case l: LogicalRDD => l.rdd
+    }
+
+  /** Frees the blocks of each checkpoint leaf of `df` that no live
+    * [[graft.operators.IndexCache]] entry reads. These blocks are
+    * invisible to the CacheManager, so `Dataset.unpersist()` never
+    * frees them; they go through [[org.apache.spark.GraftUnpersist]],
+    * which skips `RDD.unpersist`'s per-leaf lineage-truncation WARN.
+    * Exception-safe: a leaf of a stopped context cannot block the
+    * rest. */
+  def release(df: DataFrame): Unit = IndexCache.synchronized {
+    val live = IndexCache.liveLeaves
+    leaves(df).filterNot(rdd => live(rdd.id))
+      .foreach(rdd => scala.util.Try(org.apache.spark.GraftUnpersist(rdd)))
+  }
+
   /** Iterates `step` from `init` until it returns `None` or has run
     * `maxSteps` times; returns the last state and the number of steps
     * that produced one. Each step's output is [[cut]] before the next
@@ -110,7 +137,7 @@ object Checkpointing {
         case None => (state, rounds)
         case Some(next) =>
           val leaf = cut(next)
-          if (state ne init) IndexCache.release(state.toDF())
+          if (state ne init) release(state.toDF())
           go(leaf, rounds + 1)
       }
     val (out, rounds) = go(init, 0)

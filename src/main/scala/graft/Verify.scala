@@ -22,10 +22,7 @@ object Verify {
     // run — every mtime-keyed cache rebuilds fresh from the parquet
     // this run reads. Costs one extra build per index on a cold JVM
     // (where the caches are empty anyway).
-    operators.DedupOps.invalidateIndexes()
-    operators.SimilarityOps.invalidateIndexes()
-    operators.TextOps.invalidateIndexes()
-    operators.MultimodalOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

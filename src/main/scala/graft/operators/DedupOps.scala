@@ -29,42 +29,24 @@ object DedupOps {
 
   private def docs(s: SparkSession, d: String) = Tables.documents(s, d)
 
-  /** One materialized (band, bucket) relation per (session, dataset,
-    * file mtime) — the LSH index. Round 1 rebuilt the whole signature
-    * pipeline on every reference (4-way band union × both self-join
-    * sides ≈ 8 recomputes, 83% of the bench); now it's computed once,
-    * persisted, and shared by every query that consumes candidate
-    * pairs. The source file's modification time is part of the key, so
-    * an in-place overwrite of documents.parquet transparently rebuilds
-    * instead of mixing a stale index with fresh verification scans —
-    * and the superseded relation is evicted on the same call
-    * ([[IndexCache.getOrBuild]]). */
-  private val bucketCache = new IndexCache
+  /** One materialized (band, bucket) relation per (context, dataset,
+    * documents.parquet mtime) — the LSH index. Round 1 rebuilt the
+    * whole signature pipeline on every reference (4-way band union ×
+    * both self-join sides ≈ 8 recomputes, 83% of the bench); now it's
+    * computed once, cut, and shared by every query that consumes
+    * candidate pairs. The source file's modification time is part of
+    * the key, so an in-place overwrite of documents.parquet
+    * transparently rebuilds instead of mixing a stale index with fresh
+    * verification scans — and the superseded relation is evicted on
+    * the same call ([[IndexCache.getOrBuild]]). */
+  private val bucketCache = new IndexCache("documents")
 
   private[graft] def cacheKeys = bucketCache.keys
 
-  /** None on a failed stat — [[IndexCache.getOrBuild]] then reuses the
-    * live entry instead of evicting a healthy index over a transient
-    * filesystem error. */
-  private def docsMtime(d: String): Option[Long] =
-    try Some(java.nio.file.Files.getLastModifiedTime(
-      java.nio.file.Paths.get(s"$d/documents.parquet")).toMillis)
-    catch { case _: java.io.IOException => None }
-
-  /** One materialized (doc_id, comp) labeling per (session, dataset,
+  /** One materialized (doc_id, comp) labeling per (context, dataset,
     * mtime) — shared by `dedup_components` and `dedup_split_assign`
     * so the label-propagation loop runs once per dataset. */
-  private val componentCache = new IndexCache
-
-  /** Drop the persisted LSH index relations (e.g. to release executor
-    * storage). */
-  def invalidateIndexes(): Unit = {
-    bucketCache.invalidate()
-    componentCache.invalidate()
-    mergedCache.invalidate()
-    rewriteCache.invalidate()
-    hotCellCache.invalidate()
-  }
+  private val componentCache = new IndexCache("documents")
 
   /** Exact dedup: canonical (min) doc per identical text. */
   val dedupExact: Q = (s, d) =>
@@ -157,13 +139,11 @@ object DedupOps {
     * ONE pass: the band buckets are emitted as an array and
     * posexploded (band = position), instead of round 1's Bands-way
     * union that re-ran the signature pipeline per band. The relation
-    * is persisted and eagerly materialized so the pair self-join scans
-    * the cache on both sides rather than recomputing. */
+    * is cut (materialized eagerly) so the pair self-join scans the
+    * leaf on both sides rather than recomputing. */
   private def buckets(s: SparkSession, d: String): DataFrame =
-    bucketCache.getOrBuild(s, d, docsMtime(d)) {
-      val bk = bucketRows(docs(s, d)).persist()
-      bk.count() // materialize once, before any self-join runs
-      bk
+    bucketCache.getOrBuild(s, d) {
+      bucketRows(docs(s, d)).transform(graft.Checkpointing.cut)
     }
 
   private def sqlBucketsAs(name: String, sigName: String): String =
@@ -211,10 +191,10 @@ object DedupOps {
     * mtime) — seven pair consumers share it, and it is almost always
     * empty (a handful of rows under adversarial skew), so the
     * checkpoint is a few ints. */
-  private val hotCellCache = new IndexCache
+  private val hotCellCache = new IndexCache("documents")
 
   private[graft] def hotCells(s: SparkSession, d: String): DataFrame =
-    hotCellCache.getOrBuild(s, d, docsMtime(d)) {
+    hotCellCache.getOrBuild(s, d) {
       buckets(s, d)
         .groupBy(col("band"), col("bucket"))
         .agg(count(lit(1)).as("occ"))
@@ -1124,16 +1104,14 @@ object DedupOps {
     * back as their own singletons) is cached per dataset and shared
     * with [[dedupSplitAssign]]. */
   private def components(s: SparkSession, d: String): DataFrame =
-    componentCache.getOrBuild(s, d, docsMtime(d)) {
+    componentCache.getOrBuild(s, d) {
       val labels = propagateMinLabels(buckets(s, d))
       // isolated docs (no signature or lone bucket membership is fine
       // either way: never a candidate) are their own components.
-      // The cached relation is checkpointed (not persist()ed) so it
-      // carries NO dependency on `labels` — its blocks can be freed
-      // right here, and the cache entry itself is freeable by
-      // [[IndexCache.release]] on eviction
+      // The cached relation is its own cut, so it carries NO
+      // dependency on `labels` — its blocks can be freed right here
       val all = labels.union(isolated(s, d, labels)).transform(graft.Checkpointing.cut)
-      IndexCache.release(labels)
+      graft.Checkpointing.release(labels)
       all
     }
 
@@ -1225,7 +1203,7 @@ object DedupOps {
         Some(jump(step(step(l))))
       }
     }
-    IndexCache.release(init)
+    graft.Checkpointing.release(init)
     (labels, rounds)
   }
 
@@ -1522,8 +1500,8 @@ object DedupOps {
       .select(col("doc_id"), col("comp").as("component_id"))
       .orderBy("doc_id")
       .transform(graft.Checkpointing.cut)
-    IndexCache.release(labels)
-    IndexCache.release(membership)
+    graft.Checkpointing.release(labels)
+    graft.Checkpointing.release(membership)
     out
   }
 
@@ -1552,25 +1530,24 @@ object DedupOps {
 
   /** The merged-index cache ([[dedupIndexMerge]]): per (context, dir,
     * mtime), the corpus bucket index EXTENDED by the delta batch's
-    * rows. A new mtime atomically supersedes the entry; its release
-    * frees only the appended checkpoint blocks (the corpus side is
-    * [[bucketCache]]'s entry, shared by plan, never private copies). */
-  private val mergedCache = new IndexCache
+    * rows. A new mtime atomically supersedes the entry. The entry
+    * reads [[bucketCache]]'s leaf as well as its own delta cut, so its
+    * eviction frees only the delta leaf while the corpus entry is live
+    * ([[graft.Checkpointing.release]]). */
+  private val mergedCache = new IndexCache("documents")
 
   /** INDEX MERGE — completes [[dedupDeltaProbe]]'s delta story: the
     * daily batch's bucket rows are APPENDED to the persisted corpus
     * index instead of triggering the all-or-nothing mtime rebuild.
     * Only the delta rows are computed and materialized (an eager
     * `localCheckpoint` of O(delta) rows); the corpus side of the
-    * published union scans [[buckets]]'s existing cached blocks, so a
-    * daily merge costs O(delta) — IndexMergeSpec pins that exactly
-    * one new persisted relation appears and the old cache entry is
-    * untouched. Publication via [[IndexCache]] is the atomic
-    * supersede: consumers see either the old index or the merged one,
-    * and eviction of a superseded merge frees ONLY the appended
-    * checkpoint blocks ([[IndexCache.release]] unpersists LogicalRDD
-    * leaves; the corpus side is an InMemoryRelation owned by
-    * [[bucketCache]]).
+    * published union scans [[buckets]]'s existing leaf, so a daily
+    * merge costs O(delta) — IndexMergeSpec pins that exactly one new
+    * persisted relation appears and the old cache entry is untouched.
+    * Publication via [[IndexCache]] is the atomic supersede: consumers
+    * see either the old index or the merged one, and eviction of a
+    * superseded merge frees ONLY the appended delta leaf (the corpus
+    * leaf stays while [[bucketCache]]'s live entry reads it).
     *
     * The oracle rebuilds the index from scratch over corpus ∪ delta —
     * bit-equality IS the merge ≡ rebuild proof (per-doc bucket rows
@@ -1582,7 +1559,7 @@ object DedupOps {
   }
 
   private[graft] def mergedBuckets(s: SparkSession, d: String): DataFrame =
-    mergedCache.getOrBuild(s, d, docsMtime(d)) {
+    mergedCache.getOrBuild(s, d) {
       val deltaBk = bucketRows(
         deltaBatch(s, d).select(col("doc_id"), col("text")))
         .transform(graft.Checkpointing.cut) // eager: materialize ONLY the appended rows
@@ -1636,7 +1613,7 @@ object DedupOps {
     * cache so publication is the same atomic putIfAbsent supersede
     * every other index family uses; a source overwrite (mtime bump)
     * evicts it transparently. */
-  private val rewriteCache = new IndexCache
+  private val rewriteCache = new IndexCache("documents")
 
   private[graft] def rewriteCacheKeys = rewriteCache.keys
 
@@ -1670,7 +1647,7 @@ object DedupOps {
       .orderBy("doc_id", "band")
 
   private[graft] def rewrittenBuckets(s: SparkSession, d: String): DataFrame =
-    rewriteCache.getOrBuild(s, d, docsMtime(d)) {
+    rewriteCache.getOrBuild(s, d) {
       buckets(s, d)
         .filter(!tombstoned(col("doc_id")))
         .select(col("doc_id"), col("band"), col("bucket"))

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -1696,10 +1696,10 @@ object EventOps {
     val base = ev(s, d)
       .select(col("user_id"), col("event_id"), col("event_type"),
         expr("unix_timestamp(ts)").as("ts_sec"))
-    val (nodes, n) = nodesOf(base.select(col("event_type").as("node")))
+    val (nodes, rows) = nodesOf(base.select(col("event_type").as("node")))
     // empty input: the oracle's recursion over zero nodes yields an
     // empty relation; mirror it instead of dividing by zero below
-    if (n == 0L)
+    if (rows.isEmpty)
       nodes.select(col("node").as("event_type"),
         lit(0L).as("rank_scaled"), lit(0.0).as("rank"))
     else {
@@ -1710,7 +1710,7 @@ object EventOps {
         .filter(col("next_type").isNotNull)
         .groupBy(col("event_type").as("src"), col("next_type").as("dst"))
         .agg(count(lit(1)).as("w"))
-      pagerankOf(nodes, edges, n)
+      pagerankOf(nodes, nonNull(rows), edges, rows.length, None, PrIters)
         .select(col("node").as("event_type"), col("rank_scaled"),
           col("rank"))
     }
@@ -1731,12 +1731,17 @@ object EventOps {
       expr("unix_timestamp(ts)").as("ts_sec"))
 
   /** The distinct values of `keys`' one `node` column as a cut
-    * relation, and its size (counted over the leaf's rows: one narrow
-    * job where `Dataset.count` adds an aggregate exchange). */
-  private def nodesOf(keys: DataFrame): (DataFrame, Long) = {
+    * relation, and its rows with the `extra` columns, collected in one
+    * job: their number is the node count n, the null node included. */
+  private def nodesOf(keys: DataFrame, extra: Column*)
+      : (DataFrame, Array[Row]) = {
     val nodes = keys.distinct().transform(graft.Checkpointing.cut)
-    (nodes, nodes.rdd.count())
+    (nodes, nodes.select(col("node") +: extra: _*).collect())
   }
+
+  /** The rows of a non-null node: a null node joins no edge in the
+    * relational form and gets no rank, so PageRank leaves it out. */
+  private def nonNull(rows: Array[Row]): Array[Row] = rows.filterNot(_.isNullAt(0))
 
   /** "Who acted next in my event-type stream" (by ts, event_id): one
     * (user_id, next_user) row per referral, from engaged users only. */
@@ -1777,12 +1782,13 @@ object EventOps {
     * static setup. */
   private[graft] def userPagerank(rounds: Int): Q = (s, d) => {
     val events = userEvents(s, d)
-    val (nodes, n) = nodesOf(events.select(col("user_id").as("node")))
-    if (n == 0L)
+    val (nodes, rows) = nodesOf(events.select(col("user_id").as("node")))
+    if (rows.isEmpty)
       nodes.select(col("node").as("user_id"),
         lit(0L).as("rank_scaled"), lit(0.0).as("rank"))
     else
-      pagerankOf(nodes, referralEdges(events), n, rounds = rounds)
+      pagerankOf(nodes, nonNull(rows), referralEdges(events), rows.length,
+        None, rounds)
         .select(col("node").as("user_id"), col("rank_scaled"),
           col("rank"))
   }
@@ -1805,27 +1811,26 @@ object EventOps {
     * documented variant); per-node base = (15%·scale div W) for the
     * W seeds, 0 otherwise, so every arithmetic step remains
     * bit-portable. Scale shape identical to [[evUserPagerank]]; the
-    * per-node base is collected once with the node keys. */
+    * seed flags are collected once with the node keys, and the seed
+    * count W and the per-node base are computed from them on the
+    * driver. */
   val evUserTrustrank: Q = (s, d) => {
     val events = userEvents(s, d)
-    val (nodes, n) = nodesOf(events.select(col("user_id").as("node")))
-    val isSeed = Hashing.charHash(col("node").cast("string")) % 10 ===
-      PrSeedResidue
-    // counted over the leaf's rows, as in `nodesOf`: one narrow job
-    val w = nodes.filter(isSeed).rdd.count()
-    if (n == 0L || w == 0L)
+    val (nodes, rows) = nodesOf(events.select(col("user_id").as("node")),
+      (Hashing.charHash(col("node").cast("string")) % 10 === PrSeedResidue)
+        .cast("long").as("is_seed"))
+    val table = nonNull(rows)
+    val seeds = table.map(_.getLong(1))
+    val w = seeds.sum
+    if (w == 0L)
       nodes.select(col("node").as("user_id"),
         lit(0L).as("rank_scaled"), lit(0.0).as("rank"),
         lit(0L).as("is_seed"))
-    else {
-      val baseRel = nodes.select(col("node"),
-        when(isSeed, lit((PrScale * 15L / 100L) / w)).otherwise(lit(0L))
-          .as("base"),
-        isSeed.cast("long").as("is_seed"))
-      pagerankOf(nodes, referralEdges(events), n, Some(baseRel))
+    else
+      pagerankOf(nodes, table, referralEdges(events), rows.length,
+        Some(seeds.map(_ * ((PrScale * 15L / 100L) / w))), PrIters)
         .select(col("node").as("user_id"), col("rank_scaled"),
           col("rank"), col("is_seed"))
-    }
   }
 
   /** HITS mass scale (hub and authority vectors each L1-normalize to
@@ -1845,12 +1850,12 @@ object EventOps {
     * accounts. Computed by [[hitsOf]]. */
   val evUserHits: Q = (s, d) => {
     val events = userEvents(s, d)
-    val (nodes, n) = nodesOf(events.select(col("user_id").as("node")))
+    val (nodes, rows) = nodesOf(events.select(col("user_id").as("node")))
     val scaled =
-      if (n == 0L)
+      if (rows.isEmpty)
         nodes.select(col("node"), lit(0L).as("auth_scaled"),
           lit(0L).as("hub_scaled"))
-      else hitsOf(nodes, referralEdges(events), n)
+      else hitsOf(nodes, rows, referralEdges(events), rows.length)
     scaled
       .select(col("node").as("user_id"), col("auth_scaled"),
         col("hub_scaled"),
@@ -1884,12 +1889,15 @@ object EventOps {
     * driver, and the result frame is built from them already sorted by
     * node. */
   private[graft] def hitsOf(nodes: DataFrame, edges: DataFrame, n: Long)
-      : DataFrame = {
+      : DataFrame = hitsOf(nodes, nodes.collect(), edges, n)
+
+  /** [[hitsOf]] over `table`, the collected rows of `nodes`. */
+  private def hitsOf(nodes: DataFrame, table: Array[Row], edges: DataFrame,
+      n: Long): DataFrame = {
     require(n < HitsScale,
       s"HITS init mass 10^6 div n floors to 0 at n=$n — raise " +
         "HitsScale before running at this graph scale")
     val s = nodes.sparkSession
-    val table = nodes.collect()
     val (m, node) = (table.length, nodes.schema("node"))
     val index = denseFrame(s, table, node, "i" -> Array.tabulate(m)(_.toLong))
     val edgesCk = graft.Checkpointing.cut(edges)
@@ -1955,6 +1963,17 @@ object EventOps {
   private[graft] def pagerankOf(nodes: DataFrame, edges: DataFrame,
       n: Long, baseRel: Option[DataFrame] = None,
       rounds: Int = PrIters): DataFrame = {
+    val table = nonNull(baseRel.getOrElse(nodes).collect())
+    pagerankOf(nodes, table, edges, n,
+      baseRel.map(_ => table.map(_.getAs[Long]("base"))), rounds)
+  }
+
+  /** [[pagerankOf]] over `table`, the collected non-null rows of
+    * `nodes`, with the per-node `base` in `table`'s order (whose rows
+    * then carry `is_seed`). */
+  private def pagerankOf(nodes: DataFrame, table: Array[Row],
+      edges: DataFrame, n: Long, base: Option[Array[Long]],
+      rounds: Int): DataFrame = {
     require(n < PrEdgeScale,
       s"pagerank dangling share 10^6 div n floors to 0 at n=$n >= " +
         s"$PrEdgeScale nodes — raise PrEdgeScale before running at " +
@@ -1965,8 +1984,6 @@ object EventOps {
     // uniform share a dangling node would give every node — quantized
     // ONCE, exactly as a materialized fan-out row's share would be
     val dShare = PrEdgeScale / n
-    val table = baseRel.getOrElse(nodes).filter(col("node").isNotNull)
-      .collect()
     val (m, node) = (table.length, nodes.schema("node"))
     val index = denseFrame(s, table, node, "i" -> Array.tabulate(m)(_.toLong))
     val (share, danglingSrc) =
@@ -1981,17 +1998,16 @@ object EventOps {
         lit(dShare).as("x"))
     val byDst = byKey(
       reindexed(share, index, "dst", "src", "share").unionByName(toSink))
-    val base = baseRel.fold(Array.fill(m)(baseRank))(
-      _ => table.map(_.getAs[Long]("base")))
-    val ranks = driverRounds(baseRel.fold("pagerank")(_ => "trustrank"),
+    val teleport = base.getOrElse(Array.fill(m)(baseRank))
+    val ranks = driverRounds(base.fold("pagerank")(_ => "trustrank"),
       Array.fill(m)(initRank), rounds) { r =>
       val sums = vectorRound(byDst, r, m + 1)(
         keyedSum((rank, sh) => (rank * sh) / PrEdgeScale))
       Array.tabulate(m)(
-        v => base(v) + (PrDampNum * (sums(v) + sums(m))) / 100L)
+        v => teleport(v) + (PrDampNum * (sums(v) + sums(m))) / 100L)
     }
     denseFrame(s, table, node, Seq("rank_scaled" -> ranks) ++
-        baseRel.map(_ => "is_seed" -> table.map(_.getAs[Long]("is_seed"))): _*)
+        base.map(_ => "is_seed" -> table.map(_.getAs[Long]("is_seed"))): _*)
       .withColumn("rank",
         col("rank_scaled").cast("double") / lit(PrScale.toDouble))
   }
@@ -2278,8 +2294,8 @@ object EventOps {
         }
       }
     }
-    peels.foreach(IndexCache.release)
-    if (core ne init) IndexCache.release(init)
+    peels.foreach(graft.Checkpointing.release)
+    if (core ne init) graft.Checkpointing.release(init)
     core.select(col("node"), col("degree"), col("deg").as("core_degree"))
   }
 

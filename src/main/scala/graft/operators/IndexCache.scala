@@ -1,71 +1,52 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Persisted-index cache keyed by (SparkContext, dataset dir, source
-  * file mtime), shared by [[DedupOps]] (LSH buckets) and
-  * [[SimilarityOps]] (ANN bucket+norm index). Context-keyed so
-  * `newSession()` clones reuse the parent's relation (see the note on
-  * the map below).
+/** The engine's one index cache: an entry per (SparkContext, dataset
+  * dir, mtime of `$dir/<table>.parquet`), built once and shared by
+  * every query that reads the index. Context-keyed so `newSession()`
+  * clones reuse the parent's relation (see the note on the map
+  * below).
+  *
+  * Ownership rule. Every entry is a cut: its plan reads only
+  * checkpoint leaves ([[graft.Checkpointing.cut]]), which
+  * [[getOrBuild]] checks. An entry may read another entry's leaves —
+  * a merged index is the corpus index's cut unioned with its own delta
+  * cut — so no entry owns a leaf outright: the leaf RDD ids of each
+  * entry are recorded when it is published, and
+  * [[graft.Checkpointing.release]] frees a leaf only when no live
+  * entry of any cache reads it. Eviction, a racing build's loser and
+  * [[invalidate]] all free through that one release.
   *
   * The mtime in the key makes an in-place overwrite of the source
-  * parquet rebuild transparently; [[getOrBuild]] additionally EVICTS
-  * the superseded entry (unpersist + remove) the moment a new mtime is
-  * seen for the same (context, dir) — round 2 left stale relations
-  * pinned in executor storage until a manual invalidate. Entries whose
-  * context has been stopped are evicted on the same sweep (a stopped
-  * context's persisted blocks are gone anyway; keeping the entry just
-  * pins the dead objects).
-  *
-  * A FAILED mtime stat (`None`) is a no-op, not an eviction: the
-  * caller gets whatever live entry exists for (session, dir) — round
-  * 3 keyed stat failures as 0L, so one transient IOException evicted
-  * and rebuilt a healthy index and then left the 0-keyed orphan
-  * persisted until the next successful stat.
+  * parquet rebuild transparently; [[getOrBuild]] also EVICTS the
+  * superseded entry the moment a new mtime is seen for the same
+  * (context, dir), and entries whose context has been stopped on the
+  * same sweep. A FAILED stat is a no-op, not an eviction: the caller
+  * gets whatever live entry exists for (context, dir), so one
+  * transient IOException never evicts and rebuilds a healthy index.
   */
 private[graft] object IndexCache {
-  /** Unpersist the checkpoint-backed blocks behind `df` (the RDDs
-    * inside `LogicalRDD` leaves). These are invisible to the
-    * CacheManager, so `Dataset.unpersist()` can never free them —
-    * without this they stay pinned until JVM GC. Freed through
-    * [[org.apache.spark.GraftUnpersist]], which skips
-    * `RDD.unpersist`'s per-leaf lineage-truncation WARN. */
-  private def freeCheckpoints(df: DataFrame): Unit = {
-    scala.util.Try {
-      df.queryExecution.optimizedPlan.foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          org.apache.spark.GraftUnpersist(l.rdd)
-        case _ => ()
-      }
-    }
-    ()
-  }
+  private val all = scala.collection.concurrent.TrieMap.empty[IndexCache, Unit]
 
-  /** Release EVERY block behind a cached relation: the CacheManager
-    * entry (plain `persist()` builds) AND any checkpoint RDDs
-    * (`localCheckpoint()` builds). */
-  def release(df: DataFrame): Unit = {
-    scala.util.Try(df.unpersist())
-    freeCheckpoints(df)
-  }
+  /** Drop every entry of every cache (releases executor storage). */
+  def invalidateAll(): Unit = all.keys.foreach(_.invalidate())
 
-  /** Free a racing-build LOSER. Checkpoint blocks are always private
-    * to the losing build (each `localCheckpoint` materializes its own
-    * RDD), but a plain `persist()` of the same deterministic plan
-    * SHARES the winner's CacheManager entry — a Dataset-level
-    * unpersist here would evict the winner's storage with it
-    * (IndexCacheSpec pins exactly this), so only the checkpoint-backed
-    * blocks are freed. */
-  def releaseLoser(df: DataFrame): Unit = freeCheckpoints(df)
+  /** Leaf RDD ids read by a live entry of any cache. Callers that
+    * publish or free hold the `IndexCache` lock, so no entry appears
+    * between this read and a free. */
+  private[graft] def liveLeaves: Set[Int] =
+    all.keys.flatMap(_.m.values.flatMap(_._2)).toSet
 }
 
-private[graft] final class IndexCache {
-  import IndexCache.release
+private[graft] final class IndexCache(table: String) {
+  IndexCache.all.put(this, ())
 
   // Keyed by SparkContext, NOT SparkSession: `newSession()` clones
   // (e.g. [[StreamOps]]'s replay sessions) share the context and must
-  // REUSE the parent's persisted relation, not rebuild a twin under a
-  // fresh session key. Round 6 keyed by session, so every stream-gate
+  // REUSE the parent's relation, not rebuild a twin under a fresh
+  // session key. Round 6 keyed by session, so every stream-gate
   // replay clone re-ran the build closure and published an entry that
   // no sweep could ever evict (its session never stops and its mtime
   // never changes) — exactly the interleaving surface flagged against
@@ -73,17 +54,20 @@ private[graft] final class IndexCache {
   // built it, but executing it from a sibling session of the same
   // context is sound: the plan is already analyzed and the blocks
   // live in context-wide storage (CdcDeterminismSpec pins this).
+  // Values: the entry and the ids of the checkpoint leaves it reads.
   private val m = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.SparkContext, String, Long), DataFrame]
+    .empty[(org.apache.spark.SparkContext, String, Long), (DataFrame, Set[Int])]
 
-  def getOrBuild(s: SparkSession, d: String, mtime: Option[Long])
-      (build: => DataFrame): DataFrame = {
+  def getOrBuild(s: SparkSession, d: String)(build: => DataFrame): DataFrame = {
     val sc = s.sparkContext
+    val mtime =
+      try Some(java.nio.file.Files.getLastModifiedTime(
+        java.nio.file.Paths.get(s"$d/$table.parquet")).toMillis)
+      catch { case _: java.io.IOException => None }
     m.keys.foreach { k =>
       val superseded =
         mtime.exists(mt => (k._1 eq sc) && k._2 == d && k._3 != mt)
-      if (superseded || k._1.isStopped)
-        m.remove(k).foreach(release)
+      if (superseded || k._1.isStopped) evict(k)
     }
     val key = mtime match {
       case Some(mt) => (sc, d, mt)
@@ -94,27 +78,30 @@ private[graft] final class IndexCache {
         m.keys.find(k => (k._1 eq sc) && k._2 == d).getOrElse((sc, d, 0L))
     }
     m.get(key) match {
-      case Some(df) => df
+      case Some((df, _)) => df
       case None =>
-        // build OUTSIDE the map, publish with putIfAbsent: TrieMap's
-        // getOrElseUpdate can run `build` in two racing threads, and
-        // the loser's persisted relation would leak executor storage
+        // build OUTSIDE the map and the lock, publish with putIfAbsent:
+        // TrieMap's getOrElseUpdate can run `build` in two racing
+        // threads, and the loser's own leaves would leak executor storage
         val built = build
-        m.putIfAbsent(key, built) match {
-          case Some(winner) =>
-            IndexCache.releaseLoser(built)
-            winner
-          case None => built
+        val plan = built.queryExecution.analyzed
+        require(plan.collectLeaves().forall(_.isInstanceOf[LogicalRDD]),
+          s"an index entry must read only checkpoint leaves:\n$plan")
+        val leaves = graft.Checkpointing.leaves(built).map(_.id).toSet
+        val winner = IndexCache.synchronized {
+          m.putIfAbsent(key, (built, leaves)).map(_._1)
         }
+        winner.foreach(_ => graft.Checkpointing.release(built))
+        winner.getOrElse(built)
     }
   }
 
+  private def evict(k: (org.apache.spark.SparkContext, String, Long)): Unit =
+    IndexCache.synchronized(m.remove(k)).foreach(e => graft.Checkpointing.release(e._1))
+
   /** Drop every cached relation (releases executor storage).
     * Exception-safe: a dead entry can't block the clear. */
-  def invalidate(): Unit = {
-    m.values.foreach(release)
-    m.clear()
-  }
+  def invalidate(): Unit = m.keys.foreach(evict)
 
   /** Test hook: live cache keys. */
   private[graft] def keys

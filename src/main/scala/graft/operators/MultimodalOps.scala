@@ -239,27 +239,14 @@ object MultimodalOps {
   // with a SimHash fingerprint as the perceptual distance
   // ------------------------------------------------------------------
 
-  /** One perceptual index per (session, dataset, mtime) — the media
+  /** One perceptual index per (context, dataset, mtime) — the media
     * sibling of [[DedupOps]]'s LSH bucket index (same [[IndexCache]]
     * discipline: mtime-keyed, superseded entries evicted). */
-  private val nearDupCache = new IndexCache
+  private val nearDupCache = new IndexCache("documents")
 
-  /** One persisted CHUNK STORE per (session, dataset, mtime) — see
+  /** One CHUNK STORE per (context, dataset, mtime) — see
     * [[chunkStore]]. */
-  private val chunkCache = new IndexCache
-
-  /** Drop the persisted perceptual-index + chunk-store relations. */
-  def invalidateIndexes(): Unit = {
-    nearDupCache.invalidate()
-    chunkCache.invalidate()
-    chunkMergedCache.invalidate()
-    storeRewriteCache.invalidate()
-  }
-
-  private def docsMtime(d: String): Option[Long] =
-    try Some(java.nio.file.Files.getLastModifiedTime(
-      java.nio.file.Paths.get(s"$d/documents.parquet")).toMillis)
-    catch { case _: java.io.IOException => None }
+  private val chunkCache = new IndexCache("documents")
 
   /** Per-payload ordered CDC chunk-digest array — one narrow
     * codegen'd pass (boundaries + slices + md5), shared by the
@@ -297,16 +284,18 @@ object MultimodalOps {
     * [[DedupOps]]'s `text_cdc_dedup` — round 6 initially recomputed
     * the corpus-wide CDC+md5 scan inside each consumer.
     *
-    * `localCheckpoint` (eager), not `persist`: the lineage is CUT, so
+    * A cut, like every [[IndexCache]] entry: the lineage is CUT, so
     * every consumer — including `newSession()` replay clones and
     * late-running queries after storage pressure — reads the SAME
     * immutable materialized blocks; there is no silent-recompute path
     * at all, and a lost block fails loud instead of quietly re-scanning
     * (CdcDeterminismSpec runs the whole consumer family against this).
     * One checkpoint per context: the cache is context-keyed, so replay
-    * clones can never materialize a private twin. */
+    * clones can never materialize a private twin. [[mergedChunkStore]]
+    * reads this leaf too, so releasing a merged entry leaves it in
+    * place while this entry is live ([[graft.Checkpointing.release]]). */
   private[graft] def chunkStore(s: SparkSession, d: String): DataFrame =
-    chunkCache.getOrBuild(s, d, docsMtime(d)) {
+    chunkCache.getOrBuild(s, d) {
       chunkStoreRows(graft.sources.Tables.documents(s, d))
         .transform(graft.Checkpointing.cut) // eager: materialize once, cut the lineage
     }
@@ -333,7 +322,7 @@ object MultimodalOps {
 
   /** The merged-chunk-store cache ([[mmCdcStoreMerge]]) — the
     * substring-tier sibling of the two bucket-index merge caches. */
-  private val chunkMergedCache = new IndexCache
+  private val chunkMergedCache = new IndexCache("documents")
 
   /** CHUNK-STORE MERGE (`mm_cdc_store_merge`) — the substring tier's
     * delta completion, closing the triple: every persisted index
@@ -359,7 +348,7 @@ object MultimodalOps {
       .orderBy("doc_id", "chunk_md5")
 
   private[graft] def mergedChunkStore(s: SparkSession, d: String): DataFrame =
-    chunkMergedCache.getOrBuild(s, d, docsMtime(d)) {
+    chunkMergedCache.getOrBuild(s, d) {
       val deltaRows = chunkStoreRows(
         DedupOps.deltaBatch(s, d).select(col("doc_id"), col("text")))
         .transform(graft.Checkpointing.cut) // eager: materialize ONLY the appended rows
@@ -409,9 +398,7 @@ object MultimodalOps {
 
   /** The physically-rewritten chunk store — substring-tier mirror of
     * `dedup_index_rewrite`, same atomic-supersede publication. */
-  private val storeRewriteCache = new IndexCache
-
-  private[graft] def storeRewriteCacheKeys = storeRewriteCache.keys
+  private val storeRewriteCache = new IndexCache("documents")
 
   /** CHUNK-STORE REWRITE — the physical pass that applies
     * [[mmStoreGc]]'s verdicts: the GC emits the reclaim LIST (digests
@@ -432,7 +419,7 @@ object MultimodalOps {
 
   private[graft] def rewrittenChunkStore(s: SparkSession, d: String)
       : DataFrame =
-    storeRewriteCache.getOrBuild(s, d, docsMtime(d)) {
+    storeRewriteCache.getOrBuild(s, d) {
       chunkStore(s, d)
         .filter(!DedupOps.tombstoned(col("doc_id")))
         .groupBy(col("doc_id"), col("chunk_md5"))
@@ -445,10 +432,10 @@ object MultimodalOps {
     * (the exact [[DedupOps]] LSH layout — K lanes, Bands×RowsPerBand
     * banding — applied to chunk digests instead of word shingles)
     * plus a 32-bit SimHash of the same digest multiset as the
-    * perceptual fingerprint. Persisted and mtime-keyed so the pair
-    * self-join scans the cache on both sides. */
+    * perceptual fingerprint. Cut and mtime-keyed so the pair self-join
+    * scans the leaf on both sides. */
   private def chunkIndex(s: SparkSession, d: String): DataFrame =
-    nearDupCache.getOrBuild(s, d, docsMtime(d)) {
+    nearDupCache.getOrBuild(s, d) {
       import graft.functions.Hashing
       val hashed = chunkMd5s(graft.sources.Tables.documents(s, d))
         .select(col("doc_id"),
@@ -460,15 +447,13 @@ object MultimodalOps {
         .select(col("doc_id") +: col("phash") +:
           (0 until Hashing.K).map(i =>
             col("sig").getItem(i).as(s"mh$i")): _*)
-      val idx = sig
+      sig
         .select(col("doc_id"), col("phash"),
           posexplode(array((0 until Hashing.Bands).map(Hashing.bandBucket): _*))
             .as(Seq("band", "bucket")))
         .select(col("doc_id"), col("phash"),
           col("band").cast("long").as("band"), col("bucket"))
-        .persist()
-      idx.count() // materialize once, before any self-join runs
-      idx
+        .transform(graft.Checkpointing.cut)
     }
 
   /** PERCEPTUAL media near-dup (`mm_near_dup`): payloads sharing most

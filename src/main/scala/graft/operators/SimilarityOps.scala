@@ -27,7 +27,7 @@ import graft.sources.Tables
   *    drop in the same place; labels keep it oracle-deterministic).
   *
   * Scale/perf structure (the round-2 rework):
-  *  - bucket + norm are computed ONCE per vector in a persisted
+  *  - bucket + norm are computed ONCE per vector in a cut
   *    relation ([[bucketed]]) shared by every ANN query — round 1
   *    re-ran the interpreted 8-plane × 64-dim fold on both join sides;
   *  - the fold itself is now a codegen'd expression
@@ -65,44 +65,22 @@ object SimilarityOps {
     GraftColumn(LshBucket(GraftColumn.expr(e), Planes, Dims))
 
   /** One materialized (vec_id, embedding, label, bucket, norm) relation
-    * per (session, dataset, file mtime) — the ANN index, persisted and
-    * shared by every query that probes it (self-joins scan the cache on
-    * both sides instead of recomputing the projection); an in-place
-    * overwrite of embeddings.parquet changes the key, rebuilds, and
-    * evicts the superseded relation ([[IndexCache.getOrBuild]]). */
-  private val indexCache = new IndexCache
+    * per (context, dataset, embeddings.parquet mtime) — the ANN index,
+    * cut once and shared by every query that probes it (self-joins scan
+    * the leaf on both sides instead of recomputing the projection); an
+    * in-place overwrite of embeddings.parquet changes the key, rebuilds,
+    * and evicts the superseded relation ([[IndexCache.getOrBuild]]). */
+  private val indexCache = new IndexCache("embeddings")
 
   private[graft] def cacheKeys = indexCache.keys
 
-  /** None on a failed stat — [[IndexCache.getOrBuild]] then reuses the
-    * live entry instead of evicting a healthy index over a transient
-    * filesystem error. */
-  private def embMtime(d: String): Option[Long] =
-    try Some(java.nio.file.Files.getLastModifiedTime(
-      java.nio.file.Paths.get(s"$d/embeddings.parquet")).toMillis)
-    catch { case _: java.io.IOException => None }
-
-  /** Drop the persisted ANN index + trained-quantizer relations (e.g.
-    * to release executor storage). */
-  def invalidateIndexes(): Unit = {
-    indexCache.invalidate()
-    centroidCache.invalidate()
-    pqCache.invalidate()
-    labelCentCache.invalidate()
-    embCompCache.invalidate()
-    annMergedCache.invalidate()
-    annRewriteCache.invalidate()
-  }
-
   private def bucketed(s: SparkSession, d: String): DataFrame =
-    indexCache.getOrBuild(s, d, embMtime(d)) {
-      val wb = emb(s, d)
+    indexCache.getOrBuild(s, d) {
+      emb(s, d)
         .select(col("vec_id"), col("embedding"), col("label"),
           bucketCol(col("embedding")).as("bucket"),
           sqrt(dot(col("embedding"), col("embedding"))).as("norm"))
-        .persist()
-      wb.count() // materialize once, before any self-join runs
-      wb
+        .transform(graft.Checkpointing.cut)
     }
 
   /** Cosine from a precomputed-norm pair: same expression tree as
@@ -492,10 +470,10 @@ object SimilarityOps {
   /** One materialized semantic labeling per (session, dataset, mtime)
     * — shared by `emb_components` and `emb_split_assign`, mirroring
     * the lexical component cache in [[DedupOps]]. */
-  private val embCompCache = new IndexCache
+  private val embCompCache = new IndexCache("embeddings")
 
   private def embComponentsRel(s: SparkSession, d: String): DataFrame =
-    embCompCache.getOrBuild(s, d, embMtime(d)) {
+    embCompCache.getOrBuild(s, d) {
       val pairs = embNearDupPairs(s, d).select(col("vec_a"), col("vec_b"))
       // bipartite encoding: pair i = a bucket holding exactly its two
       // endpoints; the synthetic bucket id (a << 32 | b) is unique per
@@ -527,8 +505,8 @@ object SimilarityOps {
       // the loop's intermediate checkpoints (same discipline as the
       // lexical component cache)
       val all = labels.union(singletons).transform(graft.Checkpointing.cut)
-      IndexCache.release(labels)
-      IndexCache.release(membership)
+      graft.Checkpointing.release(labels)
+      graft.Checkpointing.release(membership)
       all
     }
 
@@ -950,19 +928,17 @@ object SimilarityOps {
     * probe2, train init, PQ codebook, ADC LUT) — materialized once
     * per (session, dataset, mtime) so the decimal-exact aggregation
     * over the posexploded corpus runs once, not per consumer. */
-  private val labelCentCache = new IndexCache
+  private val labelCentCache = new IndexCache("embeddings")
 
   /** Centroid relation shared by [[kmeansAssign]], [[annIvfProbe2]],
     * [[kmeansTrain]]'s initialization and the PQ codebook:
     * (clabel, c ARRAY<DOUBLE>) from the decimal-exact per-(label, dim)
     * means. Tiny (|labels| rows) — always broadcast at the use site. */
   private def centroids(s: SparkSession, d: String): DataFrame =
-    labelCentCache.getOrBuild(s, d, embMtime(d)) {
-      val c = toArrays(meansLong(
+    labelCentCache.getOrBuild(s, d) {
+      toArrays(meansLong(
         emb(s, d).select(col("label").cast("long").as("clabel"),
-          col("embedding")))).persist()
-      c.count() // materialize once, before any consumer broadcasts it
-      c
+          col("embedding")))).transform(graft.Checkpointing.cut)
     }
 
   private def sqDist(a: Column, b: Column): Column =
@@ -1066,14 +1042,14 @@ object SimilarityOps {
     * once per dataset, like the LSH/ANN index relations. The bench
     * builds it in the untimed warm-up (via kmeans_train) so each
     * consumer times its marginal cost. */
-  private val centroidCache = new IndexCache
+  private val centroidCache = new IndexCache("embeddings")
 
   /** The trained coarse quantizer: centroid arrays after
     * [[KmeansIters]] Lloyd's rounds, eagerly materialized
     * (localCheckpoint per round bounds plan depth; the final
     * checkpoint IS the materialization the cache holds). */
   private def trainedCentroids(s: SparkSession, d: String): DataFrame =
-    centroidCache.getOrBuild(s, d, embMtime(d)) {
+    centroidCache.getOrBuild(s, d) {
       lloyd(emb(s, d).select(col("vec_id"), col("embedding")), centroids(s, d))
     }
 
@@ -1558,14 +1534,15 @@ object SimilarityOps {
     * code) and the four chosen distances sum — in fixed subspace
     * order, so the reconstruction error is engine-deterministic.
     *
-    * Scale shape: the codebook is [[PqSubspaces]]·k tiny rows,
-    * BROADCAST; vectors stream through one posexplode (×4 rows) +
-    * codegen'd [[graft.functions.ArraySqDist]] and a bounded
-    * WindowGroupLimit argmin per (vec, subspace); the final pivot is
-    * a combinable agg on vec_id. Vectors never shuffle whole. */
+    * Scale shape: the codebook is [[PqSubspaces]]·k tiny rows, held
+    * on the driver; vectors stream through one projection that takes
+    * each subvector's argmin over its subspace's codes
+    * ([[graft.functions.ArraySqDist]]) and one posexplode (×4 rows);
+    * the final pivot is a combinable agg on vec_id. Vectors never
+    * shuffle whole. */
   /** The per-subspace codebook: (sub, code, cb ARRAY<DOUBLE>) sliced
-    * from the full-dimension centroids. PqSubspaces·k rows — always
-    * broadcast at the use site. */
+    * from the full-dimension centroids. PqSubspaces·k rows —
+    * collected by [[pqAssigned]], broadcast where it is joined. */
   private def pqCodebook(s: SparkSession, d: String): DataFrame =
     centroids(s, d)
       .select(col("clabel").as("code"),
@@ -1578,29 +1555,41 @@ object SimilarityOps {
     * both ADC consumers like the LSH/ANN/component relations (bench
     * builds it in the untimed warm-up; consumers time marginal
     * cost). */
-  private val pqCache = new IndexCache
+  private val pqCache = new IndexCache("embeddings")
 
   /** Every vector's per-subspace nearest code: (vec_id, sub, code,
     * dist), the argmin step shared by [[embPqEncode]] and the ADC
-    * search ([[annPqAdc]]). */
+    * search ([[annPqAdc]]).
+    *
+    * The codebook is collected and each subvector takes the least
+    * (dist, code) over its subspace's codes in one projection — the
+    * order the window over (dist, code) picks — so the cut plan holds
+    * no join: a cut leaf keeps the planner's size estimate of the plan
+    * it cut, and a join's estimate is the product of its sides (a
+    * 362 GB guess for 224 kB of codes at sf0.1), which turned every
+    * ADC join over the leaf into a shuffle join with runtime-filter
+    * jobs. Spread round-robin over `defaultParallelism` partitions
+    * before the cut, as in `dedup_hamming_histogram`, so the ADC join,
+    * whose output is |queries| rows per code, runs in as many tasks. */
   private def pqAssigned(s: SparkSession, d: String): DataFrame =
-    pqCache.getOrBuild(s, d, embMtime(d)) {
-      val subVecs = emb(s, d)
+    pqCache.getOrBuild(s, d) {
+      val book = pqCodebook(s, d).collect()
+      def nearest(m: Int): Column = {
+        val codes = typedLit(book.filter(_.getInt(1) == m).toSeq.map(r =>
+          (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getSeq[Double](2))))
+        val sv = slice(col("embedding"), m * PqSubDim + 1, PqSubDim)
+        array_min(transform(codes, c =>
+          struct(sqDist(sv, c.getField("_2")).as("dist"),
+            c.getField("_1").as("code"))))
+      }
+      emb(s, d)
         .select(col("vec_id"),
-          posexplode(array((0 until PqSubspaces).map(m =>
-            slice(col("embedding"), m * PqSubDim + 1, PqSubDim)): _*))
-            .as(Seq("sub", "sv")))
-      val w = Window.partitionBy(col("vec_id"), col("sub"))
-        .orderBy(col("dist"), col("code"))
-      val a = subVecs.join(broadcast(pqCodebook(s, d)), Seq("sub"))
-        .select(col("vec_id"), col("sub"), col("code"),
-          sqDist(col("sv"), col("cb")).as("dist"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("vec_id"), col("sub"), col("code"), col("dist"))
-        .persist()
-      a.count() // materialize once, before any consumer joins it
-      a
+          posexplode(array((0 until PqSubspaces).map(nearest): _*))
+            .as(Seq("sub", "best")))
+        .select(col("vec_id"), col("sub"), col("best.code").as("code"),
+          col("best.dist").as("dist"))
+        .repartition(s.sparkContext.defaultParallelism)
+        .transform(graft.Checkpointing.cut)
     }
 
   private def pick(m: Int, c: String): Column =
@@ -2001,9 +1990,11 @@ object SimilarityOps {
 
   /** The merged-ANN-index cache ([[annIndexMerge]]) — the embedding
     * side of [[DedupOps]]'s mergedCache: per (context, dir, mtime),
-    * the persisted bucket index EXTENDED by the delta batch's rows;
-    * eviction frees only the appended checkpoint blocks. */
-  private val annMergedCache = new IndexCache
+    * the bucket index EXTENDED by the delta batch's rows. The entry
+    * reads [[bucketed]]'s leaf as well as its own delta cut, so its
+    * eviction frees only the delta leaf while [[indexCache]]'s entry
+    * is live ([[graft.Checkpointing.release]]). */
+  private val annMergedCache = new IndexCache("embeddings")
 
   /** ANN index MERGE — completes [[annIndexUpsert]]'s upsert story
     * exactly as `dedup_index_merge` completes `dedup_delta_probe`'s:
@@ -2015,7 +2006,7 @@ object SimilarityOps {
     * table) is projected to (vec_id, embedding, label, bucket, norm)
     * rows and APPENDED: only the O(delta) rows are computed and
     * materialized (eager `localCheckpoint`); the corpus side of the
-    * published union scans [[bucketed]]'s existing cached blocks
+    * published union scans [[bucketed]]'s existing leaf
     * (AnnIndexMergeSpec pins one new persisted relation + untouched
     * corpus entry). The oracle rebuilds (bucket, norm) from scratch
     * over corpus ∪ delta — bit-equality, including the DOUBLE norms,
@@ -2027,7 +2018,7 @@ object SimilarityOps {
   }
 
   private[graft] def mergedAnnIndex(s: SparkSession, d: String): DataFrame =
-    annMergedCache.getOrBuild(s, d, embMtime(d)) {
+    annMergedCache.getOrBuild(s, d) {
       val deltaRows = emb(s, d)
         .filter(graft.functions.Hashing.charHash(
           col("vec_id").cast("string")) % 10 === DedupOps.DeltaTag)
@@ -2105,7 +2096,7 @@ object SimilarityOps {
 
   /** The physically-rewritten ANN index — embedding-side mirror of
     * `dedup_index_rewrite`, same atomic-supersede publication. */
-  private val annRewriteCache = new IndexCache
+  private val annRewriteCache = new IndexCache("embeddings")
 
   private[graft] def annRewriteCacheKeys = annRewriteCache.keys
 
@@ -2128,7 +2119,7 @@ object SimilarityOps {
 
   private[graft] def rewrittenAnnIndex(s: SparkSession, d: String)
       : DataFrame =
-    annRewriteCache.getOrBuild(s, d, embMtime(d)) {
+    annRewriteCache.getOrBuild(s, d) {
       bucketed(s, d)
         .filter(!DedupOps.tombstoned(col("vec_id")))
         .transform(graft.Checkpointing.cut) // eager: survivors materialized, lineage cut

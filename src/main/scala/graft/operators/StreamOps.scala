@@ -990,7 +990,7 @@ object StreamOps {
     fresh.select(col("vec_fp"), timestamp_seconds(col("vec_id")).as("ts"))
       .write.mode("append").parquet(ledgerDir)
     vecProbe(fresh, corpus).write.mode("append").parquet(outDir)
-    IndexCache.release(fresh)
+    graft.Checkpointing.release(fresh)
   }
 
   /** Substring-dedup gate ON INGEST: each incoming document's

@@ -6,7 +6,6 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.Checkpointing
 import graft.functions.Enrichment
-import graft.operators.IndexCache
 import graft.streaming.Reliability._
 
 /** The reference's scenario topology (scenario.dot: source → enricher
@@ -93,7 +92,7 @@ object EnrichmentPipeline {
                 col(s"$ErrorCol.msg").as("error_msg")).write.mode("overwrite")
               .parquet(s"$dlqPath/batchId=$batchId")
           }
-        } finally IndexCache.release(evaluated)
+        } finally Checkpointing.release(evaluated)
         // returning normally = offset commit = ack (K3); DLQ'd rows are
         // acked too (Either-variant semantics, SURVEY.md §3.3 note)
         ()

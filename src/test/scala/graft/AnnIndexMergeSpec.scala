@@ -12,7 +12,7 @@ class AnnIndexMergeSpec extends SparkSpec {
 
   test("ANN merge materializes ONLY the appended delta rows — the " +
       "cached corpus index is reused, not rebuilt") {
-    SimilarityOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
     // warm the corpus index through an ordinary consumer
     assert(SparkEntry.queries("ann_lsh_probe")(spark, Sf).count() >= 0)
     val keysBefore = SimilarityOps.cacheKeys.filter(_._2 == Sf)

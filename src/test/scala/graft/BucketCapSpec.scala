@@ -42,7 +42,7 @@ class BucketCapSpec extends SparkSpec {
     val fill = (0L until 20L).map(i => (500L + i, junk(i)))
     val dir = writeDocs(big ++ small ++ fill)
 
-    DedupOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
     val pairs = SparkEntry.queries("dedup_lsh_pairs")(spark, dir)
       .collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")))
@@ -63,6 +63,6 @@ class BucketCapSpec extends SparkSpec {
     val bigComps = big.map(_._1).map(comp).toSet
     assert(bigComps.size === 1,
       s"over-cap cluster must remain one component, saw: $bigComps")
-    DedupOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
   }
 }

@@ -32,7 +32,7 @@ class CdcDeterminismSpec extends SparkSpec {
 
   test("text_cdc_dedup is byte-identical across repeated consumer-family " +
       "runs, replay-clone interleaving, and forced chunk-store eviction") {
-    MultimodalOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
     val baseline = canon("text_cdc_dedup")
     assert(baseline.nonEmpty, "pinned corpus must produce cross-doc pairs")
     for (round <- 1 to 3) {
@@ -42,7 +42,7 @@ class CdcDeterminismSpec extends SparkSpec {
       assert(canon("text_cdc_dedup") === baseline,
         s"round $round: diverged after consumer-family run")
       // forced mid-family eviction: the rebuild must be bit-identical
-      MultimodalOps.invalidateIndexes()
+      operators.IndexCache.invalidateAll()
       assert(canon("text_cdc_dedup") === baseline,
         s"round $round: diverged after forced eviction + rebuild")
     }
@@ -50,7 +50,7 @@ class CdcDeterminismSpec extends SparkSpec {
 
   test("a newSession() clone reuses the parent's chunk-store relation " +
       "(context-keyed cache), and the relation is lineage-cut") {
-    MultimodalOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
     val parent = MultimodalOps.chunkStore(spark, Sf)
     // lineage is CUT: the plan bottoms out in a checkpointed RDD, so
     // no consumer can ever trigger a divergent re-scan of the parquet

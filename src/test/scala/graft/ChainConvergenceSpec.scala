@@ -41,7 +41,7 @@ class ChainConvergenceSpec extends SparkSpec {
       s"chain of $n docs took $rounds rounds (log-round bound $bound; " +
         s"the neighbor-only loop needs >= ${links / 2}) — did the " +
         "pointer-jump step regress?")
-    graft.operators.IndexCache.release(labels)
+    Checkpointing.release(labels)
   }
 
   test("pointer jumping does not change the fixpoint on a dense " +
@@ -58,6 +58,6 @@ class ChainConvergenceSpec extends SparkSpec {
     val byDoc = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((0L to 9L).forall(byDoc(_) == 0L))
     assert((200L to 204L).forall(byDoc(_) == 200L))
-    graft.operators.IndexCache.release(labels)
+    Checkpointing.release(labels)
   }
 }

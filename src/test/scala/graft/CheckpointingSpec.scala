@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-import graft.operators.{DedupOps, EventOps, SimilarityOps}
+import graft.operators.{EventOps, SimilarityOps}
 
 /** Round-11 durable-checkpoint seam ([[Checkpointing]]).
   *
@@ -27,20 +27,22 @@ class CheckpointingSpec extends SparkSpec {
     * too), HITS, k-core, Lloyd's k-means and PCA power iteration —
     * every loop that runs in [[Checkpointing.fixpoint]] (CC, k-core,
     * k-means), plus the driver rounds of PageRank, TrustRank, HITS and
-    * PCA, which cut only their static relations. */
+    * PCA, which cut only their static relations. Then one consumer of
+    * each index cut in [[operators.IndexCache]] (LSH buckets, ANN
+    * index, PQ codes, perceptual index, label centroids) and of the
+    * merged chunk store, whose entry reads the chunk store's leaf. */
   private val IterativeGates = Seq(
     "ev_user_pagerank", "ev_user_trustrank",
     "dedup_components", "dedup_components_delta",
     "ev_user_hits", "ev_user_kcore", "kmeans_stability",
-    "emb_principal_dir")
+    "emb_principal_dir",
+    "dedup_lsh_pairs", "ann_ivf", "emb_pq_encode", "mm_near_dup",
+    "kmeans_assign", "mm_cdc_store_merge")
 
   /** The component/index caches memoize across runs — without a reset
     * the second mode would replay the FIRST mode's cached relation and
     * prove nothing. */
-  private def resetCaches(): Unit = {
-    DedupOps.invalidateIndexes()
-    SimilarityOps.invalidateIndexes()
-  }
+  private def resetCaches(): Unit = operators.IndexCache.invalidateAll()
 
   private def rowsOf(name: String): Seq[String] = {
     resetCaches()
@@ -139,7 +141,7 @@ class CheckpointingSpec extends SparkSpec {
     assert(rddDirsUnder(probe).isEmpty)
     val nodes = cut.queryExecution.optimizedPlan.collect { case p => p }.size
     assert(nodes <= 3, "cut must truncate lineage in local mode too")
-    graft.operators.IndexCache.release(cut)
+    Checkpointing.release(cut)
   }
 }
 

@@ -1,7 +1,5 @@
 package graft
 
-import graft.operators.MultimodalOps
-
 /** The substring-tier mirror of IndexMergeSpec / AnnIndexMergeSpec:
   * `mm_cdc_store_merge` appends the delta batch's chunk rows to the
   * persisted CDC chunk store — only the O(delta) appended rows may be
@@ -15,7 +13,7 @@ class ChunkStoreMergeSpec extends SparkSpec {
 
   test("chunk-store merge materializes ONLY the appended delta rows — " +
       "the checkpointed corpus store is reused") {
-    MultimodalOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
     // warm the corpus store through an ordinary consumer
     assert(SparkEntry.queries("mm_cdc_dedup")(spark, Sf).count() >= 0)
     val before = spark.sparkContext.getPersistentRDDs.keySet

@@ -21,8 +21,7 @@ class CompactionSpec extends SparkSpec {
 
   test("index compaction is a logical delete: zero new persisted " +
       "relations, no hash exchange below the output sort") {
-    DedupOps.invalidateIndexes()
-    graft.operators.SimilarityOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
     // warm both indexes through ordinary consumers
     assert(SparkEntry.queries("dedup_lsh_pairs")(spark, Sf).count() >= 0)
     assert(SparkEntry.queries("ann_lsh_buckets")(spark, Sf).count() >= 0)

@@ -27,7 +27,7 @@ class ComponentsSpec extends SparkSpec {
     val rows = labels.orderBy("doc_id").collect()
     assert(rows.length === 11)
     assert(rows.forall(_.getLong(1) === 0L), "every doc labels to min doc 0")
-    graft.operators.IndexCache.release(labels)
+    Checkpointing.release(labels)
   }
 
   test("plan depth stays O(1) in iteration count (localCheckpoint per step)") {
@@ -39,10 +39,10 @@ class ComponentsSpec extends SparkSpec {
     assert(nodeCount <= 3,
       s"expected a checkpoint-truncated plan, got $nodeCount nodes:\n" +
         labels.queryExecution.optimizedPlan.treeString)
-    graft.operators.IndexCache.release(labels)
+    Checkpointing.release(labels)
   }
 
-  test("IndexCache.release frees checkpoint-backed blocks that " +
+  test("Checkpointing.release frees checkpoint-backed blocks that " +
       "Dataset.unpersist cannot reach") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val labels = DedupOps.propagateMinLabels(chainBk(10))
@@ -54,7 +54,7 @@ class ComponentsSpec extends SparkSpec {
     // Dataset.unpersist is a CacheManager no-op on a checkpointed plan;
     // release must actually drop the blocks (async — poll)
     labels.unpersist()
-    graft.operators.IndexCache.release(labels)
+    Checkpointing.release(labels)
     val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
     def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     while (leaked.nonEmpty && System.nanoTime() < deadline)
@@ -75,6 +75,6 @@ class ComponentsSpec extends SparkSpec {
     val byDoc = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((0L to 5L).forall(byDoc(_) === 0L))
     assert((100L to 105L).forall(byDoc(_) === 100L))
-    graft.operators.IndexCache.release(labels)
+    Checkpointing.release(labels)
   }
 }

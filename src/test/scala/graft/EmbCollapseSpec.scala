@@ -39,7 +39,7 @@ class EmbCollapseSpec extends SparkSpec {
     val fill = (0L until 20L).map(i => (500L + i, vec(1000 + i.toInt), 2))
     val dir = writeEmb(dupGroup ++ Seq((50L, near, 1)) ++ fill)
 
-    SimilarityOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
     val pairs = SparkEntry.queries("emb_near_dup")(spark, dir)
       .collect()
       .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b")))
@@ -60,7 +60,7 @@ class EmbCollapseSpec extends SparkSpec {
       s"dup group + near-dup must form one component, saw: $clusterComps")
     // fillers stay singletons
     assert((500L until 520L).forall(id => comp(id) == id))
-    SimilarityOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
   }
 
   test("canon window keys its exchange on the md5 fingerprint, " +
@@ -74,7 +74,7 @@ class EmbCollapseSpec extends SparkSpec {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.types.ArrayType
-    SimilarityOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
     val qe = SparkEntry.queries("emb_near_dup")(spark, Sf).queryExecution
     val plan = qe.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.initialPlan
@@ -87,7 +87,7 @@ class EmbCollapseSpec extends SparkSpec {
     for (h <- keyed; e <- h.expressions)
       assert(!e.dataType.isInstanceOf[ArrayType],
         s"hash exchange keyed on an array-typed expression: $h")
-    SimilarityOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
   }
 
   test("fingerprint fuzz: equal iff element-equal under the documented " +

@@ -49,10 +49,7 @@ class EmptyCorpusSpec extends SparkSpec {
 
   test("every registered query runs on an empty-but-schema'd corpus " +
       "(the pruned-partition / new-tenant input shape)") {
-    operators.DedupOps.invalidateIndexes()
-    operators.SimilarityOps.invalidateIndexes()
-    operators.TextOps.invalidateIndexes()
-    operators.MultimodalOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         try { fn(spark, emptyDir).collect(); None }
@@ -66,10 +63,7 @@ class EmptyCorpusSpec extends SparkSpec {
       s"${failures.size} queries fail on the empty corpus:\n  " +
         failures.mkString("\n  "))
     // fresh caches for whatever suite runs next in this JVM
-    operators.DedupOps.invalidateIndexes()
-    operators.SimilarityOps.invalidateIndexes()
-    operators.TextOps.invalidateIndexes()
-    operators.MultimodalOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
   }
 
   test("grouping family on empty input: zero groups, no ANSI " +

@@ -54,7 +54,7 @@ class FixpointSpec extends SparkSpec {
     assert(superseded.forall(id => !cached(id)),
       s"superseded states still hold blocks: ${superseded.filter(cached)}")
     assert(cached(outRdd.head), "the returned state must stay materialized")
-    graft.operators.IndexCache.release(out)
+    Checkpointing.release(out)
   }
 
   test("releasing superseded local-checkpoint state logs no " +
@@ -91,7 +91,7 @@ class FixpointSpec extends SparkSpec {
     val truncation =
       warns.asScala.filter(_.contains("was locally checkpointed"))
     assert(truncation.isEmpty, s"release logged: $truncation")
-    graft.operators.IndexCache.release(out)
+    Checkpointing.release(out)
   }
 
   test("a zero-round convergence returns init, uncut") {

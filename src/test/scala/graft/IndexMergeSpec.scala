@@ -16,7 +16,7 @@ class IndexMergeSpec extends SparkSpec {
 
   test("merge materializes ONLY the appended delta rows — the cached " +
       "corpus index is reused, not rebuilt") {
-    DedupOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
     // warm the corpus index through an ordinary consumer
     assert(SparkEntry.queries("dedup_lsh_pairs")(spark, Sf).count() >= 0)
     val keysBefore = DedupOps.cacheKeys.filter(_._2 == Sf)

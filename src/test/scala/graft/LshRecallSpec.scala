@@ -120,10 +120,7 @@ class LshRecallSpec extends SparkSpec {
   test("index invalidation rebuilds to identical results") {
     val before = SparkEntry.queries("dedup_lsh_pairs")(spark, Sf)
       .as[(Long, Long)].collect().toSeq
-    graft.operators.DedupOps.invalidateIndexes()
-    graft.operators.SimilarityOps.invalidateIndexes()
-    graft.operators.TextOps.invalidateIndexes()
-    graft.operators.MultimodalOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
     val after = SparkEntry.queries("dedup_lsh_pairs")(spark, Sf)
       .as[(Long, Long)].collect().toSeq
     assert(after === before)

@@ -41,10 +41,10 @@ class MmSavingsSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
-    MultimodalOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
     val out = MultimodalOps.mmDedupSavings(spark, dir).collect()
       .map(r => r.getAs[String]("format") -> r).toMap
-    MultimodalOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
     assert(out("rgb").getAs[Long]("total_bytes") == 198L)
     assert(out("rgb").getAs[Long]("stored_bytes") == 99L,
       "twin chunks are byte-identical, so the store keeps one copy")

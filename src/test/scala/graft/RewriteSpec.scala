@@ -18,7 +18,7 @@ class RewriteSpec extends SparkSpec {
 
   test("rewrite materializes only the survivors and never re-reads " +
       "the corpus parquet") {
-    DedupOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
     // warm the corpus index through an ordinary consumer
     assert(SparkEntry.queries("dedup_lsh_pairs")(spark, Sf).count() >= 0)
     val keysBefore = DedupOps.cacheKeys.filter(_._2 == Sf)
@@ -69,8 +69,7 @@ class RewriteSpec extends SparkSpec {
   test("ANN and chunk-store rewrites share the contract: one new " +
       "persisted relation each, no file scan, equality with their " +
       "compact/GC-complement") {
-    graft.operators.SimilarityOps.invalidateIndexes()
-    graft.operators.MultimodalOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
     // warm both indexes through ordinary consumers
     assert(SparkEntry.queries("ann_lsh_buckets")(spark, Sf).count() >= 0)
     assert(SparkEntry.queries("mm_cdc_dedup")(spark, Sf).count() >= 0)

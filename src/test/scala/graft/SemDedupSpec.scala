@@ -22,7 +22,7 @@ class SemDedupSpec extends SparkSpec {
       .map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("keep")).toMap
 
   test("lead-window removal set equals the bounded self-join mirror") {
-    SimilarityOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
     val af = SimilarityOps.semAssigned(spark, Sf)
     val a = af.select(col("clabel"), col("pos"),
       col("embedding").as("ea"), col("norm").as("na"))
@@ -51,7 +51,7 @@ class SemDedupSpec extends SparkSpec {
   }
 
   test("the first member of every cell order always survives") {
-    SimilarityOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
     val keep = keepMap()
     val heads = SimilarityOps.semAssigned(spark, Sf)
       .filter(col("pos") === 1L).select(col("vec_id"))
@@ -62,7 +62,7 @@ class SemDedupSpec extends SparkSpec {
   }
 
   test("per-cell stats aggregate the keep relation exactly") {
-    SimilarityOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
     val keep = SparkEntry.queries("emb_semdedup")(spark, Sf).collect()
       .map(r => (r.getAs[Long]("clabel"), r.getAs[Long]("keep")))
     val expected = keep.groupBy(_._1).map { case (c, g) =>
@@ -96,7 +96,7 @@ class SemDedupSpec extends SparkSpec {
     (cluster ++ fill).toDF("vec_id", "embedding", "label")
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$dir/embeddings.parquet")
-    SimilarityOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
     val rows = SparkEntry.queries("emb_semdedup")(spark, dir).collect()
       .map(r => r.getAs[Long]("vec_id") ->
         ((r.getAs[Long]("keep"), r.getAs[Double]("dist")))).toMap
@@ -108,11 +108,11 @@ class SemDedupSpec extends SparkSpec {
     val expected = members.sortBy(id => (-rows(id)._2, id)).head
     assert(kept.head === expected,
       "the far-from-centroid member is the SemDeDup representative")
-    SimilarityOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
   }
 
   test("no array-keyed exchange, no pair-materializing join") {
-    SimilarityOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
     val qe = SparkEntry.queries("emb_semdedup")(spark, Sf).queryExecution
     val plan = qe.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.initialPlan
@@ -143,6 +143,6 @@ class SemDedupSpec extends SparkSpec {
       assert(!k.references.exists(_.name == "clabel"),
         s"equi-join keyed on the cell id — an O(cell²) pair join " +
           s"crept in: $k"))
-    SimilarityOps.invalidateIndexes()
+    operators.IndexCache.invalidateAll()
   }
 }
