@@ -172,25 +172,32 @@ object StreamOps {
     *  1. Driving: `Trigger.AvailableNow` + `foreachBatch` +
     *     [[awaitDrained]] happen here and nowhere else.
     *  2. Temp-dir lifetime: each replay gets one fresh temp dir `root`.
-    *     Its output, ledger, state and compaction dirs are children of
-    *     `root`, and `root` is deleted in a `finally`, whether the
-    *     replay succeeds or throws. `perBatch(root)` is built before
-    *     the query starts; `readout(root)` runs after the drain and must
-    *     materialize (cut) what it returns before the dirs go.
+    *     Its output, ledger, state, compaction and `checkpoint` dirs
+    *     are children of `root`, and `root` is deleted in a `finally`,
+    *     whether the replay succeeds or throws. `perBatch(root)` is
+    *     built before the query starts; `readout(root)` runs after the
+    *     drain and must materialize (cut) what it returns before the
+    *     dirs go.
     *  3. Reading a dir back: [[readDir]] is the one reader.
     *  4. Output schema: a gate reads its dir back with the schema of
     *     the frame it writes ([[writtenSchema]]), so the read cannot
     *     drift from the `select` that wrote the files. */
   private[graft] def replay(stream: DataFrame)(
       perBatch: String => (DataFrame, Long) => Unit)(
-      readout: String => DataFrame): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft-replay")
-      .toString
-    try {
+      readout: String => DataFrame): DataFrame =
+    withTempDir("graft-replay") { root =>
       awaitDrained(stream.writeStream.trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", s"$root/checkpoint")
         .foreachBatch(perBatch(root)).start())
       readout(root)
-    } finally deleteRecursively(new java.io.File(root))
+    }
+
+  /** `body` over a fresh temp dir named `prefix…`, deleted in a
+    * `finally` whether `body` returns or throws. */
+  private def withTempDir[T](prefix: String)(body: String => T): T = {
+    val root = java.nio.file.Files.createTempDirectory(prefix).toString
+    try body(root)
+    finally deleteRecursively(new java.io.File(root))
   }
 
   /** Read a replay dir with the EXPLICIT schema, falling back to the
@@ -237,12 +244,15 @@ object StreamOps {
     replay(eventsStream(s, d))(root => (b, _) => batch(b, s"$root/state"))(
       root => readout(s"$root/state").transform(graft.Checkpointing.cut))
 
-  private def runToTable(s: SparkSession, df: DataFrame, mode: String)
-      : DataFrame = {
+  /** Drains `df` into a memory-sink table and returns it. The query's
+    * checkpoint lives in a `graft-table` temp dir that is deleted once
+    * the drain has ended; the table's rows live in the sink. */
+  private[graft] def runToTable(s: SparkSession, df: DataFrame, mode: String)
+      : DataFrame = withTempDir("graft-table") { root =>
     val qn = s"graft_stream_${nameCounter.incrementAndGet()}"
-    val q = df.writeStream.format("memory").queryName(qn)
-      .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-    awaitDrained(q)
+    awaitDrained(df.writeStream.format("memory").queryName(qn)
+      .option("checkpointLocation", s"$root/checkpoint")
+      .outputMode(mode).trigger(Trigger.AvailableNow()).start())
     s.table(qn)
   }
 

@@ -1,12 +1,18 @@
 package graft.streaming
 
 import java.io.IOException
-import java.util.concurrent.TimeoutException
+import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException,
+  FutureTask, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit,
+  TimeoutException}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, StringType, StructField,
+  StructType}
 
 /** The reference's reliability semantics (SURVEY.md §2.6), re-expressed
   * as a thin layer around sources/sinks — NOT as operators. This module
@@ -52,21 +58,97 @@ object Reliability {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Error-column schema: `STRUCT<clazz, msg, temporary>`, null = ok. */
+  /** The error column, of type [[ErrorType]]; null = ok. */
   val ErrorCol = "error"
 
   /** E8 result shape: value XOR error, as nullable struct fields. */
   final case class StageError(clazz: String, msg: String, temporary: Boolean)
   final case class StageResult(value: String, error: StageError)
 
-  /** E8 + E3/E4: lift a fallible scalar function into an error-as-value
-    * UDF producing `STRUCT<value, error STRUCT<clazz,msg,temporary>>`,
-    * one [[attempt]] per row. Used only where logic is genuinely
+  /** [[StageError]] as a column type: `STRUCT<clazz, msg, temporary>`. */
+  val ErrorType: StructType = StructType(Seq(
+    StructField("clazz", StringType),
+    StructField("msg", StringType),
+    StructField("temporary", BooleanType, nullable = false)))
+
+  /** Most service calls one task keeps in flight: the reference's
+    * service time is waiting, not work, so 8 calls overlap most of it
+    * while a task holds at most 8 rows pending. */
+  val MaxInFlight = 8
+
+  /** Threads of the one JVM-wide call pool: four local tasks keep
+    * [[MaxInFlight]] calls each in flight without queueing, and no
+    * number of tasks can start more threads than this. */
+  val PoolThreads = 32
+
+  private[graft] lazy val pool: ThreadPoolExecutor = {
+    val n = new AtomicInteger(0)
+    val p = new ThreadPoolExecutor(PoolThreads, PoolThreads,
+      30L, TimeUnit.SECONDS, new LinkedBlockingQueue[Runnable](),
+      (r: Runnable) => {
+        val t = new Thread(r, s"graft-fallible-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    p.allowCoreThreadTimeOut(true)
+    p
+  }
+
+  /** E8 + J3: the fallible stage as a partition operator. Appends
+    * `out STRING` (the service's value) and [[ErrorCol]] (null = ok)
+    * to `df`, one [[attempt]] of `f` per row on column `in`.
+    *
+    * Like the reference's Futures variant (FuturesProcessor.scala:56-63)
+    * it starts calls eagerly and joins them afterwards: each task keeps
+    * up to [[MaxInFlight]] calls running on [[pool]] and emits rows in
+    * input order (SURVEY.md:1059, `mapPartitions` with async batching).
+    * A throwable [[attempt]] lets through (a fatal error, an interrupt)
+    * is rethrown on the task thread, so the task fails and the batch
+    * replays; it never becomes an error value. When the task ends,
+    * however it ends, its outstanding calls are cancelled.
+    *
+    * `f` runs off the task thread: it sees no `TaskContext` and none of
+    * the task's thread-locals. Used only where logic is genuinely
     * fallible/external — pure enrichment stays as native columns. */
-  def fallible(f: String => String, attempts: Int = 1): Column => Column = {
+  def fallible(df: DataFrame, in: String, out: String,
+      f: String => String, attempts: Int): DataFrame = {
     require(attempts >= 1, s"attempts=$attempts must be at least 1")
-    val u = udf((s: String) => attempt(f, attempts)(s))
-    (c: Column) => u(c)
+    val i = df.schema.fieldIndex(in)
+    val schema = df.schema.add(out, StringType).add(ErrorCol, ErrorType)
+    df.mapPartitions(inFlight(_) { r =>
+      val StageResult(v, e) = attempt(f, attempts)(r.getString(i))
+      Row.fromSeq(r.toSeq :+ v :+
+        (if (e == null) null else Row(e.clazz, e.msg, e.temporary)))
+    })(Encoders.row(schema))
+  }
+
+  /** `call` on each element of one task's partition, up to
+    * [[MaxInFlight]] calls in flight on [[pool]], results in input
+    * order. A call's throwable is rethrown unwrapped; a task completion
+    * listener cancels the calls still pending, and takes them off the
+    * pool's queue. */
+  private def inFlight[A, B](rows: Iterator[A])(call: A => B): Iterator[B] = {
+    val pending = new ConcurrentLinkedQueue[FutureTask[B]]()
+    TaskContext.get().addTaskCompletionListener[Unit] { _ =>
+      pending.forEach { t => t.cancel(true); pool.remove(t); () }
+    }
+    def fill(): Unit = while (pending.size < MaxInFlight && rows.hasNext) {
+      val a = rows.next()
+      val t = new FutureTask[B](() => call(a))
+      pending.add(t)
+      pool.execute(t)
+    }
+    new Iterator[B] {
+      def hasNext: Boolean = { fill(); !pending.isEmpty }
+      def next(): B = {
+        fill()
+        // peek, not poll: a call stays cancellable until it has ended
+        val t = pending.peek()
+        val b = try t.get() catch { case e: ExecutionException => throw e.getCause }
+        pending.poll()
+        b
+      }
+    }
   }
 
   /** The row function behind [[fallible]]: temporary failures are

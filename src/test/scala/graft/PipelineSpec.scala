@@ -3,6 +3,7 @@ package graft
 import java.io.IOException
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.streaming.EnrichmentPipeline
 
@@ -96,6 +97,73 @@ class PipelineSpec extends SparkSpec {
         case (k, v) => k -> v.size }}")
   }
 
+  test("the observed ledger equals each batch's sink row counts") {
+    val in = tmpDir("ledger-in"); val ok = tmpDir("ledger-ok")
+    val dlq = tmpDir("ledger-dlq"); val cp = tmpDir("ledger-cp")
+    (0L until 120L).map(i => (i, s"Input Data: $i")).toDF("id", "value")
+      .repartition(3).write.mode("overwrite").parquet(in)
+    val q = EnrichmentPipeline.start(
+      spark.readStream.schema("id LONG, value STRING")
+        .option("maxFilesPerTrigger", "1").parquet(in),
+      ok, dlq, cp, CallFaults.service("ledger", seed = 5L))
+    q.awaitTermination()
+    val batches = q.recentProgress.toSeq.filter(_.numInputRows > 0)
+    assert(batches.size == 3, s"${batches.size} batches")
+    val ledgers = batches.map { p =>
+      val m = p.observedMetrics.get(EnrichmentPipeline.LedgerName)
+      assert(m != null, s"batch ${p.batchId} reported no ledger")
+      val got = Seq("n_in", "n_ok", "n_dlq", "n_temporary").map(m.getAs[Long])
+      val okN = spark.read.parquet(s"$ok/batchId=${p.batchId}").count()
+      val dlqRows = spark.read.parquet(s"$dlq/batchId=${p.batchId}")
+      val dlqN = dlqRows.count()
+      val tempN = dlqRows.filter(col("error_class") === "java.io.IOException")
+        .count()
+      assert(got == Seq(okN + dlqN, okN, dlqN, tempN), s"batch ${p.batchId}")
+      assert(p.numInputRows == okN + dlqN)
+      got
+    }
+    assert(ledgers.map(_.head).sum == 120L)
+    assert(ledgers.map(_(3)).sum > 0L && ledgers.map(_(2)).sum > ledgers.map(_(3)).sum,
+      "the fault model must give both temporary and unrecoverable rows")
+  }
+
+  test("sink schemas: ok and DLQ parquet keep the UDF-path fields, types " +
+      "and nullability") {
+    val in = tmpDir("schema-in"); val ok = tmpDir("schema-ok")
+    val dlq = tmpDir("schema-dlq"); val cp = tmpDir("schema-cp")
+    (0L until 20L).map(i => (i, s"Input Data: $i")).toDF("id", "value")
+      .write.mode("overwrite").parquet(in)
+    val source = spark.readStream.schema("id LONG, value STRING").parquet(in)
+    def f(n: String, t: DataType) = StructField(n, t)
+    def assertFields(got: StructType, want: StructType, what: String): Unit = {
+      assert(got.fieldNames.toSeq == want.fieldNames.toSeq, what)
+      got.fields.zip(want.fields).foreach { case (g, w) =>
+        assert(g == w, s"$what.${w.name}")
+      }
+    }
+    // the schemas the UDF-lift stage produced, written out literally
+    def data(nullable: Boolean) = StructType(Seq(
+      StructField("input", StructType(Seq(f("id", LongType),
+        f("value", StringType))), nullable),
+      f("extra1", StringType), f("extra2", StringType),
+      StructField("extra3", StructType(Seq(
+        StructField("name", StringType, nullable))), nullable)))
+    assertFields(EnrichmentPipeline.enrichFallible(source, svc).schema,
+      StructType(Seq(f("id", LongType), f("value", StringType),
+        StructField("data", data(nullable = false), nullable = false),
+        f("additional", StringType),
+        f("error", StructType(Seq(f("clazz", StringType), f("msg", StringType),
+          StructField("temporary", BooleanType, nullable = false)))))),
+      "frame")
+    EnrichmentPipeline.start(source, ok, dlq, cp, svc).awaitTermination()
+    assertFields(spark.read.parquet(s"$ok/batchId=0").schema,
+      StructType(Seq(f("id", LongType), f("value", StringType),
+        f("data", data(nullable = true)), f("additional", StringType))), "ok")
+    assertFields(spark.read.parquet(s"$dlq/batchId=0").schema,
+      StructType(Seq(f("id", LongType), f("value", StringType),
+        f("error_class", StringType), f("error_msg", StringType))), "dlq")
+  }
+
   test("S1 rate source feeds the pipeline: live micro-batches produce rows") {
     import org.apache.spark.sql.streaming.Trigger
     val src = EnrichmentPipeline.rateSource(spark, rowsPerSecond = 100)
@@ -127,8 +195,8 @@ class PipelineSpec extends SparkSpec {
     (0L until 5L).map(i => (i, s"Input Data: $i")).toDF("id", "value")
       .write.mode("overwrite").parquet(in)
     // flaky *service* with temporary failures that succeed on retry
-    // happens at row level via fallible(f, attempts) — here we assert the
-    // sink-level retry combinator drives a flaky write to success
+    // happens at row level via fallible's `attempts` — here we assert
+    // the sink-level retry combinator drives a flaky write to success
     var failures = 2
     val flakyWrite: String => String = { s =>
       if (failures > 0) { failures -= 1; throw new IOException("sink down") }

@@ -52,15 +52,15 @@ class ReliabilitySpec extends SparkSpec {
   }
 
   test("E8 fallible: value XOR error, classification preserved") {
-    val f = Reliability.fallible {
+    val f: String => String = {
       case "boom" => throw new IllegalArgumentException("bad")
       case "flaky" => throw new IOException("net")
       case s => s.toUpperCase
     }
-    val rows = Seq("ok", "boom", "flaky").toDF("v")
-      .select(f(col("v")).as("r"))
-      .select(col("r.value"), col("r.error.clazz"),
-        coalesce(col("r.error.temporary"), lit(false)))
+    val rows = Reliability.fallible(Seq("ok", "boom", "flaky").toDF("v"),
+        "v", "value", f, attempts = 1)
+      .select(col("value"), col("error.clazz"),
+        coalesce(col("error.temporary"), lit(false)))
       .as[(String, String, Boolean)].collect().toSeq
     assert(rows(0) == (("OK", null, false)))
     assert(rows(1)._1 == null)
@@ -73,15 +73,13 @@ class ReliabilitySpec extends SparkSpec {
   test("E3 row-level bounded retry inside fallible(f, attempts)") {
     // deterministic flaky service: fails twice per distinct input then
     // succeeds (mock-Dao pattern, AkkaPipelineActorsTest.scala:59-77)
-    val f = Reliability.fallible(
-      FlakyRegistry.failTwiceThenUpper("rspec1"), attempts = 3)
-    val g = Reliability.fallible(
-      FlakyRegistry.failTwiceThenUpper("rspec2"), attempts = 2)
-    val ok = Seq("a").toDF("v").select(f(col("v")).as("r"))
-      .select("r.value").as[String].head()
+    val ok = Reliability.fallible(Seq("a").toDF("v"), "v", "r",
+        FlakyRegistry.failTwiceThenUpper("rspec1"), attempts = 3)
+      .select("r").as[String].head()
     assert(ok == "A", "3 attempts survive 2 temporary failures")
-    val err = Seq("b").toDF("v").select(g(col("v")).as("r"))
-      .select("r.error.temporary").as[Boolean].head()
+    val err = Reliability.fallible(Seq("b").toDF("v"), "v", "r",
+        FlakyRegistry.failTwiceThenUpper("rspec2"), attempts = 2)
+      .select("error.temporary").as[Boolean].head()
     assert(err, "2 attempts exhaust and surface the temporary error")
   }
 
@@ -117,7 +115,7 @@ class ReliabilitySpec extends SparkSpec {
   }
 }
 
-/** Executor-side registry of stateful flaky services (udf closures
+/** Executor-side registry of stateful flaky services (task closures
   * must be serializable; state lives in this JVM-global object, which
   * works in local mode where driver and executors share the JVM). */
 object FlakyRegistry {
