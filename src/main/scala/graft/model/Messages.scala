@@ -26,12 +26,3 @@ final case class EnrichedData(
 )
 
 final case class OutputData(data: EnrichedData, additional: String)
-
-/** Error-as-value wrapper mirroring the reference's
-  * `type Result[T] = Either[Throwable, T]`
-  * (ErrorHandlingRxEnrichmentPipeline.scala:23-27). On the DataFrame
-  * surface this is a nullable `error STRUCT<clazz STRING, msg STRING,
-  * temporary BOOLEAN>` column next to the value; a row is OK iff
-  * `error IS NULL`.
-  */
-final case class PipelineError(clazz: String, msg: String, temporary: Boolean)

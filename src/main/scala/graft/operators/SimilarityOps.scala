@@ -2098,8 +2098,6 @@ object SimilarityOps {
     * `dedup_index_rewrite`, same atomic-supersede publication. */
   private val annRewriteCache = new IndexCache("embeddings")
 
-  private[graft] def annRewriteCacheKeys = annRewriteCache.keys
-
   /** ANN INDEX REWRITE — the targeted physical reclaim between
     * `ann_index_compact`'s logical delete and the all-or-nothing
     * mtime rebuild: materialize the SURVIVING rows of the persisted

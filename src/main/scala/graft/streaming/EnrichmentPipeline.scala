@@ -44,8 +44,11 @@ import graft.streaming.Reliability._
   *  - K3 ack → checkpoint commit after the batch's writes succeed;
   *    crash before commit ⇒ replay ⇒ at-least-once, exactly the
   *    README.md:13-17 contract
-  *  - E3/E4 retry → [[Reliability.retry]] around the sink writes
-  *    (temporary infra failures), batch replay for anything worse.
+  *  - E3/E4 retry → [[Reliability.retry]] around each sink write,
+  *    [[WriteTries]] calls in all (temporary infra failures), batch
+  *    replay for anything worse. A row's service call is made once:
+  *    its failure, temporary or not, is its outcome, a
+  *    [[Reliability.StageError]] routed to the DLQ.
   *
   * Idempotence: writes go to `batchId=`-suffixed directories with
   * overwrite mode, so a replayed batch overwrites rather than
@@ -54,7 +57,7 @@ import graft.streaming.Reliability._
   */
 object EnrichmentPipeline {
   /** S1/P5: tick source → Data(id, value) rows. */
-  def rateSource(spark: SparkSession, rowsPerSecond: Int = 1): DataFrame =
+  def rateSource(spark: SparkSession, rowsPerSecond: Int): DataFrame =
     spark.readStream.format("rate")
       .option("rowsPerSecond", rowsPerSecond).load()
       .select(col("value").as("id"),
@@ -72,13 +75,18 @@ object EnrichmentPipeline {
   def enrichFallible(in: DataFrame, svc: String => String): DataFrame =
     fallible(in.select(col("id"), col("value"),
         Enrichment.enriched(col("id"), col("value")).as("data")),
-      "value", "additional", svc, attempts = 1)
+      "value", "additional", svc)
 
   /** The per-batch delivery ledger, reported under this name in
     * `StreamingQueryProgress.observedMetrics`: `n_in` rows in,
     * `n_ok` and `n_dlq` routed to each sink, `n_temporary` of the DLQ
     * rows failed temporarily. */
   val LedgerName = "ledger"
+
+  /** Calls [[Reliability.retry]] makes of each sink write: a temporary
+    * infra failure is absorbed within the batch twice; the third fails
+    * the batch, which replays. */
+  val WriteTries = 3
 
   /** Full reliable pipeline: source → enrich → dual-sink foreachBatch
     * with retry + DLQ + checkpoint ack. */
@@ -88,7 +96,6 @@ object EnrichmentPipeline {
       dlqPath: String,
       checkpointPath: String,
       svc: String => String = identity,
-      maxRetries: Int = 3,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     enrichFallible(source, svc)
       // counted by the cut job below, so the ledger costs no job
@@ -104,10 +111,10 @@ object EnrichmentPipeline {
         val evaluated = Checkpointing.cut(batch)
         try {
           val (ok, dlq) = Reliability.split(evaluated)
-          sideBySide(s"enrichment-ok-$batchId")(retry(maxRetries) {
+          sideBySide(s"enrichment-ok-$batchId")(retry(WriteTries) {
             ok.drop(ErrorCol).write.mode("overwrite")
               .parquet(s"$okPath/batchId=$batchId")
-          })(retry(maxRetries) {
+          })(retry(WriteTries) {
             dlq.select(col("id"), col("value"),
                 col(s"$ErrorCol.clazz").as("error_class"),
                 col(s"$ErrorCol.msg").as("error_msg")).write.mode("overwrite")

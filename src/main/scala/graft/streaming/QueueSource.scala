@@ -1,30 +1,24 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
-/** S4 queue-source selection — the reference consumes RabbitMQ
+/** S4 queue source — the reference consumes RabbitMQ
   * (reference README.md:7,13-17; Services.scala:70-73): an unbounded
   * broker queue where an ack is what releases a message. Spark's
   * analogue of the broker contract is a REPLAYABLE OFFSET-TRACKED
   * source + checkpoint commit as the ack (EnrichmentPipeline's
-  * foreachBatch boundary); this object selects the concrete source by
-  * configuration so the SAME pipeline runs against:
+  * foreachBatch boundary); this object is the Kafka wiring of that
+  * source, via the public `spark-sql-kafka-0-10` data source.
   *
-  *  - `kafka` — the production analogue, via the public
-  *    `spark-sql-kafka-0-10` data source. The option map is built
-  *    here ([[kafkaOptions]]) and the record→(id, value) projection
-  *    ([[fromKafkaRecords]]) is a pure expression over Kafka's public
-  *    record schema (key/value binary, topic, partition, offset,
-  *    timestamp) — both unit-tested without a broker. The sandbox
-  *    ships no Kafka connector jar, so `load("kafka")` fails fast
-  *    with Spark's missing-provider error (KafkaWiringSpec pins that
-  *    too); on a real cluster the same call binds the moment the
-  *    connector is on the classpath — no graft code changes.
-  *  - `file` — the replayable-directory stand-in QueueSourceSpec and
-  *    PipelineSpec prove the ack contract on.
-  *  - `rate` — the S1 tick source.
+  * The option map is built here ([[kafkaOptions]]) and the
+  * record→(id, value) projection ([[fromKafkaRecords]]) is a pure
+  * expression over Kafka's public record schema (key/value binary,
+  * topic, partition, offset, timestamp) — both unit-tested without a
+  * broker. The sandbox ships no Kafka connector jar, so [[kafka]]
+  * fails fast with Spark's missing-provider error (KafkaWiringSpec
+  * pins that too); on a real cluster the same call binds the moment
+  * the connector is on the classpath — no graft code changes.
   *
   * At scale, `maxOffsetsPerTrigger` is the back-pressure knob (bounds
   * each micro-batch; the checkpoint ack already bounds redelivery),
@@ -33,22 +27,17 @@ import org.apache.spark.sql.types.StructType
   */
 object QueueSource {
 
-  /** @param kind     "kafka" | "file" | "rate"
-    * @param topic    Kafka subscribe pattern, or the source directory
-    *                 for `file`
+  /** @param topic    Kafka subscribe pattern
     * @param bootstrapServers Kafka bootstrap list (host:port,…)
     * @param startingOffsets  "earliest" (backfill) | "latest"
     * @param failOnDataLoss   fail the batch if offsets vanished
-    * @param maxOffsetsPerTrigger per-micro-batch record cap
-    * @param schema   required for `file` sources */
+    * @param maxOffsetsPerTrigger per-micro-batch record cap */
   final case class QueueConfig(
-      kind: String,
       topic: String = "",
       bootstrapServers: String = "",
       startingOffsets: String = "earliest",
       failOnDataLoss: Boolean = true,
-      maxOffsetsPerTrigger: Option[Long] = None,
-      schema: Option[StructType] = None)
+      maxOffsetsPerTrigger: Option[Long] = None)
 
   /** The exact `spark-sql-kafka-0-10` option map for a config — pure
     * and spec-pinned, so the wiring is verified in this sandbox even
@@ -73,24 +62,8 @@ object QueueSource {
       col("offset").as("id"),
       col("value").cast("string").as("value"))
 
-  /** Column helper: the reference's "Input Data: n" framing. */
-  def framed(id: Column): Column = concat(lit("Input Data: "), id)
-
-  /** Open the configured source as an unbounded DataFrame in the
+  /** Opens the configured topic as an unbounded DataFrame in the
     * pipeline's (id, value) shape. */
-  def load(s: SparkSession, c: QueueConfig): DataFrame = c.kind match {
-    case "kafka" =>
-      val reader = kafkaOptions(c).foldLeft(s.readStream.format("kafka")) {
-        case (r, (k, v)) => r.option(k, v)
-      }
-      fromKafkaRecords(reader.load())
-    case "file" =>
-      val schema = c.schema.getOrElse(throw new IllegalArgumentException(
-        "file queue source needs an explicit schema"))
-      s.readStream.schema(schema).parquet(c.topic)
-    case "rate" =>
-      EnrichmentPipeline.rateSource(s)
-    case other =>
-      throw new IllegalArgumentException(s"unknown queue kind: $other")
-  }
+  def kafka(s: SparkSession, c: QueueConfig): DataFrame =
+    fromKafkaRecords(s.readStream.format("kafka").options(kafkaOptions(c)).load())
 }

@@ -11,8 +11,7 @@ import scala.util.{Failure, Success, Try}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, StringType, StructField,
-  StructType}
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** The reference's reliability semantics (SURVEY.md §2.6), re-expressed
   * as a thin layer around sources/sinks — NOT as operators. This module
@@ -21,12 +20,17 @@ import org.apache.spark.sql.types.{BooleanType, StringType, StructField,
   *
   *  - E2 error classification (temporary vs unrecoverable),
   *    AkkaEnrichmentPipeline.scala:170, FuturesProcessor.scala:76;
-  *  - E4 bounded retry combinator, FuturesProcessor.scala:88-106;
+  *  - E3/E4 bounded retry combinator, FuturesProcessor.scala:88-106,
+  *    applied around the sink writes only: a row's service call is
+  *    made once, and anything [[retry]] does not absorb fails the
+  *    batch, which replays whole (E5 below);
   *  - E8 error-as-value stage results,
   *    ErrorHandlingRxEnrichmentPipeline.scala:25-28 — fallible logic
   *    evaluates to a `(value, error)` pair so per-row failures can
   *    never kill the stream (the fix for the reference's documented
   *    fail-fast bug, SimpleRxEnrichmentPipeline.scala:12-15 / E7);
+  *    the error's one definition is [[StageError]], and [[ErrorType]]
+  *    is its column type;
   *  - E6 DLQ routing: split on the error column, main sink + dead
   *    letter sink, both written in the same micro-batch;
   *  - ack/nack (S4/K3): checkpoint offset commit IS the ack — a batch
@@ -35,28 +39,21 @@ import org.apache.spark.sql.types.{BooleanType, StringType, StructField,
   *    whole-message retry at batch granularity.
   */
 object Reliability {
-  /** E2: temporary failures are worth retrying; everything else goes
-    * to the DLQ. Mirrors `isTemporaryFailure`. */
+  /** E2: temporary failures are worth retrying, and [[retry]] retries
+    * them; nothing else is. A row's failure of either kind is its
+    * error value, bound for the DLQ. Mirrors `isTemporaryFailure`. */
   def isTemporary(e: Throwable): Boolean = e match {
     case _: IOException | _: TimeoutException => true
     case _ => false
   }
 
-  /** E4: bounded retry with fixed backoff; short-circuits on
-    * unrecoverable errors. Driver-side — retries happen at the
-    * action/sink level, never inside an expression. */
-  def retry[T](times: Int, backoffMs: Long = 0L)(f: => T): T = {
-    var attempt = 0
-    while (true) {
-      try return f
-      catch {
-        case e: Throwable if isTemporary(e) && attempt < times - 1 =>
-          attempt += 1
-          if (backoffMs > 0) Thread.sleep(backoffMs)
-      }
+  /** E4: calls `f` up to `times` times while it fails temporarily;
+    * short-circuits on unrecoverable errors. Driver-side — retries
+    * happen at the action/sink level, never inside an expression. */
+  def retry[T](times: Int)(f: => T): T =
+    try f catch {
+      case e: Throwable if isTemporary(e) && times > 1 => retry(times - 1)(f)
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** The error column, of type [[ErrorType]]; null = ok. */
   val ErrorCol = "error"
@@ -66,10 +63,7 @@ object Reliability {
   final case class StageResult(value: String, error: StageError)
 
   /** [[StageError]] as a column type: `STRUCT<clazz, msg, temporary>`. */
-  val ErrorType: StructType = StructType(Seq(
-    StructField("clazz", StringType),
-    StructField("msg", StringType),
-    StructField("temporary", BooleanType, nullable = false)))
+  val ErrorType: StructType = Encoders.product[StageError].schema
 
   /** Most service calls one task keeps in flight: the reference's
     * service time is waiting, not work, so 8 calls overlap most of it
@@ -111,14 +105,12 @@ object Reliability {
     * the task's thread-locals. Used only where logic is genuinely
     * fallible/external — pure enrichment stays as native columns. */
   def fallible(df: DataFrame, in: String, out: String,
-      f: String => String, attempts: Int): DataFrame = {
-    require(attempts >= 1, s"attempts=$attempts must be at least 1")
+      f: String => String): DataFrame = {
     val i = df.schema.fieldIndex(in)
     val schema = df.schema.add(out, StringType).add(ErrorCol, ErrorType)
     df.mapPartitions(inFlight(_) { r =>
-      val StageResult(v, e) = attempt(f, attempts)(r.getString(i))
-      Row.fromSeq(r.toSeq :+ v :+
-        (if (e == null) null else Row(e.clazz, e.msg, e.temporary)))
+      val StageResult(v, e) = attempt(f)(r.getString(i))
+      Row.fromSeq(r.toSeq :+ v :+ Option(e).map(Row.fromTuple).orNull)
     })(Encoders.row(schema))
   }
 
@@ -151,17 +143,13 @@ object Reliability {
     }
   }
 
-  /** The row function behind [[fallible]]: temporary failures are
-    * retried in place up to `attempts` calls in all (the reference's
-    * bounded-retry combinator applied per message); the last failure,
-    * or the first unrecoverable one, becomes the error value. Only
+  /** The row function behind [[fallible]]: one call of `f`, whose
+    * failure, temporary or not, becomes the error value. Only
     * `NonFatal` throwables become values: a VM error, an interrupt or
     * a linkage error fails the task, and the batch replays whole. */
-  def attempt(f: String => String, attempts: Int)(s: String): StageResult =
+  def attempt(f: String => String)(s: String): StageResult =
     Try(f(s)) match {
       case Success(v) => StageResult(v, null)
-      case Failure(e) if isTemporary(e) && attempts > 1 =>
-        attempt(f, attempts - 1)(s)
       case Failure(e) =>
         StageResult(null,
           StageError(e.getClass.getName, String.valueOf(e.getMessage),
@@ -169,7 +157,6 @@ object Reliability {
     }
 
   /** E6: split a DataFrame carrying an error column into (ok, dlq). */
-  def split(df: DataFrame, errorCol: String = ErrorCol)
-      : (DataFrame, DataFrame) =
-    (df.filter(col(errorCol).isNull), df.filter(col(errorCol).isNotNull))
+  def split(df: DataFrame): (DataFrame, DataFrame) =
+    (df.filter(col(ErrorCol).isNull), df.filter(col(ErrorCol).isNotNull))
 }

@@ -23,7 +23,7 @@ class FallibleStageSpec extends SparkSpec {
   test("two calls of one partition are in flight together") {
     // each call waits for the other: a serial stage times the first out
     val rows = Reliability.fallible(Seq("a", "b").toDF("v").coalesce(1),
-        "v", "r", StageProbes.pair("pair"), attempts = 1)
+        "v", "r", StageProbes.pair("pair"))
       .select(col("v"), col("r"), col("error.clazz"))
       .as[(String, String, String)].collect().toSeq
     assert(rows == Seq(("a", "A", null), ("b", "B", null)))
@@ -35,7 +35,7 @@ class FallibleStageSpec extends SparkSpec {
       .coalesce(1))
     val inOrder = in.as[String].collect().toSeq
     val out = Reliability.fallible(in, "v", "r",
-        StageProbes.delayed("delays", seed = 23L), attempts = 1)
+        StageProbes.delayed("delays", seed = 23L))
       .select(col("v"), col("r"), col("error.clazz"), col("error.msg"))
       .as[(String, String, String, String)].collect().toSeq
     assert(out.map(_._1) == inOrder, "rows must leave in input order")
@@ -85,7 +85,7 @@ class FallibleStageSpec extends SparkSpec {
       val rows = "fatal" +: (1 until 20).map(i => s"slow$i")
       intercept[SparkException] {
         Reliability.fallible(rows.toDF("v").coalesce(1), "v", "r",
-          StageProbes.fatalFirst("failed"), attempts = 1).collect()
+          StageProbes.fatalFirst("failed")).collect()
       }
       val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(10)
       while (StageProbes.running("failed") > 0 && System.nanoTime() < deadline)

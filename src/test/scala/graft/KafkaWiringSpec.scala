@@ -24,7 +24,7 @@ class KafkaWiringSpec extends SparkSpec {
     spark.sqlContext
 
   test("kafkaOptions builds the exact spark-sql-kafka option map") {
-    val c = QueueConfig(kind = "kafka", topic = "docs.ingest",
+    val c = QueueConfig(topic = "docs.ingest",
       bootstrapServers = "broker1:9092,broker2:9092",
       startingOffsets = "earliest", failOnDataLoss = true,
       maxOffsetsPerTrigger = Some(50000L))
@@ -74,23 +74,13 @@ class KafkaWiringSpec extends SparkSpec {
 
   test("load('kafka') fails FAST when the connector is absent — no " +
       "silent fallback") {
-    val c = QueueConfig(kind = "kafka", topic = "t",
-      bootstrapServers = "b:9092")
+    val c = QueueConfig(topic = "t", bootstrapServers = "b:9092")
     val e = intercept[Throwable] {
-      QueueSource.load(spark, c).isStreaming
+      QueueSource.kafka(spark, c).isStreaming
     }
     val msg = (e.getMessage + Option(e.getCause).map(_.getMessage)
       .getOrElse("")).toLowerCase
     assert(msg.contains("kafka"),
       s"missing-provider failure must name the kafka source, got: $msg")
-  }
-
-  test("load dispatch: file needs a schema, unknown kinds are rejected") {
-    intercept[IllegalArgumentException] {
-      QueueSource.load(spark, QueueConfig(kind = "file", topic = "/tmp/x"))
-    }
-    intercept[IllegalArgumentException] {
-      QueueSource.load(spark, QueueConfig(kind = "rabbitmq"))
-    }
   }
 }

@@ -192,25 +192,51 @@ class PipelineSpec extends SparkSpec {
   test("temporary sink failures are retried within the batch (E3)") {
     val in = tmpDir("r-in"); val ok = tmpDir("r-ok")
     val dlq = tmpDir("r-dlq"); val cp = tmpDir("r-cp")
-    (0L until 5L).map(i => (i, s"Input Data: $i")).toDF("id", "value")
+    val ids = 0L until 10L
+    ids.map(i => (i, s"Input Data: $i")).toDF("id", "value")
       .write.mode("overwrite").parquet(in)
-    // flaky *service* with temporary failures that succeed on retry
-    // happens at row level via fallible's `attempts` — here we assert
-    // the sink-level retry combinator drives a flaky write to success
-    var failures = 2
-    val flakyWrite: String => String = { s =>
-      if (failures > 0) { failures -= 1; throw new IOException("sink down") }
-      s
-    }
-    graft.streaming.Reliability.retry(3)(flakyWrite("x"))
-    assert(failures == 0)
+    // the ok route writes through a file system whose first driver-side
+    // look at `batchId=0` throws a temporary IOException
+    val hadoop = spark.sparkContext.hadoopConfiguration
+    hadoop.set(s"fs.${FlakyLocalFs.Scheme}.impl", classOf[FlakyLocalFs].getName)
+    hadoop.setBoolean(s"fs.${FlakyLocalFs.Scheme}.impl.disable.cache", true)
+    FlakyLocalFs.armed.set(true)
     val q = EnrichmentPipeline.start(
       spark.readStream.schema("id LONG, value STRING").parquet(in),
-      ok, dlq, cp)
+      s"${FlakyLocalFs.Scheme}:$ok", dlq, cp, svc)
     q.awaitTermination()
-    assert(spark.read.parquet(ok).count() == 5)
-    assert(spark.read.parquet(dlq).count() == 0)
+    assert(FlakyLocalFs.thrown.get == 1, "the ok write never failed")
+    assert(q.lastProgress.batchId == 0L && q.lastProgress.numInputRows == 10L)
+    assert(new java.io.File(s"$cp/commits/0").exists, "batch 0 not committed")
+    val okIds = spark.read.parquet(ok).select("id").as[Long].collect().toSeq
+    val dlqIds = spark.read.parquet(dlq).select("id").as[Long].collect().toSeq
+    assert(dlqIds == Seq(7L))
+    assert((okIds ++ dlqIds).sorted == ids, "ok ⊎ dlq must equal the input")
   }
+}
+
+/** The local file system under its own scheme, failing once when
+  * [[FlakyLocalFs.armed]]: the first driver-side `exists` or
+  * `getFileStatus` of a `batchId=0` directory throws a temporary
+  * `IOException`, as a flaky sink store would. */
+class FlakyLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  override def getScheme: String = FlakyLocalFs.Scheme
+  override def getUri: java.net.URI = java.net.URI.create(s"$getScheme:///")
+  private def look(f: Path): Unit =
+    if (f.getName == "batchId=0" && org.apache.spark.TaskContext.get() == null &&
+        FlakyLocalFs.armed.compareAndSet(true, false)) {
+      FlakyLocalFs.thrown.incrementAndGet()
+      throw new IOException(s"sink store unavailable: $f")
+    }
+  override def exists(f: Path): Boolean = { look(f); super.exists(f) }
+  override def getFileStatus(f: Path): FileStatus = { look(f); super.getFileStatus(f) }
+}
+
+object FlakyLocalFs {
+  val Scheme = "flakyfs"
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+  val thrown = new java.util.concurrent.atomic.AtomicInteger(0)
 }
 
 /** A service whose outcome is a seeded function of (id, call index):

@@ -58,7 +58,7 @@ class ReliabilitySpec extends SparkSpec {
       case s => s.toUpperCase
     }
     val rows = Reliability.fallible(Seq("ok", "boom", "flaky").toDF("v"),
-        "v", "value", f, attempts = 1)
+        "v", "value", f)
       .select(col("value"), col("error.clazz"),
         coalesce(col("error.temporary"), lit(false)))
       .as[(String, String, Boolean)].collect().toSeq
@@ -70,39 +70,26 @@ class ReliabilitySpec extends SparkSpec {
     assert(rows(2)._3)
   }
 
-  test("E3 row-level bounded retry inside fallible(f, attempts)") {
-    // deterministic flaky service: fails twice per distinct input then
-    // succeeds (mock-Dao pattern, AkkaPipelineActorsTest.scala:59-77)
-    val ok = Reliability.fallible(Seq("a").toDF("v"), "v", "r",
-        FlakyRegistry.failTwiceThenUpper("rspec1"), attempts = 3)
-      .select("r").as[String].head()
-    assert(ok == "A", "3 attempts survive 2 temporary failures")
-    val err = Reliability.fallible(Seq("b").toDF("v"), "v", "r",
-        FlakyRegistry.failTwiceThenUpper("rspec2"), attempts = 2)
-      .select("error.temporary").as[Boolean].head()
-    assert(err, "2 attempts exhaust and surface the temporary error")
-  }
-
   test("E8 attempt: only NonFatal throwables become error values") {
     // the row function is called directly: a fatal error inside a
     // local-mode Spark task could take the test JVM down with it
     val calls = new AtomicInteger(0)
     val bad = Reliability.attempt({ _ =>
       calls.incrementAndGet(); throw new IllegalStateException("x")
-    }, 3)("a")
+    })("a")
     assert(bad.value == null)
     assert(bad.error.clazz == "java.lang.IllegalStateException")
     assert(!bad.error.temporary)
     assert(calls.get() == 1, "unrecoverable failures must not retry")
     def raise(t: Throwable): String => String = _ => throw t
     intercept[OutOfMemoryError] {
-      Reliability.attempt(raise(new OutOfMemoryError("vm")), 3)("a")
+      Reliability.attempt(raise(new OutOfMemoryError("vm")))("a")
     }
     intercept[InterruptedException] {
-      Reliability.attempt(raise(new InterruptedException("stop")), 3)("a")
+      Reliability.attempt(raise(new InterruptedException("stop")))("a")
     }
     intercept[LinkageError] {
-      Reliability.attempt(raise(new LinkageError("link")), 3)("a")
+      Reliability.attempt(raise(new LinkageError("link")))("a")
     }
   }
 
@@ -112,20 +99,5 @@ class ReliabilitySpec extends SparkSpec {
     val (ok, dlq) = Reliability.split(df)
     assert(ok.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 3L))
     assert(dlq.select("id").as[Long].collect().toSeq == Seq(2L))
-  }
-}
-
-/** Executor-side registry of stateful flaky services (task closures
-  * must be serializable; state lives in this JVM-global object, which
-  * works in local mode where driver and executors share the JVM). */
-object FlakyRegistry {
-  private val counts =
-    new java.util.concurrent.ConcurrentHashMap[String, AtomicInteger]()
-
-  def failTwiceThenUpper(ns: String): String => String = { s =>
-    val k = ns + "/" + s
-    val c = counts.computeIfAbsent(k, _ => new AtomicInteger(0))
-    if (c.incrementAndGet() <= 2) throw new IOException("flaky " + k)
-    s.toUpperCase
   }
 }
