@@ -12,51 +12,31 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.IndexCache
 
-/** The engine's single lineage-cut seam.
+/** The engine's lineage-cut seam and its one iteration loop.
   *
-  * Every iterative operator family whose state is a relation
-  * (connected-component propagation, k-core peeling, Lloyd's
-  * k-means, index append/compact lifecycles) must cut lineage between
-  * rounds or the logical plan grows O(rounds) deep. Through round 10
-  * every cut was `localCheckpoint(true)`:
-  * correct and fast, but executor-LOCAL — the checkpoint blocks live
-  * only in executor storage, so on a real cluster one executor loss
-  * mid-iteration makes the truncated lineage unrecoverable and fails
-  * the job (the round-10 verdict's one weak axis). That posture
-  * violates the reference's own reliability bar — "never lose a
-  * message / auto-recover from external failures"
-  * (reference README.md:13-17) — applied to the engine's long jobs.
+  * [[cut]] materializes a relation eagerly and truncates its lineage
+  * to a `LogicalRDD` leaf. When the session conf [[DirKey]] names a
+  * checkpoint directory (HDFS/S3/DBFS on a cluster, any path locally)
+  * the cut is a reliable `Dataset.checkpoint`, recoverable by reading
+  * its files after an executor loss; when it is unset (the local and
+  * test default) the cut is an executor-local `localCheckpoint`. Both
+  * modes leave the same plan, so results are identical
+  * (CheckpointingSpec pins the iterative and index gate queries
+  * hash-equal across modes, and one `rdd-*` directory per reliable
+  * cut).
   *
-  * [[cut]] is the config seam that closes it: when the session conf
-  * [[DirKey]] names a checkpoint directory (HDFS/S3/DBFS on a cluster,
-  * any path locally), the cut is a RELIABLE `Dataset.checkpoint(eager)`
-  * — blocks written to fault-tolerant storage, recomputable-by-read
-  * after any executor loss; when unset (the local/test default) it is
-  * the old eager `localCheckpoint`. Both modes materialize eagerly and
-  * truncate lineage to a `LogicalRDD` leaf, so downstream plans — and
-  * therefore results — are bit-identical by construction
-  * (CheckpointingSpec pins the iterative gate queries hash-equal
-  * across modes, and pins that reliable mode writes exactly one
-  * checkpoint RDD directory per cut).
-  *
-  * This object is also the engine's one iteration seam, in two forms:
-  *  - Loops whose state is a relation — k-core peeling,
-  *    connected-component propagation and Lloyd's k-means — go through
-  *    [[fixpoint]], the one loop that cuts each round's state, frees
-  *    the superseded state and counts rounds; an operator supplies
-  *    only its step (FixpointSpec pins the cut and release contract).
-  *  - Loops whose state is small enough to hold on the driver —
-  *    PageRank, TrustRank and HITS (vectors of fewer than 10⁶ longs),
-  *    PCA power iteration (one d-vector) and the MMR greedy picks (a
-  *    fixed-size shortlist) — run [[driverRounds]]. A distributed
-  *    round is one [[vectorRound]]: one broadcast and one narrow job
-  *    over a [[roundRelation]] that was cut once, so these loops cut
-  *    only their static relations, never a round. Their results come
-  *    back as a [[sortedFrame]], already in presentation order.
-  *
-  * The per-round cost of a relational round is coordination, not work
-  * (Drizzle, SOSP'17): about a dozen jobs of ≤ 20 ms task work each.
-  * Every iterative run reports itself through [[reportRounds]].
+  * Every iteration runs in [[driverRounds]], which holds the state on
+  * the driver and counts rounds; it never cuts. A distributed round
+  * is one [[vectorRound]]: the driver's vector is broadcast, one
+  * narrow job folds each partition of a [[roundRelation]] (a static
+  * relation cut once), and the driver combines the partials. PageRank,
+  * TrustRank, HITS, PCA, connected components and k-core peeling
+  * iterate this way; their results come back as a [[sortedFrame]],
+  * already in presentation order. A step whose state is a relation
+  * (Lloyd's k-means) cuts it itself and releases the state it
+  * supersedes. A driver-held round costs one job, where a relational
+  * round costs about a dozen: the per-round cost is coordination, not
+  * work (Drizzle, SOSP'17). Every run reports its round count.
   *
   * Storage hygiene: [[release]] is the one way a cut's executor
   * BLOCKS are freed, in either mode. A leaf may be read by a cached
@@ -120,39 +100,29 @@ object Checkpointing {
   }
 
   /** Iterates `step` from `init` until it returns `None` or has run
-    * `maxSteps` times; returns the last state and the number of steps
-    * that produced one. Each step's output is [[cut]] before the next
-    * step reads it, and the state it supersedes is released once that
-    * cut has materialized its successor. `init` belongs to the caller:
-    * it is never cut (cut it first if every step re-reads it) and never
-    * released, and a loop that stops at once returns it unchanged.
-    * Cuts a step makes of its own intermediates stay in the step. Each
-    * run writes its [[reportRounds]] line, counting steps. */
-  def fixpoint[T](name: String, init: Dataset[T], maxSteps: Int = Int.MaxValue)
-      (step: Dataset[T] => Option[Dataset[T]]): (Dataset[T], Int) = {
+    * `maxRounds` times; returns the last state and the number of steps
+    * that produced one. A fixed-round loop always returns `Some`. Each
+    * run writes one stderr line:
+    * `{"fixpoint":"<name>","rounds":<rounds>,"ms":<wall ms>}`. */
+  def driverRounds[T](name: String, init: T, maxRounds: Int)(
+      step: T => Option[T]): (T, Int) = {
     val t0 = System.nanoTime()
     @annotation.tailrec
-    def go(state: Dataset[T], rounds: Int): (Dataset[T], Int) =
-      (if (rounds < maxSteps) step(state) else None) match {
+    def go(state: T, rounds: Int): (T, Int) =
+      (if (rounds < maxRounds) step(state) else None) match {
         case None => (state, rounds)
-        case Some(next) =>
-          val leaf = cut(next)
-          if (state ne init) release(state.toDF())
-          go(leaf, rounds + 1)
+        case Some(next) => go(next, rounds + 1)
       }
-    val (out, rounds) = go(init, 0)
-    reportRounds(name, rounds, t0)
-    (out, rounds)
-  }
-
-  /** `rounds` steps of a driver-held iteration from `init`, reported
-    * by the stderr line [[fixpoint]] writes. */
-  def driverRounds[T](name: String, init: T, rounds: Int)(step: T => T): T = {
-    val t0 = System.nanoTime()
-    val out = (1 to rounds).foldLeft(init)((state, _) => step(state))
-    reportRounds(name, rounds, t0)
+    val out = go(init, 0)
+    val ms = (System.nanoTime() - t0) / 1000000
+    System.err.println(s"""{"fixpoint":"$name","rounds":${out._2},"ms":$ms}""")
     out
   }
+
+  /** The most keys a [[vectorRound]] vector may have: 2²² longs are
+    * 32 MiB, and a round holds the broadcast vector, its result and
+    * the collected partials on the driver at once. */
+  val MaxRoundKeys: Int = 1 << 22
 
   /** The static side of [[vectorRound]]: `rel` [[cut]] once and read
     * by ordinal as `R` rows — reliable mode then covers the relation
@@ -163,17 +133,25 @@ object Checkpointing {
 
   /** One round over a driver-held vector: `vec` is broadcast, `fold`
     * turns each partition of `rel` into (key, partial) pairs, and the
-    * driver adds the partials into a dense vector of `keys` entries (0
-    * for a key with no pair), failing on overflow like ANSI `sum`. One
+    * driver merges the partials of each key with `combine` into a dense
+    * vector of `keys` entries (0 for a key with no pair). A sum combine
+    * is `Math.addExact`, which fails on overflow like ANSI `sum`. One
     * job and no shuffle: `rel` is a [[roundRelation]] leaf. */
-  def vectorRound[R](rel: RDD[R], vec: Array[Long], keys: Int)(
+  def vectorRound[R](rel: RDD[R], vec: Array[Long], keys: Int,
+      combine: (Long, Long) => Long)(
       fold: (Array[Long], Iterator[R]) => Iterator[(Int, Long)])
       : Array[Long] = {
+    require(keys <= MaxRoundKeys, s"a driver round over $keys keys " +
+      s"exceeds Checkpointing.MaxRoundKeys = $MaxRoundKeys")
     val bc = rel.sparkContext.broadcast(vec)
     try {
       val out = new Array[Long](keys)
+      val seen = new java.util.BitSet(keys)
       rel.mapPartitions(rows => fold(bc.value, rows)).collect()
-        .foreach { case (k, part) => out(k) = Math.addExact(out(k), part) }
+        .foreach { case (k, part) =>
+          out(k) = if (seen.get(k)) combine(out(k), part) else part
+          seen.set(k)
+        }
       out
     } finally bc.destroy()
   }
@@ -202,12 +180,4 @@ object Checkpointing {
       StructType(key +: cols.map(c => StructField(c._1, LongType, false))),
       1, table.indices.map(i =>
         Row.fromSeq(table(i).getAs[Any](key.name) +: cols.map(_._2(i)))))
-
-  /** Writes the one stderr line of an iterative run that started at
-    * `t0` (`System.nanoTime`):
-    * `{"fixpoint":"<name>","rounds":<rounds>,"ms":<wall ms>}`. */
-  def reportRounds(name: String, rounds: Int, t0: Long): Unit = {
-    val ms = (System.nanoTime() - t0) / 1000000
-    System.err.println(s"""{"fixpoint":"$name","rounds":$rounds,"ms":$ms}""")
-  }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1096,23 +1096,17 @@ object DedupOps {
     * neighbor-min (self included) on the pair graph, WITHOUT ever
     * materializing the pair list (which is quadratic in bucket size —
     * the thing that kills pair-based CC on a 100 TB hot bucket). Each
-    * step is two equi-joins + two map-side-combinable min-aggregates
-    * over the linear (doc, band, bucket) relation; steps to fixpoint =
-    * cluster diameter (LSH dup clusters are small and dense, so this
-    * is 1-2). Two steps run per convergence check to halve the
-    * sequential job count. The final labeling (isolated docs joined
-    * back as their own singletons) is cached per dataset and shared
-    * with [[dedupSplitAssign]]. */
+    * step is one narrow pass over the linear (doc, band, bucket)
+    * relation, and the labels are held on the driver
+    * ([[propagateMinLabels]]). The final labeling (isolated docs
+    * joined back as their own singletons) is cached per dataset and
+    * shared with [[dedupSplitAssign]]. */
   private def components(s: SparkSession, d: String): DataFrame =
     componentCache.getOrBuild(s, d) {
       val labels = propagateMinLabels(buckets(s, d))
       // isolated docs (no signature or lone bucket membership is fine
-      // either way: never a candidate) are their own components.
-      // The cached relation is its own cut, so it carries NO
-      // dependency on `labels` — its blocks can be freed right here
-      val all = labels.union(isolated(s, d, labels)).transform(graft.Checkpointing.cut)
-      graft.Checkpointing.release(labels)
-      all
+      // either way: never a candidate) are their own components
+      labels.union(isolated(s, d, labels)).transform(graft.Checkpointing.cut)
     }
 
   private def isolated(s: SparkSession, d: String, labels: DataFrame) =
@@ -1121,90 +1115,75 @@ object DedupOps {
       .select(col("doc_id"), col("doc_id").as("comp"))
 
   /** Min-label propagation over a bipartite (doc_id, band, bucket)
-    * membership relation → one (doc_id, comp) row per member doc.
+    * membership relation → one (doc_id, comp) row per member doc,
+    * `comp` the least doc_id of its component, sorted by doc_id.
     *
-    * Each round is two neighbor-min steps plus one POINTER-JUMPING
-    * shortcut (`comp ← comp(comp)` — each doc adopts the current label
-    * of the doc its label points at, the star-contraction move of the
-    * MapReduce-CC literature). The neighbor steps alone converge in
-    * O(graph diameter) rounds — fine for dense LSH dup clusters
-    * (diameter 1-2) but LINEAR on an incremental-edit CHAIN of
-    * near-dups, each adjacent pair sharing one bucket (the round-10
-    * verdict's adversarial shape: a crawl of successive page edits).
-    * The jump step squares the label-pointer horizon each round, so a
-    * depth-d chain converges in O(log d) rounds (ChainConvergenceSpec
-    * pins a planted 65-link chain to ≤ 2·⌈log₂ n⌉ + 3 rounds where the
-    * neighbor-only loop needs ≥ n/2). Each map is monotone
-    * non-increasing per doc and bounded below, and a no-change round
-    * implies a fixpoint of the neighbor step itself (the three
-    * composed non-increasing maps can only all be identity when each
-    * is), so the fixpoint — component-min labeling — is EXACTLY the
-    * one the neighbor-only loop reached: every downstream gate stays
-    * hash-identical.
+    * The labels are held on the driver. The distinct non-null doc_ids
+    * are collected once and sorted, and a doc's label is a position
+    * in that list, so the least position is also the least doc_id.
+    * The membership is cut once as a round relation of (band, bucket,
+    * doc position), partitioned on the bucket, and released when the
+    * loop ends. A round is one [[graft.Checkpointing.vectorRound]]:
+    * per bucket, the least label of its members goes to every member,
+    * and the driver keeps each doc's `min`. Then the driver jumps
+    * pointers once, `lbl(i) ← lbl(lbl(i))`, the star-contraction move
+    * of the MapReduce-CC literature, and the loop stops after a round
+    * that changes no label.
     *
-    * The rounds run in [[graft.Checkpointing.fixpoint]], which cuts
-    * each round's state (eager; reliable when
-    * `spark.graft.checkpointDir` is set), so the logical plan stays
-    * O(1)-deep however many rounds a graph needs — plain `persist()`
-    * caches data but keeps stacking the plan, which at high-diameter
-    * graphs grows O(D) and eventually chokes the analyzer. There is
-    * no round cap; the loop's stderr line reports the round count. */
+    * The neighbor step alone converges in O(graph diameter) rounds,
+    * fine for dense LSH dup clusters (diameter 1-2) but LINEAR on an
+    * incremental-edit CHAIN of near-dups, each adjacent pair sharing
+    * one bucket (a crawl of successive page edits). The jump squares
+    * the label-pointer horizon each round, so a depth-d chain
+    * converges in O(log d) rounds (ChainConvergenceSpec pins a planted
+    * 65-link chain to ≤ 2·⌈log₂ n⌉ + 3 rounds where the neighbor-only
+    * loop needs ≥ n/2). Both maps are non-increasing per doc, and a
+    * label always names a doc of the same component; a round that
+    * changes nothing leaves every bucket's members on one label, so
+    * the result is EXACTLY the component-min labeling the
+    * neighbor-only loop reaches. There is no round cap; the loop's
+    * stderr line reports the round count. */
   private[graft] def propagateMinLabels(bk: DataFrame): DataFrame =
     propagateMinLabelsCounted(bk)._1
 
-  /** [[propagateMinLabels]] plus the number of convergence-checked
-    * rounds the loop ran — the test seam ChainConvergenceSpec uses to
-    * pin the log-round bound. */
+  /** [[propagateMinLabels]] plus the number of rounds the loop ran,
+    * the last being the one that changed no label — the test seam
+    * ChainConvergenceSpec uses to pin the log-round bound. */
   private[graft] def propagateMinLabelsCounted(
       bk: DataFrame): (DataFrame, Int) = {
-    // one propagation step: comp(doc) <- min over doc's buckets of
-    // min over bucket members of comp — monotone non-increasing
-    // (each doc is a member of its own buckets)
-    def step(l: DataFrame): DataFrame = {
-      val bucketMin = bk.join(l, "doc_id")
-        .groupBy(col("band"), col("bucket"))
-        .agg(min(col("comp")).as("bmin"))
-      bk.join(bucketMin, Seq("band", "bucket"))
-        .groupBy(col("doc_id"))
-        .agg(min(col("bmin")).as("comp"))
+    val s = bk.sparkSession
+    val ids = bk.select(col("doc_id")).distinct().collect()
+      .filterNot(_.isNullAt(0)).sortBy(_.getLong(0))
+    val (n, doc) = (ids.length, bk.schema("doc_id"))
+    val index = graft.Checkpointing.denseFrame(s, ids, doc,
+      "i" -> Array.tabulate(n)(_.toLong))
+    // the round relation, kept as a frame so that its cut can be
+    // released once the loop is done
+    val members = graft.Checkpointing.cut(bk.join(index, "doc_id")
+      .select(col("band"), col("bucket"), col("i"))
+      .repartition(col("band"), col("bucket")))
+    val rel = members.as(Encoders.product[(Long, Long, Long)]).rdd
+    // per bucket of a partition, the least label of its members, sent
+    // to each member
+    def bucketMin(lbl: Array[Long], rows: Iterator[(Long, Long, Long)])
+        : Iterator[(Int, Long)] =
+      rows.toSeq.groupMap(r => (r._1, r._2))(_._3.toInt).valuesIterator
+        .flatMap { bucket =>
+          val low = bucket.iterator.map(lbl(_)).min
+          bucket.map(_ -> low)
+        }
+    val ((labels, _), rounds) = graft.Checkpointing.driverRounds(
+        "components", (Array.tabulate(n)(_.toLong), true), Int.MaxValue) {
+      case (_, false) => None
+      case (lbl, true) =>
+        val low = graft.Checkpointing.vectorRound(rel, lbl, n, math.min)(
+          bucketMin)
+        val next = low.map(l => low(l.toInt))
+        Some((next, !java.util.Arrays.equals(next, lbl)))
     }
-    // pointer jump: comp(doc) <- comp(comp(doc)). Sound because every
-    // comp value IS a member doc_id (min over member ids), so the
-    // equi-join on the unique doc_id key never drops a row; and
-    // comp(comp) ≤ comp because every doc's label ≤ its own id. One
-    // |labels|⨝|labels| equi-join — the small relation, never the
-    // membership table.
-    def jump(l: DataFrame): DataFrame =
-      l.as("a")
-        .join(l.as("b"), col("a.comp") === col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_id"), col("b.comp").as("comp"))
-    val init = bk.select(col("doc_id")).distinct()
-      .withColumn("comp", col("doc_id")).transform(graft.Checkpointing.cut)
-    // convergence via the MONOTONE LABEL SUM (round 16): every
-    // composed map is non-increasing per doc and the doc set is
-    // fixed, so Σcomp strictly decreases until the fixpoint and is
-    // equal exactly there — one map-side-combinable scan of the
-    // just-cut leaf replaces the label⨝label shuffle join + count
-    // the check used to run per round. DECIMAL(38,0) keeps the sum
-    // exact at any id range / corpus size (no silent long overflow
-    // deciding convergence).
-    def labelSum(l: DataFrame): java.math.BigDecimal = l
-      .agg(coalesce(sum(col("comp").cast("decimal(38,0)")),
-        lit(java.math.BigDecimal.ZERO).cast("decimal(38,0)")).as("s"))
-      .head().getDecimal(0)
-    // Σcomp of the previous step's input: a step whose input (that
-    // step's output) sums the same stops at the fixpoint
-    var prevSum: java.math.BigDecimal = null
-    val (labels, rounds) = graft.Checkpointing.fixpoint("components", init) { l =>
-      val s = labelSum(l)
-      if (prevSum != null && s.compareTo(prevSum) == 0) None
-      else {
-        prevSum = s
-        Some(jump(step(step(l))))
-      }
-    }
-    graft.Checkpointing.release(init)
-    (labels, rounds)
+    graft.Checkpointing.release(members)
+    (graft.Checkpointing.denseFrame(s, ids, doc,
+      "comp" -> labels.map(l => ids(l.toInt).getLong(0))), rounds)
   }
 
   /** (doc_id, component_id) for every document; isolated docs are
@@ -1488,21 +1467,20 @@ object DedupOps {
       .unionByName(activeMembers
         .select(col("doc_id"), lit(CompBand).as("band"),
           col("comp").as("bucket")))
+      // cut once: the loop reads it twice, for its doc ids and for
+      // its round relation
       .transform(graft.Checkpointing.cut)
     val labels = propagateMinLabels(membership)
+    graft.Checkpointing.release(membership)
     // a delta doc too short for a signature has no membership row —
     // its own singleton component, exactly as the full rebuild seeds it
     val lonelyDelta = deltaBatch(s, d).select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("doc_id").as("comp"))
     val unchanged = comp.join(labels, Seq("doc_id"), "left_anti")
-    val out = labels.unionByName(lonelyDelta).unionByName(unchanged)
+    labels.unionByName(lonelyDelta).unionByName(unchanged)
       .select(col("doc_id"), col("comp").as("component_id"))
       .orderBy("doc_id")
-      .transform(graft.Checkpointing.cut)
-    graft.Checkpointing.release(labels)
-    graft.Checkpointing.release(membership)
-    out
   }
 
   val dedupDeltaProbe: Q = (s, d) => {

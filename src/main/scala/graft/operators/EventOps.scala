@@ -1904,8 +1904,8 @@ object EventOps {
     val byDst = byKey(reindexed(edgesCk, index, "dst", "src", "w"))
     val bySrc = byKey(reindexed(edgesCk, index, "src", "dst", "w"))
     // weighted out-degree = A·1
-    val maxOutw =
-      vectorRound(bySrc, Array.fill(m)(1L), m)(keyedSum(_ * _)).max
+    val maxOutw = vectorRound(bySrc, Array.fill(m)(1L), m, Math.addExact)(
+      keyedSum(_ * _)).max
     require(maxOutw < (Long.MaxValue / HitsScale) / HitsScale,
       s"HITS normalize overflows at weighted out-degree $maxOutw " +
         s">= 2^63/HitsScale^2 — lower HitsScale (see Scaladoc)")
@@ -1913,11 +1913,12 @@ object EventOps {
       val total = x.sum
       if (total == 0L) x else x.map(v => (v * HitsScale) / total)
     }
-    val (auth, hub) = driverRounds("hits",
+    val ((auth, hub), _) = driverRounds("hits",
       (new Array[Long](m), Array.fill(m)(HitsScale / n)), HitsIters) {
       case (_, h) =>
-        val a = l1(vectorRound(byDst, h, m)(keyedSum(_ * _)))
-        (a, l1(vectorRound(bySrc, a, m)(keyedSum(_ * _))))
+        val a = l1(vectorRound(byDst, h, m, Math.addExact)(keyedSum(_ * _)))
+        Some((a, l1(vectorRound(bySrc, a, m, Math.addExact)(
+          keyedSum(_ * _)))))
     }
     denseFrame(s, table, node, "auth_scaled" -> auth, "hub_scaled" -> hub)
   }
@@ -1999,12 +2000,12 @@ object EventOps {
     val byDst = byKey(
       reindexed(share, index, "dst", "src", "share").unionByName(toSink))
     val teleport = base.getOrElse(Array.fill(m)(baseRank))
-    val ranks = driverRounds(base.fold("pagerank")(_ => "trustrank"),
+    val (ranks, _) = driverRounds(base.fold("pagerank")(_ => "trustrank"),
       Array.fill(m)(initRank), rounds) { r =>
-      val sums = vectorRound(byDst, r, m + 1)(
+      val sums = vectorRound(byDst, r, m + 1, Math.addExact)(
         keyedSum((rank, sh) => (rank * sh) / PrEdgeScale))
-      Array.tabulate(m)(
-        v => teleport(v) + (PrDampNum * (sums(v) + sums(m))) / 100L)
+      Some(Array.tabulate(m)(
+        v => teleport(v) + (PrDampNum * (sums(v) + sums(m))) / 100L))
     }
     denseFrame(s, table, node, Seq("rank_scaled" -> ranks) ++
         base.map(_ => "is_seed" -> table.map(_.getAs[Long]("is_seed"))): _*)
@@ -2232,71 +2233,56 @@ object EventOps {
     * round one). */
   val KcorePeelUnroll = 16
 
-  /** Iterative k-core peel by DEGREE-DELTA maintenance (round 16):
-    * drop every node with fewer than [[KcoreK]] surviving neighbors,
-    * repeat to the fixpoint — same peel sets, same rounds, same
-    * output as the textbook edges-rewrite form it replaces, proven by
-    * the invariant that `deg` always equals each alive node's degree
-    * in the alive-induced subgraph (KcoreSpec pins outputs; the
-    * unchanged from-scratch oracle gates it at both SFs).
+  /** Iterative k-core peel of the undirected edges `und` (u, v):
+    * drop every node with fewer than [[KcoreK]] surviving neighbors
+    * and repeat until no node drops. Output (node, degree,
+    * core_degree) per surviving node, sorted by node: its full-graph
+    * degree and its degree inside the core.
     *
-    * The replaced form re-derived degrees from the surviving edge set
-    * and re-materialized that edge set every round — three
-    * edge-sized shuffles plus an edge-sized checkpoint per round.
-    * This form keeps the edge set as ONE static checkpointed leaf and
-    * maintains an O(nodes) `(node, degree, deg)` relation instead:
-    * each round takes the peel set P = {deg < K}, counts each
-    * survivor's edges INTO P (two equi-joins against the static leaf
-    * whose P side is tiny after round one — AQE broadcasts it — so
-    * the edge relation is scanned map-side, never exchanged), and
-    * subtracts. Per-round shuffled bytes drop from O(edges) to
-    * O(peeled-adjacent nodes); the only per-round materialization is
-    * the node-sized alive set. Rounds stay bounded by the peel depth
-    * of the graph, and a 10⁹-node crawl graph still peels in the
-    * handful of rounds the gate corpus does. Termination is
-    * structural: the alive set strictly shrinks or the loop exits. */
+    * The peel runs on the driver. The nodes and their full-graph
+    * degrees are collected once, a node's dense index is its position
+    * in that table, and the edges are cut as a [[roundRelation]] of
+    * index pairs, both directions of each edge. The state is the
+    * degree vector and an alive mark; the degree of an alive node is
+    * always its degree in the alive-induced subgraph. Each round
+    * takes the peel set {alive, deg < K} and stops if it is empty;
+    * otherwise one [[vectorRound]] with a sum combine counts, for each
+    * node, its edges into the peel set, and the driver subtracts
+    * those counts from the survivors and marks the peel set dead.
+    * These are the peel sets, rounds and output of the textbook
+    * edge-rewrite form (KcoreSpec pins them against a driver mirror,
+    * and the oracle recomputes the peel from scratch). A round is one
+    * narrow job; the alive set strictly shrinks every round, so the
+    * loop ends. */
   private[graft] def kcoreOf(und0: DataFrame): DataFrame = {
-    val full = und0.transform(graft.Checkpointing.cut)
-    def degOf(e: DataFrame) = e.select(col("u").as("node"))
-      .unionAll(e.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-    // (node, degree, deg): full-graph degree (static) and current
-    // alive-subgraph degree (maintained)
-    val init = degOf(full).select(col("node"), col("deg").as("degree"),
-        col("deg")).transform(graft.Checkpointing.cut)
-    // peel sets are step-local cuts that the next state's plan reads;
-    // they are freed once the loop is done
-    val peels = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    val (core, _) = graft.Checkpointing.fixpoint("kcore", init) { alive =>
-      if (alive.isEmpty) None
-      else {
-        val peel = alive.filter(col("deg") < KcoreK)
-          .select(col("node")).transform(graft.Checkpointing.cut)
-        peels += peel
-        Option.when(!peel.isEmpty) {
-          // edges lost by each survivor: one endpoint peeled this
-          // round, the other surviving. Both joins probe the static
-          // edge leaf with the (small) peel set — map-side once AQE
-          // broadcasts it; only the per-survivor loss counts shuffle.
-          val lostU = full
-            .join(peel.select(col("node").as("v")), Seq("v"), "left_semi")
-            .select(col("u").as("node"))
-          val lostV = full
-            .join(peel.select(col("node").as("u")), Seq("u"), "left_semi")
-            .select(col("v").as("node"))
-          val lost = lostU.unionAll(lostV)
-            .groupBy("node").agg(count(lit(1)).as("lost"))
-          alive
-            .join(peel.select(col("node")), Seq("node"), "left_anti")
-            .join(lost, Seq("node"), "left")
-            .select(col("node"), col("degree"),
-              (col("deg") - coalesce(col("lost"), lit(0L))).as("deg"))
-        }
+    // cut once: the node table and the index pairs both read the edges
+    val und = graft.Checkpointing.cut(und0)
+    val s = und.sparkSession
+    val ends = und.select(col("u").as("node"))
+      .unionAll(und.select(col("v").as("node")))
+    val table = ends.groupBy("node").agg(count(lit(1)).as("degree"))
+      .collect()
+    val (m, node) = (table.length, ends.schema("node"))
+    val degree = table.map(_.getLong(1))
+    val index = denseFrame(s, table, node, "i" -> Array.tabulate(m)(_.toLong))
+    // both directions of each edge, as (node, neighbor, 1) index rows
+    val adj = roundRelation[(Long, Long, Long)](reindexed(und.select(col("u"),
+      col("v")).unionAll(und.select(col("v"), col("u"))).withColumn("w", lit(1L)),
+      index, "u", "v", "w"))
+    val ((deg, alive), _) = driverRounds("kcore",
+        (degree, Array.fill(m)(true)), Int.MaxValue) { case (deg, alive) =>
+      val peel = Array.tabulate(m)(i => if (alive(i) && deg(i) < KcoreK) 1L else 0L)
+      Option.when(peel.contains(1L)) {
+        val lost = vectorRound(adj, peel, m, Math.addExact)(
+          keyedSum((inPeel, _) => inPeel))
+        (Array.tabulate(m)(i => deg(i) - lost(i)),
+          Array.tabulate(m)(i => alive(i) && peel(i) == 0L))
       }
     }
-    peels.foreach(graft.Checkpointing.release)
-    if (core ne init) graft.Checkpointing.release(init)
-    core.select(col("node"), col("degree"), col("deg").as("core_degree"))
+    graft.Checkpointing.release(und)
+    val core = alive.indices.filter(alive).toArray
+    denseFrame(s, core.map(table), node, "degree" -> core.map(degree),
+      "core_degree" -> core.map(deg))
   }
 
   /** K-core membership (`ev_user_kcore`) — the cohesion CORE of the
@@ -2308,12 +2294,11 @@ object EventOps {
     * referring accounts survives any peel its size supports; organic
     * long-tail users peel away in round one). Output is O(core).
     * Scale/exactness shape in [[kcoreOf]]; everything is integer
-    * counts. */
+    * counts, and the driver-built frame is already sorted by user. */
   val evUserKcore: Q = (s, d) =>
     kcoreOf(referralUndirected(s, d))
       .select(col("node").as("user_id"), col("degree"),
         col("core_degree"))
-      .orderBy("user_id")
 
   /** Candidate watermark delays (seconds) audited by
     * [[evWatermarkAudit]]: no tolerance, 10 minutes, 1 hour (the

@@ -222,9 +222,9 @@ object SimilarityOps {
       .collect().map(r => MmrCand(r.getLong(0), r.getLong(1), doubleAt(r, 2),
         r.getSeq[Any](3), doubleAt(r, 4)))
       .groupBy(_.query).values.toSeq
-    val picks = graft.Checkpointing.driverRounds("mmr", Seq.empty[MmrPick],
-      MmrK) { sel =>
-      sel ++ short.flatMap { cands =>
+    val (picks, _) = graft.Checkpointing.driverRounds("mmr",
+        Seq.empty[MmrPick], MmrK) { sel =>
+      Some(sel ++ short.flatMap { cands =>
         val mine = sel.filter(_.c.query == cands.head.query)
         cands.filterNot(c => mine.exists(_.c eq c)).map { c =>
           if (mine.isEmpty) MmrPick(c, 1L, Some(0.0), c.rel.map(0.5 * _))
@@ -236,7 +236,7 @@ object SimilarityOps {
               for (r <- c.rel; ms <- maxsim) yield 0.5 * r - 0.5 * ms)
           }
         }.maxOption(MmrOrder)
-      }
+      })
     }
     graft.Checkpointing.sortedFrame(s, MmrSchema, 2, picks.map(p =>
       Row(p.c.query, p.step, p.c.cand, boxed(p.c.rel), boxed(p.maxsim),
@@ -456,17 +456,6 @@ object SimilarityOps {
       .orderBy("label")
   }
 
-  /** SEMANTIC dedup clusters: connected components over the VERIFIED
-    * embedding near-dup graph ([[embNearDup]]'s bucket-candidates +
-    * cosine-threshold edges) — the vector-space analogue of
-    * `dedup_components`, and the unit a leakage-free split or a
-    * keep-one-per-cluster policy operates on when similarity is
-    * semantic rather than lexical. Reuses the O(1)-plan-depth
-    * min-label propagation ([[DedupOps.propagateMinLabels]]) by
-    * encoding each verified pair as a two-member bucket in the same
-    * bipartite membership shape — so the scalable CC path is ONE
-    * implementation with two edge generators. Isolated vectors are
-    * their own singleton components via one anti-join. */
   /** One materialized semantic labeling per (session, dataset, mtime)
     * — shared by `emb_components` and `emb_split_assign`, mirroring
     * the lexical component cache in [[DedupOps]]. */
@@ -486,30 +475,34 @@ object SimilarityOps {
         .filter(col("grp_sz") > 1)
         .select(col("vec_id").as("doc_id"), lit(1L).as("band"),
           col("canon_id").as("bucket"))
-      // one eager materialization: the membership lineage now carries
-      // the canon window + rep semi-join + pair join, and the
-      // propagation loop re-executes its input several times per
-      // iteration — without the cut, every iteration re-runs the
-      // whole pair pipeline (measured 29 s vs 3 s at skewed sf1)
       val membership = pairs
         .select(explode(array(col("vec_a"), col("vec_b"))).as("doc_id"),
           lit(0L).as("band"),
           (col("vec_a") * lit(4294967296L) + col("vec_b")).as("bucket"))
         .unionByName(dupGroups)
+        // cut once: the loop reads it twice, for its doc ids and for
+        // its round relation, and each read would re-run the pair
+        // pipeline
         .transform(graft.Checkpointing.cut)
       val labels = DedupOps.propagateMinLabels(membership)
+      graft.Checkpointing.release(membership)
       val singletons = emb(s, d).select(col("vec_id").as("doc_id"))
         .join(labels, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("doc_id").as("comp"))
-      // checkpointed so the cached relation carries no dependency on
-      // the loop's intermediate checkpoints (same discipline as the
-      // lexical component cache)
-      val all = labels.union(singletons).transform(graft.Checkpointing.cut)
-      graft.Checkpointing.release(labels)
-      graft.Checkpointing.release(membership)
-      all
+      labels.union(singletons).transform(graft.Checkpointing.cut)
     }
 
+  /** SEMANTIC dedup clusters: connected components over the VERIFIED
+    * embedding near-dup graph ([[embNearDup]]'s bucket-candidates +
+    * cosine-threshold edges) — the vector-space analogue of
+    * `dedup_components`, and the unit a leakage-free split or a
+    * keep-one-per-cluster policy operates on when similarity is
+    * semantic rather than lexical. Reuses the min-label propagation
+    * ([[DedupOps.propagateMinLabels]]) by encoding each verified pair
+    * as a two-member bucket in the same bipartite membership shape —
+    * so the scalable CC path is ONE implementation with two edge
+    * generators. Isolated vectors are their own singleton components
+    * via one anti-join. */
   val embComponents: Q = (s, d) =>
     embComponentsRel(s, d)
       .select(col("doc_id").as("vec_id"), col("comp").as("component_id"))
@@ -1021,22 +1014,6 @@ object SimilarityOps {
       .select(col("vec_id"), col("embedding"), col("clabel"), col("dist"))
   }
 
-  /** End-to-end Lloyd's TRAINING loop — [[kmeansAssign]] (assign) and
-    * [[embCentroids]] (update) composed for [[KmeansIters]] rounds
-    * from the per-label-mean initialization, so the IVF coarse
-    * quantizer is trained by the engine rather than the label column
-    * standing in for it. Output: the trained centroids in long
-    * (clabel, dim, mean) format (scalar cells — driver checker rule).
-    *
-    * Scale shape per round: centroids (k rows) BROADCAST to the
-    * assign projection, update is one map-side-combinable agg on
-    * (clabel, dim) — the corpus is scanned twice per round and never
-    * shuffled by vector. Intermediate centroids are eagerly
-    * `localCheckpoint()`ed between rounds, the same O(1)-plan-depth
-    * discipline as the connected-components loop: each round's plan
-    * builds on a small materialized relation, not on N stacked
-    * window+agg rounds. A cluster that loses all vectors drops out
-    * (both engines agree: GROUP BY emits no empty groups). */
   /** One trained quantizer per (session, dataset, mtime), shared by
     * [[kmeansTrain]] and [[annIvfTrained]] — the Lloyd's loop runs
     * once per dataset, like the LSH/ANN index relations. The bench
@@ -1045,21 +1022,37 @@ object SimilarityOps {
   private val centroidCache = new IndexCache("embeddings")
 
   /** The trained coarse quantizer: centroid arrays after
-    * [[KmeansIters]] Lloyd's rounds, eagerly materialized
-    * (localCheckpoint per round bounds plan depth; the final
-    * checkpoint IS the materialization the cache holds). */
+    * [[KmeansIters]] Lloyd's rounds; the last round's cut IS the
+    * materialization the cache holds. */
   private def trainedCentroids(s: SparkSession, d: String): DataFrame =
     centroidCache.getOrBuild(s, d) {
       lloyd(emb(s, d).select(col("vec_id"), col("embedding")), centroids(s, d))
     }
 
-  /** [[KmeansIters]] Lloyd's rounds over the (vec_id, embedding)
-    * vectors `e` from the (clabel, c) centroids `init`; each round's
-    * centroids are cut by the fixpoint loop. */
+  /** Lloyd's k-means TRAINING loop: [[KmeansIters]] rounds over the
+    * (vec_id, embedding) vectors `e` from the (clabel, c) centroids
+    * `init`, each round an assign ([[assignToNearest]]) and an update
+    * ([[meansLong]]), so the IVF coarse quantizer is trained by the
+    * engine rather than the label column standing in for it. Output:
+    * the trained (clabel, c) centroid arrays.
+    *
+    * Scale shape per round: centroids (k rows) BROADCAST to the
+    * assign projection, update is one map-side-combinable agg on
+    * (clabel, dim) — the corpus is scanned twice per round and never
+    * shuffled by vector. The state is a relation: each round runs in
+    * [[graft.Checkpointing.driverRounds]], cuts its new centroids and
+    * releases the centroids it supersedes (never `init`, which belongs
+    * to the caller), so each round's plan builds on a small
+    * materialized relation, not on stacked window+agg rounds. A
+    * cluster that loses all vectors drops out (both engines agree:
+    * GROUP BY emits no empty groups). */
   private def lloyd(e: DataFrame, init: DataFrame): DataFrame =
-    graft.Checkpointing.fixpoint("kmeans", init, KmeansIters)(cents =>
-      Some(toArrays(meansLong(assignToNearest(e, cents)
-        .select(col("clabel"), col("embedding"))))))._1
+    graft.Checkpointing.driverRounds("kmeans", init, KmeansIters) { cents =>
+      val next = graft.Checkpointing.cut(toArrays(meansLong(
+        assignToNearest(e, cents).select(col("clabel"), col("embedding")))))
+      if (cents ne init) graft.Checkpointing.release(cents)
+      Some(next)
+    }._1
 
   val kmeansTrain: Q = (s, d) =>
     trainedCentroids(s, d)
@@ -1482,11 +1475,12 @@ object SimilarityOps {
         raw0.filter(col("vec_id").isNotNull).groupBy(col("vec_id"))
           .agg(collect_list(struct(col("dim"), y.as("y"))).as("l"))
           .select(col("l.dim"), col("l.y")))
-    val v = graft.Checkpointing.driverRounds("pca", Array.fill(dims)(PcaVs),
-      rounds) { v =>
-      val raw = graft.Checkpointing.vectorRound(lanes, v, dims)(powerFold)
+    val (v, _) = graft.Checkpointing.driverRounds("pca",
+        Array.fill(dims)(PcaVs), rounds) { v =>
+      val raw = graft.Checkpointing.vectorRound(lanes, v, dims,
+        Math.addExact)(powerFold)
       val m = raw.foldLeft(0L)((a, r) => math.max(a, Math.absExact(r)))
-      raw.map(r => if (m > 0L) r / (m / PcaVs + 1) else 0L)
+      Some(raw.map(r => if (m > 0L) r / (m / PcaVs + 1) else 0L))
     }
     graft.Checkpointing.sortedFrame(s, PcaSchema, 1,
         v.indices.map(k => Row(k.toLong, v(k))))

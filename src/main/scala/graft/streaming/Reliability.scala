@@ -41,10 +41,15 @@ import org.apache.spark.sql.types.{StringType, StructType}
 object Reliability {
   /** E2: temporary failures are worth retrying, and [[retry]] retries
     * them; nothing else is. A row's failure of either kind is its
-    * error value, bound for the DLQ. Mirrors `isTemporaryFailure`. */
-  def isTemporary(e: Throwable): Boolean = e match {
-    case _: IOException | _: TimeoutException => true
-    case _ => false
+    * error value, bound for the DLQ. Mirrors `isTemporaryFailure`.
+    * A failure is temporary when it or any throwable in its cause
+    * chain is: a task-side sink failure reaches the driver as a
+    * `SparkException` whose cause chain holds the `IOException`. A
+    * chain that loops back on itself ends the walk. */
+  def isTemporary(e: Throwable): Boolean = {
+    val seen = scala.collection.mutable.Set.empty[Throwable]
+    Iterator.iterate(e)(_.getCause).takeWhile(t => t != null && seen.add(t))
+      .exists(t => t.isInstanceOf[IOException] || t.isInstanceOf[TimeoutException])
   }
 
   /** E4: calls `f` up to `times` times while it fails temporarily;

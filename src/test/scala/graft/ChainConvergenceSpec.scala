@@ -7,15 +7,14 @@ import graft.operators.DedupOps
   * The round-10 verdict's adversarial shape: a crawl of incremental
   * page edits forms a near-dup CHAIN — each adjacent pair shares one
   * LSH bucket, nothing else — so the bucket graph has diameter ≈ n
-  * and the neighbor-min-only loop needs ≥ n/2 rounds of
-  * full-membership shuffles (2 propagation steps per round, horizon
-  * +2 per round). The pointer-jumping shortcut added in round 11
-  * (`comp ← comp(comp)` after each double-step) roughly doubles the
-  * label-pointer horizon per round, so the same chain converges in
-  * O(log n) rounds. ComponentsSpec pins CORRECTNESS on chains; this
-  * spec pins the ROUND BOUND, via the counted loop seam — if a
-  * refactor ever drops the jump step, a 65-link chain jumps from ~7
-  * rounds back to 32+ and this test fails loudly. */
+  * and a neighbor-min-only loop needs ≥ n/2 rounds. The
+  * pointer-jumping shortcut (`lbl(i) ← lbl(lbl(i))` after each
+  * neighbor step) roughly doubles the label-pointer horizon per round,
+  * so the same chain converges in O(log n) rounds. ComponentsSpec
+  * pins CORRECTNESS on chains; this spec pins the ROUND BOUND, via
+  * the counted loop seam — if a refactor ever drops the jump step, a
+  * 65-link chain jumps from ~7 rounds back to 32+ and this test fails
+  * loudly. */
 class ChainConvergenceSpec extends SparkSpec {
 
   /** Chain membership: bucket i (band 0) holds exactly {i, i+1} —

@@ -15,25 +15,25 @@ import graft.operators.{EventOps, SimilarityOps}
   * loss mid-PageRank must be recoverable by re-reading checkpoint
   * files rather than killing the job. Both modes materialize eagerly
   * and truncate lineage identically, so results are bit-identical by
-  * construction; this spec pins that on the four iterative gate
+  * construction; this spec pins that on the iterative and index gate
   * queries, and pins the file-layout contract (exactly one
   * checkpoint RDD directory per cut) that makes reliable mode
   * auditable. */
 class CheckpointingSpec extends SparkSpec {
   import CheckpointingSpec._
 
-  /** The iterative family: PageRank, TrustRank, CC, the delta-CC +
-    * index-merge path (the delta query exercises the merge caches
-    * too), HITS, k-core, Lloyd's k-means and PCA power iteration —
-    * every loop that runs in [[Checkpointing.fixpoint]] (CC, k-core,
-    * k-means), plus the driver rounds of PageRank, TrustRank, HITS and
-    * PCA, which cut only their static relations. Then one consumer of
-    * each index cut in [[operators.IndexCache]] (LSH buckets, ANN
-    * index, PQ codes, perceptual index, label centroids) and of the
-    * merged chunk store, whose entry reads the chunk store's leaf. */
+  /** The iterative family: every loop that runs in
+    * [[Checkpointing.driverRounds]] — PageRank, TrustRank, HITS, PCA
+    * power iteration, k-core, Lloyd's k-means and connected components
+    * through each of their callers (lexical, delta + index-merge path,
+    * semantic) — which cut their static relations, and Lloyd's cut of
+    * each round's centroids. Then one consumer of each index cut in
+    * [[operators.IndexCache]] (LSH buckets, ANN index, PQ codes,
+    * perceptual index, label centroids) and of the merged chunk store,
+    * whose entry reads the chunk store's leaf. */
   private val IterativeGates = Seq(
     "ev_user_pagerank", "ev_user_trustrank",
-    "dedup_components", "dedup_components_delta",
+    "dedup_components", "dedup_components_delta", "emb_components",
     "ev_user_hits", "ev_user_kcore", "kmeans_stability",
     "emb_principal_dir",
     "dedup_lsh_pairs", "ann_ivf", "emb_pq_encode", "mm_near_dup",
@@ -129,6 +129,66 @@ class CheckpointingSpec extends SparkSpec {
       spark.conf.unset(Checkpointing.DirKey)
       deleteTree(dir)
     }
+  }
+
+  test("reliable mode: each round that cuts writes one rdd dir, init none") {
+    // the shape of Lloyd's k-means: each driverRounds step cuts the new
+    // state and releases the one it supersedes
+    val dir = tmpDir("graft-ckpt-rounds")
+    spark.conf.set(Checkpointing.DirKey, dir)
+    try {
+      val init = spark.range(1, 4).toDF("x")
+      val (out, rounds) = Checkpointing.driverRounds("spec-reliable", init,
+          3) { d =>
+        val next = Checkpointing.cut(d.selectExpr("x * 2 as x"))
+        if (d ne init) Checkpointing.release(d)
+        Some(next)
+      }
+      assert(rounds == 3)
+      assert(out.collect().map(_.getLong(0)).sorted.toSeq ==
+        Seq(8L, 16L, 24L))
+      assert(rddDirsUnder(dir).size == 3,
+        s"3 rounds must write 3 rdd-* dirs, saw ${rddDirsUnder(dir)}")
+      Checkpointing.release(out)
+    } finally {
+      spark.conf.unset(Checkpointing.DirKey)
+      deleteTree(dir)
+    }
+  }
+
+  test("releasing a local cut logs no lineage-truncation WARN") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    assert(spark.conf.get(Checkpointing.DirKey, "").isEmpty,
+      "the run must cut with localCheckpoint")
+    assert(LogManager.getLogger("org.apache.spark.rdd.MapPartitionsRDD")
+      .isEnabled(Level.WARN), "WARN must reach the capture")
+    val a = Checkpointing.cut(spark.range(0, 10).toDF("x"))
+    val b = Checkpointing.cut(a.selectExpr("x + 1 as x"))
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("release-warn-capture", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) {
+          warns.add(e.getMessage.getFormattedMessage); ()
+        }
+    }
+    capture.start()
+    val root = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      .getRootLogger
+    root.addAppender(capture)
+    try Checkpointing.release(a)
+    finally {
+      root.removeAppender(capture)
+      capture.stop()
+    }
+    val truncation =
+      warns.asScala.filter(_.contains("was locally checkpointed"))
+    assert(truncation.isEmpty, s"release logged: $truncation")
+    assert(b.collect().map(_.getLong(0)).sorted.toSeq == (1L to 10L))
+    Checkpointing.release(b)
   }
 
   test("default mode (conf unset) stays executor-local: no files, " +

@@ -10,13 +10,16 @@ import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.operators.SimilarityOps
+import graft.operators.{DedupOps, EventOps, SimilarityOps}
 
-/** The driver-round seam of [[Checkpointing]]: a [[Checkpointing.vectorRound]]
-  * is one shuffle-free job whatever its fold, PCA runs one such job per
-  * power round, a [[Checkpointing.sortedFrame]] comes back in the order
-  * `orderBy` gives, and the six queries built on the seam keep their
-  * output schemas and presentation order with no Sort in their plans. */
+/** The iteration seam of [[Checkpointing]]: [[Checkpointing.driverRounds]]
+  * stops on `None` or at its cap and reports its rounds, a
+  * [[Checkpointing.vectorRound]] is one shuffle-free job whatever its
+  * fold and combine, PCA, k-core and component propagation run one
+  * such job per round, a [[Checkpointing.sortedFrame]] comes back in
+  * the order `orderBy` gives, and the six queries built on the seam
+  * keep their output schemas and presentation order with no Sort in
+  * their plans. */
 class DriverRoundsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -61,7 +64,7 @@ class DriverRoundsSpec extends SparkSpec {
         .iterator.map { case (k, m) => (k.toInt, m) }
     var got = Array.empty[Long]
     val jobs = jobsOf {
-      got = Checkpointing.vectorRound(rel, vec, keys)(maxFold)
+      got = Checkpointing.vectorRound(rel, vec, keys, Math.addExact)(maxFold)
     }
     val want = rows.groupMapReduce(_._1)(r => vec(r._2.toInt) * r._3)(math.max)
     assert(got.toSeq == (0 until keys).map(k => want.getOrElse(k.toLong, 0L)))
@@ -74,11 +77,105 @@ class DriverRoundsSpec extends SparkSpec {
       Seq((0L, 0L, Long.MaxValue), (0L, 0L, 1L)).toDF("k", "f", "x")
         .repartition(2))
     val e = intercept[ArithmeticException] {
-      Checkpointing.vectorRound(rel, Array(1L), 1) { (_, part) =>
+      Checkpointing.vectorRound(rel, Array(1L), 1, Math.addExact) { (_, part) =>
         part.map(r => (r._1.toInt, r._3))
       }
     }
     assert(e.getMessage.contains("overflow"))
+  }
+
+  test("vectorRound with a min combine equals a plain-Scala " +
+      "recomputation, in one job of one stage") {
+    val rnd = new scala.util.Random(11)
+    val rows = Seq.fill(200)(
+      (rnd.nextInt(10).toLong, rnd.nextInt(6).toLong, rnd.nextInt(21) - 10L))
+    val vec = Array.tabulate(6)(i => 5L - 2L * i)
+    // keys 10 and 11 have no row, so they must come back as 0
+    val keys = 12
+    // partitioned on f, so a key's partials come from several
+    // partitions and the driver's min merges them
+    val rel = Checkpointing.roundRelation[(Long, Long, Long)](
+      rows.toDF("k", "f", "x").repartition(4, col("f")))
+    var got = Array.empty[Long]
+    val jobs = jobsOf {
+      got = Checkpointing.vectorRound(rel, vec, keys, math.min) { (v, part) =>
+        part.map(r => (r._1.toInt, v(r._2.toInt) * r._3))
+      }
+    }
+    val want = rows.groupMapReduce(_._1)(r => vec(r._2.toInt) * r._3)(math.min)
+    assert(got.toSeq == (0 until keys).map(k => want.getOrElse(k.toLong, 0L)))
+    assert(jobs.size == 1, s"${jobs.size} jobs")
+    jobs.foreach(assertNarrow)
+  }
+
+  test("driverRounds stops when the step returns None or at its cap") {
+    assert(Checkpointing.driverRounds("spec-stop", 0, Int.MaxValue)(
+      i => Option.when(i < 4)(i + 1)) == ((4, 4)))
+    assert(Checkpointing.driverRounds("spec-cap", 0, 3)(
+      i => Some(i + 1)) == ((3, 3)))
+  }
+
+  test("a zero-round run returns init") {
+    val init = Array(1L, 2L)
+    val (a, ra) = Checkpointing.driverRounds("spec-none", init,
+      Int.MaxValue)(_ => None)
+    assert((a eq init) && ra == 0)
+    val (b, rb) = Checkpointing.driverRounds("spec-zero", init, 0)(
+      v => Some(v.map(_ + 1)))
+    assert((b eq init) && rb == 0)
+  }
+
+  test("each run writes one JSON line with its name and round count") {
+    val buf = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    try Checkpointing.driverRounds("spec-line", 0, 2)(i => Some(i + 1))
+    finally System.setErr(saved)
+    val line = buf.toString("UTF-8").linesIterator
+      .find(_.startsWith("""{"fixpoint":"spec-line""""))
+    assert(line.exists(_.matches("""\{"fixpoint":"spec-line","rounds":2,"ms":\d+\}""")),
+      s"stderr line: $line")
+  }
+
+  test("kcoreOf runs one narrow job per peel round beyond its static " +
+      "setup") {
+    val clique = for (a <- 1L to 5L; b <- (a + 1) to 5L) yield (a, b)
+    // 7 hangs off 6 alone and peels in round 1; 6 then keeps 2 of its
+    // 3 edges and peels in round 2; round 3's peel set is empty
+    val cascade = Seq((1L, 6L), (2L, 6L), (6L, 7L))
+    val static = jobsOf(EventOps.kcoreOf(clique.toDF("u", "v")).collect())
+    var core = Set.empty[Long]
+    val full = jobsOf {
+      core = EventOps.kcoreOf((clique ++ cascade).toDF("u", "v")).collect()
+        .map(_.getAs[Long]("node")).toSet
+    }
+    assert(core == (1L to 5L).toSet)
+    assert(full.size == static.size + 2,
+      s"static setup ${static.size} jobs, full run ${full.size}")
+    full.takeRight(2).foreach(assertNarrow)
+  }
+
+  test("propagateMinLabels runs one narrow job per round beyond its " +
+      "static setup") {
+    def chain(links: Int) = (0 until links).flatMap(i =>
+        Seq((i.toLong, 0L, i.toLong), (i.toLong + 1, 0L, i.toLong)))
+      .toDF("doc_id", "band", "bucket")
+    def run(links: Int): (Seq[SparkListenerJobStart], Int) = {
+      var rounds = 0
+      val jobs = jobsOf {
+        val (labels, r) = DedupOps.propagateMinLabelsCounted(chain(links))
+        labels.collect()
+        rounds = r
+      }
+      (jobs, rounds)
+    }
+    val (short, shortRounds) = run(1)
+    val (long, longRounds) = run(40)
+    assert(longRounds > shortRounds)
+    assert(long.size - longRounds == short.size - shortRounds,
+      s"$shortRounds rounds ran ${short.size} jobs, $longRounds rounds " +
+        s"ran ${long.size}")
+    long.takeRight(longRounds).foreach(assertNarrow)
   }
 
   test("sortedFrame is in the order orderBy gives: nulls first, " +

@@ -213,14 +213,44 @@ class PipelineSpec extends SparkSpec {
     assert(dlqIds == Seq(7L))
     assert((okIds ++ dlqIds).sorted == ids, "ok ⊎ dlq must equal the input")
   }
+
+  test("a task-side temporary sink failure is retried within the batch") {
+    val in = tmpDir("rt-in"); val ok = tmpDir("rt-ok")
+    val dlq = tmpDir("rt-dlq"); val cp = tmpDir("rt-cp")
+    val ids = 0L until 10L
+    ids.map(i => (i, s"Input Data: $i")).toDF("id", "value")
+      .write.mode("overwrite").parquet(in)
+    // the ok route writes through a file system whose first task-side
+    // create of a part file throws a temporary IOException, which
+    // reaches the driver inside the job's SparkException
+    val hadoop = spark.sparkContext.hadoopConfiguration
+    hadoop.set(s"fs.${FlakyLocalFs.Scheme}.impl", classOf[FlakyLocalFs].getName)
+    hadoop.setBoolean(s"fs.${FlakyLocalFs.Scheme}.impl.disable.cache", true)
+    FlakyLocalFs.thrown.set(0)
+    FlakyLocalFs.armedCreate.set(true)
+    val q = EnrichmentPipeline.start(
+      spark.readStream.schema("id LONG, value STRING").parquet(in),
+      s"${FlakyLocalFs.Scheme}:$ok", dlq, cp, svc)
+    q.awaitTermination()
+    assert(FlakyLocalFs.thrown.get == 1, "the ok part file never failed")
+    assert(q.lastProgress.batchId == 0L && q.lastProgress.numInputRows == 10L)
+    assert(new java.io.File(s"$cp/commits/0").exists, "batch 0 not committed")
+    val okIds = spark.read.parquet(ok).select("id").as[Long].collect().toSeq
+    val dlqIds = spark.read.parquet(dlq).select("id").as[Long].collect().toSeq
+    assert((okIds ++ dlqIds).sorted == ids,
+      "every input row must be in exactly one sink")
+  }
 }
 
 /** The local file system under its own scheme, failing once when
   * [[FlakyLocalFs.armed]]: the first driver-side `exists` or
   * `getFileStatus` of a `batchId=0` directory throws a temporary
-  * `IOException`, as a flaky sink store would. */
+  * `IOException`, as a flaky sink store would. When
+  * [[FlakyLocalFs.armedCreate]], the first task-side `create` of a
+  * part file throws one instead. */
 class FlakyLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   import org.apache.hadoop.fs.{FileStatus, Path}
+  import org.apache.hadoop.fs.permission.FsPermission
   override def getScheme: String = FlakyLocalFs.Scheme
   override def getUri: java.net.URI = java.net.URI.create(s"$getScheme:///")
   private def look(f: Path): Unit =
@@ -231,11 +261,23 @@ class FlakyLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
     }
   override def exists(f: Path): Boolean = { look(f); super.exists(f) }
   override def getFileStatus(f: Path): FileStatus = { look(f); super.getFileStatus(f) }
+  // every create of this file system opens its file here
+  override protected def createOutputStreamWithMode(f: Path,
+      append: Boolean, p: FsPermission): java.io.OutputStream = {
+    if (f.getName.startsWith("part-") &&
+        org.apache.spark.TaskContext.get() != null &&
+        FlakyLocalFs.armedCreate.compareAndSet(true, false)) {
+      FlakyLocalFs.thrown.incrementAndGet()
+      throw new IOException(s"sink store unavailable: $f")
+    }
+    super.createOutputStreamWithMode(f, append, p)
+  }
 }
 
 object FlakyLocalFs {
   val Scheme = "flakyfs"
   val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+  val armedCreate = new java.util.concurrent.atomic.AtomicBoolean(false)
   val thrown = new java.util.concurrent.atomic.AtomicInteger(0)
 }
 
